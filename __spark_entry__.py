@@ -655,11 +655,11 @@ def q_codec_sorted_read(spark, sf):
     Parquet/MergeSorter.cs:83 iterate + k-way SortedMerge pre-sorted runs)
     as a Spark plan with NO total sort: key ranges cut from chunk zone
     maps (driver metadata), chunks broadcast-assigned to ranges, decode
-    + exact bounds, ONE hash shuffle on range_id, local sorts. The
-    ``is_sorted`` flag pins the order contract inside the query: zero
-    physical-order violations (monotonically_increasing_id preserves
-    physical row order within a partition) AND ranges tile the key
-    space. Oracle: the same per-lang aggregate over raw documents with
+    + exact bounds, ONE direct-placement shuffle on range_id, local
+    sorts. The ``is_sorted`` flag pins the order contract inside the
+    query: zero physical-order violations (monotonically_increasing_id
+    preserves physical row order within a partition) AND ranges tile
+    the key space. Oracle: the same per-lang aggregate over raw documents with
     the flag literal — the sorted read must lose/dup nothing."""
     from pyspark.sql import Window
 
@@ -737,11 +737,11 @@ def q_codec_compaction(spark, sf):
 
 def q_codec_staged_encode(spark, sf):
     """GENERIC-INPUT encode route end-to-end (encoder.encode_staged,
-    default pruned-range plan): documents arrive as an arbitrary
-    unsorted DataFrame, phase 1 range-spills them sorted by
-    (lang, doc_id) — cut points planned from a column-pruned key
-    sample, rows routed by the binary-search/hash-preimage exchange,
-    so payload bytes are scanned ONCE — phase 2 encodes the spill via
+    pruned-range plan): documents arrive as an arbitrary unsorted
+    DataFrame, phase 1 range-spills them sorted by (lang, doc_id) — cut
+    points planned from a column-pruned key sample, rows placed by a
+    binary-search range id through repartitionById, so payload bytes
+    are scanned ONCE — phase 2 encodes the spill via
     the direct-scan path. Decode + per-lang aggregate must equal the
     raw table (staging is invisible to readers); ``staged_multifile``
     pins that phase 1 really produced a multi-file sorted spill (the

@@ -462,27 +462,15 @@ def sorted_read_probe(src_path: str, work: str, cores: int = None) -> dict:
 
 def decode_probe(src_path: str, work: str, cores: int = None,
                  reps: int = 2) -> dict:
-    """Decode throughput, measured (the number beside round 5's claim):
-    the r5 rewrite moved both decode paths to Arrow-native
-    ``applyInArrow`` on the claim that pandas object conversion on
-    decoded strings was the single largest decode cost, but no bench
-    row quantified it. Both legs here run the IDENTICAL per-chunk
-    kernels over the same materialized chunk store and differ ONLY in
-    the executor boundary:
-
-    * ``arrow``  — ``decode_chunks`` as shipped (blobs arrive and
-      decoded columns leave as Arrow);
-    * ``pandas`` — ``decode_chunks(_pandas_boundary=True)``: the
-      pre-r5 shape (blobs arrive as a pandas frame, the decoded table
-      leaves through ``.to_pandas()``).
-
-    The timed job is decode → full-materialization aggregate
-    (``count(*)`` + ``sum(length(content))``): every decoded row
-    crosses the boundary, no parquet writer billed to the decode
-    number. Legs interleave, best-of-``reps`` per leg (min-of-N — the
-    same one-sided-noise rule every other row uses). GB/s = decoded
-    content bytes (the chunk frame's own ``raw_bytes`` for the content
-    column) / best elapsed."""
+    """Decode throughput of the shipped Arrow-native ``decode_chunks``
+    (blobs arrive and decoded columns leave as Arrow) over a
+    materialized chunk store. The timed job is decode →
+    full-materialization aggregate (``count(*)`` +
+    ``sum(length(content))``): every decoded row crosses the boundary,
+    no parquet writer billed to the decode number. Best-of-``reps``
+    (min-of-N — the same one-sided-noise rule every other row uses).
+    GB/s = decoded content bytes (the chunk frame's own ``raw_bytes``
+    for the content column) / best elapsed."""
     import glob
 
     from parquet_producers_spark.encoder import decode_chunks, encode_files
@@ -505,33 +493,23 @@ def decode_probe(src_path: str, work: str, cores: int = None,
             "sum(case when col_idx = 0 then n_rows end) AS n").first()
         content_bytes, n_rows = int(head["c"]), int(head["n"])
 
-        def run(pandas_boundary: bool) -> float:
+        def run() -> float:
             t0 = time.monotonic()
-            decode_chunks(
-                chunks, _pandas_boundary=pandas_boundary
-            ).selectExpr("count(*)", "sum(length(content))").collect()
+            decode_chunks(chunks).selectExpr(
+                "count(*)", "sum(length(content))").collect()
             return time.monotonic() - t0
 
-        # untimed warm-up of both python-worker paths over a few WHOLE
+        # untimed warm-up of the python-worker path over a few WHOLE
         # chunk groups (an arbitrary row limit could split a group and
         # hand the decoder a column-incomplete chunk)
-        warm = chunks.where("part_id = 0 AND chunk_seq < 2")
-        for pb in (False, True):
-            decode_chunks(warm, _pandas_boundary=pb).count()
-        arrow_runs, pandas_runs = [], []
-        for _ in range(reps):
-            arrow_runs.append(run(False))
-            pandas_runs.append(run(True))
-        arrow_s, pandas_s = min(arrow_runs), min(pandas_runs)
+        decode_chunks(chunks.where("part_id = 0 AND chunk_seq < 2")).count()
+        arrow_s = min(run() for _ in range(reps))
         return {
             "cores": cores,
             "rows": n_rows,
             "content_bytes": content_bytes,
             "arrow_s": round(arrow_s, 3),
-            "pandas_s": round(pandas_s, 3),
             "arrow_gbps": round(content_bytes / arrow_s / 1e9, 4),
-            "pandas_gbps": round(content_bytes / pandas_s / 1e9, 4),
-            "speedup": round(pandas_s / arrow_s, 2) if arrow_s else 0.0,
         }
     finally:
         spark.stop()
@@ -1034,7 +1012,6 @@ def _append_history(result: dict) -> list[dict]:
             enc["modes"]["cascade"]["compressed_ratio_vs_parquet"],
         "decode_arrow_gbps":
             (enc.get("decode") or {}).get("arrow_gbps"),
-        "decode_win": (enc.get("decode") or {}).get("speedup"),
     }
     os.makedirs("BENCH", exist_ok=True)
     path = "BENCH/HISTORY.jsonl"
@@ -1270,7 +1247,7 @@ def _write_bench_md(result: dict) -> None:
             "| path | elapsed s |",
             "|---|---|",
             "| sorted-merge read (sortedread.py: ranges from chunk"
-            " zone maps, one hash shuffle, local sorts) |"
+            " zone maps, one direct-placement shuffle, local sorts) |"
             f" {sr['merge_read_s']} |",
             "| total sort (decode_chunks(ordered=True): orderBy ="
             " sampling pass + range shuffle + global sort) |"
@@ -1285,27 +1262,17 @@ def _write_bench_md(result: dict) -> None:
     dc = enc.get("decode")
     if dc:
         lines += [
-            "## Decode throughput: Arrow-native boundary vs the"
-            " pre-r5 pandas boundary, measured",
+            "## Decode throughput (Arrow-native boundary)",
             "",
             f"Decode the {dc['rows']}-row chunk store"
             f" ({dc['content_bytes'] / 1e6:.0f} MB of content) through"
             " a full-materialization aggregate at"
-            f" local[{dc['cores']}]; both legs run the identical"
-            " per-chunk kernels and differ only in how rows cross the"
-            " executor boundary (interleaved, best-of-N per leg):",
+            f" local[{dc['cores']}] (best-of-N):",
             "",
             "| boundary | elapsed s | content GB/s |",
             "|---|---|---|",
-            "| applyInArrow (shipped: blobs in, Arrow out) |"
+            "| applyInArrow (blobs in, Arrow out) |"
             f" {dc['arrow_s']} | {dc['arrow_gbps']} |",
-            "| applyInPandas (pre-r5: pandas in, .to_pandas() out) |"
-            f" {dc['pandas_s']} | {dc['pandas_gbps']} |",
-            "",
-            f"- Arrow-native decode win: **{dc['speedup']}×** — the"
-            " measured number behind round 5's 'pandas conversion was"
-            " the largest decode cost' claim (encoder.py:514,"
-            " sortedread.py:313).",
             "",
         ]
     lines += [

@@ -24,6 +24,7 @@ sort key admits ties, so output bytes do not vary with partition count
 from __future__ import annotations
 
 import json
+import logging
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -32,6 +33,8 @@ from pyspark.sql import DataFrame
 
 from .codecs import column_stats, decode_array
 from .codecs.select import encode_auto
+
+_log = logging.getLogger("parquet_producers_spark")
 
 CHUNK_ROWS = 65536
 
@@ -470,8 +473,7 @@ def encode_files(
     return fdf.mapInArrow(enc, schema=CHUNK_SPARK_SCHEMA)
 
 
-def decode_chunks(chunks: DataFrame, ordered: bool = False,
-                  _pandas_boundary: bool = False) -> DataFrame:
+def decode_chunks(chunks: DataFrame, ordered: bool = False) -> DataFrame:
     """Inverse of :func:`encode_partitions`: chunk table → original rows.
 
     Chunks are decoded group-wise; all columns of one chunk travel
@@ -480,14 +482,6 @@ def decode_chunks(chunks: DataFrame, ordered: bool = False,
     SORT of the decoded output and therefore the expensive path at scale;
     it defaults off. Consumers that need at-rest order re-sort by their
     own key (as compaction already does, compaction.py:69-74).
-
-    ``_pandas_boundary`` is a MEASUREMENT COMPARATOR, not a supported
-    path: it runs the identical per-chunk kernels but crosses the
-    executor boundary via ``applyInPandas`` (blobs arrive as a pandas
-    frame, the decoded Arrow table leaves through ``.to_pandas()``) —
-    the pre-Arrow-native shape this function had before the
-    ``applyInArrow`` rewrite. ``bench.py``'s decode probe times both
-    to put a number on that rewrite's win; nothing else should set it.
     """
     from pyspark.sql import functions as F
 
@@ -548,16 +542,7 @@ def decode_chunks(chunks: DataFrame, ordered: bool = False,
         tbl = pa.table(cols, schema=out_schema)
         return tbl if out_schema == out_emit else tbl.cast(out_emit)
 
-    if _pandas_boundary:
-        def dec_pd(key, pdf):
-            tin = pa.Table.from_pandas(pdf, preserve_index=False)
-            return dec(key, tin).to_pandas()
-
-        out = chunks.groupBy(*group_cols).applyInPandas(
-            dec_pd, schema=spark_schema)
-    else:
-        out = chunks.groupBy(*group_cols).applyInArrow(
-            dec, schema=spark_schema)
+    out = chunks.groupBy(*group_cols).applyInArrow(dec, schema=spark_schema)
     if ordered:
         out = out.orderBy("__ord")
     return out.drop("__ord")
@@ -766,7 +751,6 @@ def encode_staged(
     sort_cols: list[str],
     partitions: int | None = None,
     key_col: str | None = None,
-    range_plan: str = "pruned",
     **encode_kw,
 ) -> DataFrame:
     """Two-phase encode for ARBITRARY (unsorted) input at scale: phase 1
@@ -798,35 +782,24 @@ def encode_staged(
     balancing margin and also bounds per-task memory at cluster
     scale.
 
-    Range planning (``range_plan``): ``"pruned"`` (default) computes
-    the cut points on a COLUMN-PRUNED key sample and routes rows with a
-    binary-search expression — ``repartitionByRange`` on the full frame
-    runs its range-sampling job against the exchange's child plan, i.e.
-    a SECOND full scan including every payload byte; at 100 TB with a
-    fat ``content`` column that doubles the read cost of the generic
-    route. The pruned plan scans payload ONCE (the shuffle itself).
-    Measured on the bench corpus (3.6M rows, content-heavy): phase 1+2
-    total 34.9→29.2 s at 8 cores, 80.9→74.0 s at 2 cores — the win
-    grows with data size because the avoided cost is the payload
-    re-scan, while the added cost is one small fixed planning job
-    (~0.5-1 s: sample cuts + collect), which is also why the classic
-    plan stays slightly ahead below ~1M rows. ``"spark"`` keeps the
-    classic repartitionByRange. The pruned plan holds at ANY partition
-    count: cuts and reducer preimages ship as one broadcast single-row
-    frame and routing is an unrolled O(log n) binary search over the
-    attached arrays — no per-cut literals in the plan (the pre-r7 CASE
-    tree grew O(n) nodes and silently reverted to the
-    double-payload-scan classic plan above 4,096 partitions, exactly
-    at cluster scale)."""
+    Range planning: the cut points come from a COLUMN-PRUNED key sample
+    and rows are routed with a binary-search expression —
+    ``repartitionByRange`` on the full frame runs its range-sampling
+    job against the exchange's child plan, i.e. a SECOND full scan
+    including every payload byte; at 100 TB with a fat ``content``
+    column that doubles the read cost of the generic route. The pruned
+    plan scans payload ONCE (the shuffle itself). Measured on the bench
+    corpus (3.6M rows, content-heavy): phase 1+2 total 34.9→29.2 s at
+    8 cores, 80.9→74.0 s at 2 cores — the win grows with data size
+    because the avoided cost is the payload re-scan, while the added
+    cost is one small fixed planning job (~0.5-1 s: sample cuts +
+    collect). It holds at ANY partition count: the cuts ship as one
+    broadcast single-row frame and routing is an unrolled O(log n)
+    binary search over the attached array — no per-cut literals, so
+    the plan stays O(log n) nodes however many partitions a cluster
+    asks for."""
     n = partitions or spark.sparkContext.defaultParallelism * 4
-    if range_plan == "pruned":
-        _spill_range_pruned(spark, df, spill_dir, sort_cols, n)
-    else:
-        (
-            df.repartitionByRange(n, *sort_cols)
-            .sortWithinPartitions(*sort_cols)
-            .write.mode("overwrite").parquet(spill_dir)
-        )
+    _spill_range_pruned(spark, df, spill_dir, sort_cols, n)
     # manifest-free listing is fine here: the spill dir is private to
     # this call (Spark's _SUCCESS marks it complete)
     files = [f.path for f in _list_parquet(spark, spill_dir)]
@@ -839,19 +812,19 @@ def _spill_range_pruned(spark, df, spill_dir: str,
     """Range-partitioned sorted spill that scans payload bytes ONCE.
 
     ``df.repartitionByRange`` plans its cut points with a sampling job
-    over the exchange's child — full rows, payload included — so the
-    classic phase 1 reads the whole table twice. Here the cuts come
+    over the exchange's child — full rows, payload included — so a
+    spill through it reads the whole table twice. Here the cuts come
     from ``df.select(sort_cols)``: the sampler and the key shuffle both
-    run against a scan column-pruned to the sort key, then rows are
-    routed with an O(log n) binary-search expression over the cut
-    literals and ``repartition(n, route)`` — where ``route`` holds, per
-    range id, a precomputed integer whose Murmur3 hash lands EXACTLY on
-    that reducer (``_reducer_preimages``), i.e. hash partitioning
-    inverted into range partitioning. Output contract is identical to
-    the classic plan: ranges are contiguous and non-overlapping across
-    spill files, rows sorted within each file, nulls first (struct
-    comparison orders a null field smallest, matching
-    ``asc_nulls_first`` — verified in tests, not assumed).
+    run against a scan column-pruned to the sort key, then each row's
+    range id comes from an O(log n) binary search over the cuts and
+    ``repartitionById`` places range i on reducer i. Direct placement
+    gives every range its own task, and the explicit repartition is
+    not AQE-coalesced, so spill files map one-to-one onto ranges.
+    Output contract is identical to ``repartitionByRange``: ranges are
+    contiguous and non-overlapping across spill files, rows sorted
+    within each file, nulls first (struct comparison orders a null
+    field smallest, matching ``asc_nulls_first`` — verified in tests,
+    not assumed).
     """
     from pyspark.sql import functions as F
 
@@ -868,74 +841,63 @@ def _spill_range_pruned(spark, df, spill_dir: str,
         .repartitionByRange(n, *sort_cols)
         .select(F.spark_partition_id().alias("__pid"),
                 key_struct.alias("__k"))
-        .groupBy("__pid").agg(F.max("__k").alias("mx"))
+        .groupBy("__pid").agg(F.max("__k").alias("mx"),
+                              F.count("*").alias("n"))
         .orderBy("__pid")
         .collect()  # ≤ n tiny rows — the same O(R) the planner collects
     )
-    # empty or tiny input (sample came back empty): a single sorted
-    # partition; the spill dir must still exist (with _SUCCESS) for
-    # phase 2's listing
-    if not cut_rows:
-        df.repartition(1).sortWithinPartitions(*sort_cols) \
-            .write.mode("overwrite").parquet(spill_dir)
-        return
-    routed, npart = _pruned_range_routed(spark, df, sort_cols, cut_rows)
-    if routed is None:
+    if len(cut_rows) < 2:
+        # the sample came back empty (tiny input) or as one range (one
+        # key, or n == 1): the whole input goes through ONE task. The
+        # spill dir must still exist (with _SUCCESS) for phase 2's
+        # listing.
+        _log.warning(
+            "encode_staged: single-partition spill (%d sampled key "
+            "rows, %d partitions requested)",
+            sum(r["n"] for r in cut_rows), n)
         df.repartition(1).sortWithinPartitions(*sort_cols) \
             .write.mode("overwrite").parquet(spill_dir)
         return
     (
-        routed
-        .repartition(npart, "__route")
-        .drop("__route")
+        _pruned_range_routed(spark, df, sort_cols, cut_rows)
+        .repartitionById(len(cut_rows), "__range_id")
+        .drop("__range_id")
         .sortWithinPartitions(*sort_cols)
         .write.mode("overwrite").parquet(spill_dir)
     )
 
 
 def _pruned_range_routed(spark, df, sort_cols: list[str], cut_rows):
-    """Attach a ``__route`` reducer column to ``df`` for the pruned
-    range spill, valid at ANY partition count (the pre-r7 shape
-    embedded every cut as a struct literal inside a full binary CASE
-    tree — an O(n)-node plan that forced a silent fallback to the
-    double-payload-scan classic route above 4,096 partitions, i.e.
-    exactly at cluster scale). The cut list and the Murmur3
-    reducer-preimage table ship as ONE broadcast single-row frame
-    (Arrow-serialized — no per-literal driver cost either), attach to
-    the payload via a 1-row broadcast join, and the range id comes
-    from an UNROLLED binary search: ceil(log2(n)) chained projections
-    whose per-step state (__lo/__hi) lives in columns, each step one
-    array access + one struct compare. Plan size is O(log n), row cost
-    O(log n) — no cliff, and the payload is still scanned exactly once
-    (plan-asserted in tests at 32,768 partitions). F.get (0-based,
-    null-on-invalid) rather than element_at keeps ANSI mode safe; the
-    struct <= compares nulls-smallest exactly like the old CASE tree
-    (pinned by the null-key leg of the plan-contract test).
+    """Attach an int ``__range_id`` column to ``df`` for the pruned
+    range spill, valid at ANY partition count (embedding every cut as
+    a literal would grow the plan O(n) nodes). The cut list ships as
+    ONE broadcast single-row frame (Arrow-serialized — no per-literal
+    driver cost either), attaches to the payload via a 1-row broadcast
+    join, and the range id comes from an UNROLLED binary search:
+    ceil(log2(n)) chained projections whose per-step state (__lo/__hi)
+    lives in columns, each step one array access + one struct compare.
+    Plan size is O(log n), row cost O(log n) — no cliff, and the
+    payload is still scanned exactly once (plan-asserted in tests at
+    32,768 partitions). F.get (0-based, null-on-invalid) rather than
+    element_at keeps ANSI mode safe; the struct <= compares
+    nulls-smallest (pinned by the null-key leg of the spill-contract
+    test).
 
-    Returns ``(routed_df, npart)`` — routed_df carries ``df``'s columns
-    plus ``__route`` only (broadcast arrays and search state are
-    projected away so nothing but payload + route can cross the
-    exchange) — or ``(None, 1)`` for the degenerate single-range case.
+    ``cut_rows`` holds ≥ 2 per-range maxima (the last is open-ended).
+    The result carries ``df``'s columns plus ``__range_id`` only
+    (broadcast array and search state are projected away so nothing
+    but payload + range id can cross the exchange).
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, IntegerType, StructType
+    from pyspark.sql.types import ArrayType, StructType
 
     bounds_data = [tuple(r["mx"]) for r in cut_rows[:-1]]  # last open-ended
-    npart = len(bounds_data) + 1
-    if npart == 1:
-        return None, 1
     key_struct = F.struct(*sort_cols)
     key_struct_t = StructType([
         f for c in sort_cols for f in df.schema.fields if f.name == c])
-    one_schema = StructType() \
-        .add("__bounds", ArrayType(key_struct_t)) \
-        .add("__routes", ArrayType(IntegerType()))
-    # int() pinned: the preimages were searched under hashInt, and
-    # Spark's hashLong is a DIFFERENT function — a long route column
-    # would scramble the routing silently
     one = spark.createDataFrame(
-        [(bounds_data, [int(j) for j in _reducer_preimages(npart)])],
-        one_schema)
+        [(bounds_data,)],
+        StructType().add("__bounds", ArrayType(key_struct_t)))
     m = len(bounds_data)
     routed = (
         df.join(F.broadcast(one))
@@ -959,53 +921,7 @@ def _pruned_range_routed(spark, df, sort_cols: list[str], cut_rows):
                                        F.col("__mid") + 1)
                         .otherwise(F.col("__lo")))
         )
-    routed = (
-        routed
-        .withColumn("__route", F.get(F.col("__routes"), F.col("__lo")))
-        .select(*df.columns, "__route")
-    )
-    return routed, npart
-
-
-def _murmur3_int32(x: int, seed: int = 42) -> int:
-    """``Murmur3_x86_32.hashInt`` exactly as Spark's HashPartitioning
-    evaluates it for an IntegerType expression (seed 42) — driver-side,
-    so the preimage search costs no Spark job. Parity with the real
-    exchange is pinned end-to-end by
-    ``test_reducer_preimages_exact_routing`` (rows repartitioned on the
-    preimage land on ``spark_partition_id() == p``), so a Spark-side
-    hash change would fail tests, not scramble spills silently."""
-    m = 0xFFFFFFFF
-    k1 = (x * 0xCC9E2D51) & m
-    k1 = ((k1 << 15) | (k1 >> 17)) & m
-    k1 = (k1 * 0x1B873593) & m
-    h1 = (seed ^ k1) & m
-    h1 = ((h1 << 13) | (h1 >> 19)) & m
-    h1 = (h1 * 5 + 0xE6546B64) & m
-    h1 ^= 4  # fmix with byte length
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & m
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & m
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1
-
-
-def _reducer_preimages(n: int) -> list[int]:
-    """For each reducer p in [0, n): the smallest int j ≥ 0 with
-    ``pmod(murmur3(j), n) == p``, so ``repartition(n, lit(j))`` places
-    rows EXACTLY on reducer p — hash partitioning inverted into range
-    partitioning. Adjacent range ids land on adjacent reducers, so AQE
-    coalescing (which merges adjacent reducer partitions) merges
-    ADJACENT key ranges and the contiguity contract survives."""
-    got: dict[int, int] = {}
-    j = 0
-    while len(got) < n:
-        p = _murmur3_int32(j) % n  # python % == pmod for n > 0
-        if p not in got:
-            got[p] = j
-        j += 1
-    return [got[p] for p in range(n)]
+    return routed.select(*df.columns, F.col("__lo").alias("__range_id"))
 
 
 def _list_parquet(spark, directory: str):

@@ -1,12 +1,12 @@
 """Sorted key–value producer stages: grouped flat-map + incremental
 reconcile + CDC — the reference's core semantics, re-expressed as
-DataFrame joins/unions/windows + one ``applyInPandas`` per stage.
+DataFrame joins/unions/windows + one ``mapInPandas`` per stage.
 
 Reference behavior being reproduced (see SURVEY.md §2.1 ops 6, 11-20):
 
 * ``Produce`` — a grouped flat-map ``(SK, [SV]) → [(TK, TV)]``
   (reference: Parquet.Producers/ParquetProduction.cs:10-11). Here:
-  ``updates.groupBy(sk).applyInPandas(produce)``.
+  :func:`run_produce`, one ``mapInPandas`` over SK-sorted partitions.
 * A stage owns three tables (reference: Producer.cs:58-60):
   **content** ``(tk…, sk…, value…)``, **mappings** ``(sk…, tk…)``,
   **updates-out** ``(type, tk…, value…)``.
@@ -143,23 +143,17 @@ def validate_updates(updates: DataFrame, sk_cols: list[str]) -> None:
         )
 
 
-def run_produce(stage: Stage, upserts: DataFrame,
-                method: str = "sorted") -> DataFrame:
+def run_produce(stage: Stage, upserts: DataFrame) -> DataFrame:
     """Grouped flat-map. Returns upsert instructions ``(tk…, sk…, value…)``.
 
-    Two physical strategies, same semantics (produce always sees a
-    key's full group):
-
-    * ``sorted`` (default) — hash-repartition on SK, sort within
-      partitions, then ONE ``mapInPandas`` per partition that walks the
-      sorted batches and groups in pandas, carrying the tail key across
-      Arrow batch boundaries. This is the Spark shape of the
-      reference's bounded sorted-group cursor (op 7,
-      SingleUseSequence.cs) and is ~10× faster than per-group UDF
-      dispatch when keys are numerous and small (measured 13.2s → 1.2s
-      on 5k-doc word split).
-    * ``grouped`` — plain ``groupBy(sk).applyInPandas``; simplest,
-      fine for few large groups.
+    produce always sees a key's full group: hash-repartition on SK,
+    sort within partitions, then ONE ``mapInPandas`` per partition that
+    walks the sorted batches and groups in pandas, carrying the tail key
+    across Arrow batch boundaries. This is the Spark shape of the
+    reference's bounded sorted-group cursor (op 7, SingleUseSequence.cs)
+    and is ~10× faster than per-group UDF dispatch (``groupBy``
+    + ``applyInPandas``) when keys are numerous and small (measured
+    13.2s → 1.2s on 5k-doc word split).
     """
     sk_cols = stage.sk_cols
     out_cols = stage.tk_cols + stage.value_cols
@@ -171,33 +165,11 @@ def run_produce(stage: Stage, upserts: DataFrame,
 
     produce = stage.produce
 
-    def finish(key: tuple, out: pd.DataFrame | None) -> pd.DataFrame | None:
-        if out is None or len(out) == 0:
-            return None
-        out = out[out_cols].copy()
-        for c, v in zip(sk_cols, key):
-            out[c] = v
-        return out
-
-    if method == "grouped":
-        def wrapped(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            out = finish(key, produce(key, pdf))
-            if out is None:
-                return pd.DataFrame(columns=out_cols + sk_cols)
-            return out
-
-        return (
-            upserts.groupBy(*sk_cols)
-            .applyInPandas(wrapped, schema=schema)
-            .select(*stage.content_cols)
-        )
-
     def emit(body: pd.DataFrame):
         import numpy as np
 
-        # dropna=False: null source keys form a group like any other —
-        # the 'grouped' (Spark groupBy) path keeps null keys, so the
-        # sorted path must too or the two strategies silently diverge.
+        # dropna=False: null source keys form ONE group, as Spark's
+        # groupBy would — pandas' default silently drops them.
         #
         # The produce() calls themselves are the contract (one call per
         # key, the key's full group); everything AROUND them is

@@ -295,8 +295,8 @@ def read_sorted(
 ) -> DataFrame:
     """Decode the chunk store globally ordered by ``key`` (under the
     key's own type; null keys first) WITHOUT a total sort: zone-planned
-    ranges, per-range decode + exact bounds, one hash shuffle on
-    ``range_id``, local sort.
+    ranges, per-range decode + exact bounds, one direct-placement
+    shuffle on ``range_id``, local sort.
 
     Returns the decoded columns plus ``range_id``; within every output
     partition rows are physically sorted by ``(range_id, key)`` and
@@ -402,35 +402,27 @@ def read_sorted(
              | ((kmin == F.col("hi")) & (tb < F.col("hi_tb"))))
     overlap = kmin.isNotNull() & ge_lo & lt_hi
     null_leg = F.col("lo").isNull() & (_key_nulls_col() > 0)
-    from .encoder import _reducer_preimages
-
-    # route each range to ITS OWN reducer via the Murmur3 preimage
-    # table (hash partitioning inverted into direct placement — same
-    # trick encoder._spill_range_pruned uses): a plain
-    # groupBy(range_id) exchange hashes R ranges into the session's
-    # shuffle-partition count, and balls-in-bins collisions hand some
-    # tasks 2-3 ranges while others sit idle — the measured straggler
-    # shape of the sorted-read probe (guide §2.5). With the preimage
-    # route, partition p holds exactly range p: perfect balance,
-    # deterministic output layout (partition order == range order), and
-    # the explicit repartition is not AQE-coalesced, so decode
-    # parallelism is n_ranges by construction.
-    npart = len(ranges)
-    route = F.array(*[F.lit(int(j)).cast("int")
-                      for j in _reducer_preimages(npart)])
+    # direct placement: repartitionById puts range i on reducer i. A
+    # plain groupBy(range_id) exchange hashes R ranges into the
+    # session's shuffle-partition count, and balls-in-bins collisions
+    # hand some tasks 2-3 ranges while others sit idle — the measured
+    # straggler shape of the sorted-read probe. Here partition p holds
+    # exactly range p: perfect balance, deterministic output layout
+    # (partition order == range order), and the explicit repartition
+    # is not AQE-coalesced, so decode parallelism is n_ranges by
+    # construction.
     fat = (
         chunks.withColumn("__tb", _chunk_tiebreak(ident))
         .join(F.broadcast(rdf), overlap | null_leg, "inner")
-        .withColumn("__route", F.get(route, F.col("range_id")))
-        .repartition(npart, "__route")
+        .repartitionById(len(ranges), "range_id")
     )
 
-    # group-decode per RANGE: the group key is (route, range_id,
-    # bounds); the explicit repartition above IS the plan's only
-    # shuffle (hash on __route already clusters the group key, so the
-    # groupBy adds no second exchange) and moves the compressed blobs
-    # of each range onto one task, which reassembles every overlapping
-    # chunk, bound-filters, and concatenates the runs
+    # group-decode per RANGE: the group key is (range_id, bounds); the
+    # explicit repartition above IS the plan's only shuffle (placement
+    # by range_id already clusters the group key, so the groupBy adds
+    # no second exchange) and moves the compressed blobs of each range
+    # onto one task, which reassembles every overlapping chunk,
+    # bound-filters, and concatenates the runs
     data_schema = pa.schema(fields)
     out_schema = pa.schema([pa.field("range_id", pa.int32())] + fields)
     out_emit = emit_schema(list(out_schema))
@@ -451,10 +443,10 @@ def read_sorted(
         def _py(v):
             return v.as_py() if hasattr(v, "as_py") else v
 
-        # gkey = (__route, range_id, lo, lo_tb, hi, hi_tb)
-        rid = int(_py(gkey[1]))
-        lo, lo_tb = _py(gkey[2]), _py(gkey[3])
-        hi, hi_tb = _py(gkey[4]), _py(gkey[5])
+        # gkey = (range_id, lo, lo_tb, hi, hi_tb)
+        rid = int(_py(gkey[0]))
+        lo, lo_tb = _py(gkey[1]), _py(gkey[2])
+        hi, hi_tb = _py(gkey[3]), _py(gkey[4])
         # group the ≤ (chunks × columns) METADATA rows by chunk ident —
         # the loop never touches data rows
         ident_cols = [tin.column(c) for c in ident]
@@ -524,7 +516,7 @@ def read_sorted(
         tbl = pa.table(cols, schema=out_schema)
         return tbl if out_schema == out_emit else tbl.cast(out_emit)
 
-    out = fat.groupBy("__route", "range_id", "lo", "lo_tb",
+    out = fat.groupBy("range_id", "lo", "lo_tb",
                       "hi", "hi_tb").applyInArrow(dec, schema=spark_schema)
     # partition-local sort, NO exchange: every range is whole inside
     # its group's partition, so (range_id, key) order within partitions

@@ -872,7 +872,8 @@ def vacuum(
     depth: if every listed file STILL looks orphaned while live
     snapshots reference files, the call refuses (raises) unless
     ``force=True`` — a GC must never be one bad argument away from
-    deleting a whole table.
+    deleting a whole table. Data dirs past the newest committed
+    snapshot are never touched: they belong to a commit still writing.
 
     Scale shape: with ``spark`` passed, the listing anti-joins the
     UNION of manifest frames (sharded manifests are parquet — a
@@ -882,8 +883,17 @@ def vacuum(
     store = store or LocalStore()
     sids = list_snapshots(table_dir, store)
     data_root = posixpath.join(table_dir, "data")
+    newest = sids[-1] if sids else 0
     listed: dict[str, list[str]] = {}
     for sdir in store.listdir(data_root):
+        # a dir past the newest committed snapshot belongs to a commit
+        # still writing (its files or _temporary/ precede its manifest)
+        # or to a crashed one, which the next commit_snapshot overwrites
+        # — never garbage
+        dir_id = sdir[2:]
+        if (sdir.startswith("s=") and dir_id.isdigit()
+                and int(dir_id) > newest):
+            continue
         d = posixpath.join(data_root, sdir)
         listed[d] = [
             posixpath.join(d, e) for e in store.listdir(d)

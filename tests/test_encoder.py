@@ -248,28 +248,34 @@ def test_encode_staged_parity(spark, tmp_path):
     assert digest(staged) == digest(onephase) == digest(src)
 
 
-def test_decode_pandas_boundary_comparator_parity(spark, source):
-    """The bench-only ``_pandas_boundary`` comparator (identical chunk
-    kernels, applyInPandas boundary — the pre-Arrow-native decode
-    shape bench.py's decode probe times against) must stay
-    row-identical to the shipped applyInArrow decode, or the probe's
-    'win' number measures a broken leg instead of the boundary."""
-    chunks = encode_partitions(
-        source.limit(800), sort_cols=["repo", "path"], partitions=3,
-        chunk_rows=256,
-    ).localCheckpoint()
-    arrow_rows = sorted(
-        tuple(r) for r in decode_chunks(chunks).collect())
-    pandas_rows = sorted(
-        tuple(r) for r in
-        decode_chunks(chunks, _pandas_boundary=True).collect())
-    assert arrow_rows == pandas_rows
+def test_staged_single_partition_spill_is_logged(spark, tmp_path, caplog):
+    """When the key sample yields fewer than two ranges (here every row
+    shares one key) the spill falls back to ONE partition — the whole
+    input through one task. That degradation must leave a WARNING, and
+    the spill must still hold every row."""
+    import logging
+
+    from parquet_producers_spark.encoder import _spill_range_pruned
+
+    src = spark.range(300).select(
+        F.lit("hot").alias("repo"), F.lit("p").alias("path"),
+        F.col("id").alias("v"))
+    spill = str(tmp_path / "one_spill")
+    with caplog.at_level(logging.WARNING, logger="parquet_producers_spark"):
+        _spill_range_pruned(spark, src, spill, ["repo", "path"], 8)
+    warned = [r for r in caplog.records
+              if "single-partition spill" in r.getMessage()]
+    assert len(warned) == 1 and warned[0].levelno == logging.WARNING
+    assert "8 partitions requested" in warned[0].getMessage()
+    files = [f for f in os.listdir(spill) if f.endswith(".parquet")]
+    assert len(files) == 1
+    assert spark.read.parquet(spill).count() == 300
 
 
-def test_staged_pruned_range_plan_contract(spark, tmp_path):
+def test_staged_pruned_spill_contract(spark, tmp_path):
     """The pruned-range phase-1 spill (_spill_range_pruned: cuts from a
-    column-pruned key frame + binary-search routing + hash-preimage
-    reducers) must honor the classic repartitionByRange contract:
+    column-pruned key frame + binary-search routing + direct placement
+    by range id) must honor the classic repartitionByRange contract:
     every row present exactly once, rows sorted within each spill
     file, per-file key ranges contiguous and NON-overlapping, null
     keys first. Payload is scanned once instead of twice — the 100 TB
@@ -306,38 +312,15 @@ def test_staged_pruned_range_plan_contract(spark, tmp_path):
     spans.sort()
     for (lo_a, hi_a), (lo_b, hi_b) in zip(spans, spans[1:]):
         assert hi_a <= lo_b, f"overlapping spill ranges {hi_a} vs {lo_b}"
-    # decoded parity with the classic spark-range staged route
+    # the staged encode decodes back to exactly the source rows
     from parquet_producers_spark.encoder import encode_staged
 
-    pruned = decode_chunks(
+    staged = decode_chunks(
         encode_staged(spark, src, str(tmp_path / "sp1"),
-                      sort_cols=["repo", "path"], partitions=6,
-                      range_plan="pruned"))
-    classic = decode_chunks(
-        encode_staged(spark, src, str(tmp_path / "sp2"),
-                      sort_cols=["repo", "path"], partitions=6,
-                      range_plan="spark"))
+                      sort_cols=["repo", "path"], partitions=6))
     none_safe = lambda rows: sorted(  # noqa: E731 — None-bearing tuples
         (tuple(r) for r in rows), key=repr)
-    assert none_safe(pruned.collect()) == none_safe(classic.collect())
-
-
-def test_reducer_preimages_exact_routing(spark):
-    """Every precomputed preimage must land its range id on exactly its
-    own reducer, in range order (the contiguity AQE-merge argument
-    depends on adjacent ids → adjacent reducers)."""
-    from parquet_producers_spark.encoder import _reducer_preimages
-
-    for n in (1, 2, 7, 32):
-        pre = _reducer_preimages(n)
-        assert len(pre) == n
-        got = (
-            spark.createDataFrame([(p, pre[p]) for p in range(n)],
-                                  "p int, j int")
-            .repartition(n, "j")
-            .withColumn("pid", F.spark_partition_id())
-            .collect())
-        assert all(r.p == r.pid for r in got)
+    assert none_safe(staged.collect()) == none_safe(src.collect())
 
 
 def test_staged_pruned_routing_no_cliff_at_32768(spark):
@@ -346,14 +329,15 @@ def test_staged_pruned_routing_no_cliff_at_32768(spark):
     silently reverted to the double-scan classic repartitionByRange
     above 4,096 partitions. The routed plan at 32,768 ranges must (a)
     scan the payload child exactly once, (b) carry no range-sampling
-    subtree over it, and (c) route a sample of rows to the correct
-    range under driver-side binary search."""
+    subtree over it, (c) assign a sample of rows the correct range id
+    under driver-side binary search, and (d) spill through exactly one
+    shuffle, a direct placement by range id."""
+    import bisect
+    import re
+
     from pyspark.sql import Row
 
-    from parquet_producers_spark.encoder import (
-        _pruned_range_routed,
-        _reducer_preimages,
-    )
+    from parquet_producers_spark.encoder import _pruned_range_routed
 
     n = 32768
     # synthetic cut rows: mx = (key string, "") — 32,767 cuts + open end
@@ -364,24 +348,26 @@ def test_staged_pruned_routing_no_cliff_at_32768(spark):
         F.lit("p").alias("path"),
         F.sha2(F.col("id").cast("string"), 256).alias("content"),
     )
-    routed, npart = _pruned_range_routed(spark, src, ["repo", "path"],
-                                         cut_rows)
-    assert npart == n
+    routed = _pruned_range_routed(spark, src, ["repo", "path"], cut_rows)
     plan = routed._jdf.queryExecution().optimizedPlan().toString()
     # (a) exactly one scan of the payload child (spark.range source)
     assert plan.count("Range (0, 2000") == 1
     # (b) no sampling subtree (classic repartitionByRange plans one)
     assert "Sample" not in plan
-    # (c) routing parity with a driver-side binary search over the cuts
-    import bisect
-
+    # (c) range-id parity with a driver-side binary search over the
+    # cuts (lower_bound: smallest i with key <= cuts[i])
     cuts = [(r["mx"]["repo"], r["mx"]["path"]) for r in cut_rows[:-1]]
-    pre = _reducer_preimages(n)
-    got = routed.select("repo", "path", "__route").limit(200).collect()
+    got = routed.select("repo", "path", "__range_id").limit(200).collect()
     assert got
     for r in got:
         rid = bisect.bisect_left(cuts, (r["repo"], r["path"]))
-        # lower_bound semantics: smallest i with key <= cuts[i]
-        while rid < len(cuts) and cuts[rid] < (r["repo"], r["path"]):
-            rid += 1
-        assert r["__route"] == pre[rid], (r, rid)
+        assert r["__range_id"] == rid, (r, rid)
+    # (d) the spill's exchanges: one direct-placement shuffle plus the
+    # broadcast of the one-row cut frame, nothing else
+    spill = (routed.repartitionById(n, "__range_id").drop("__range_id")
+             .sortWithinPartitions("repo", "path"))
+    eplan = spill._jdf.queryExecution().executedPlan().toString()
+    shuffles = re.findall(r"(?<!Broadcast)Exchange (\w+)", eplan)
+    assert shuffles == ["shufflepartitionidpassthrough"], eplan
+    assert "REPARTITION_BY_NUM" in eplan
+    assert eplan.count("BroadcastExchange") == 1, eplan

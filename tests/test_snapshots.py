@@ -1120,3 +1120,39 @@ def test_vacuum_reclaims_empty_dirs_without_new_orphans(spark, tmp_path):
     # live snapshot untouched
     assert [tuple(r) for r in read_snapshot(spark, t).collect()] == [(9, "z")]
     assert list_snapshots(t) == [s2]
+
+
+def test_vacuum_spares_in_flight_commit_dir(spark, tmp_path):
+    """A data dir past the newest committed snapshot is a commit still
+    writing — only _temporary/ so far, or finished files whose manifest
+    is not written yet. vacuum must leave it alone on both the
+    driver-side and the distributed path, while an old orphan dir is
+    still reclaimed."""
+    import os
+
+    from parquet_producers_spark.sources.snapshots import (
+        expire_snapshots,
+        vacuum,
+    )
+
+    for name, kw in (("local", {}), ("dist", {"spark": spark})):
+        t = str(tmp_path / name)
+        commit_snapshot(spark, spark.createDataFrame(
+            [(1, "a")], "id int, v string").coalesce(1), t)
+        s2 = commit_snapshot(spark, spark.createDataFrame(
+            [(9, "z")], "id int, v string").coalesce(1), t, mode="replace")
+        expire_snapshots(t, keep_last=1)
+        old_dir = os.path.join(t, "data", "s=000001")
+        inflight = os.path.join(t, "data", f"s={s2 + 1:06d}")
+        planted = [os.path.join(inflight, "_temporary", "0", "x.parquet"),
+                   os.path.join(inflight, "part-0.parquet")]
+        for p in planted:
+            os.makedirs(os.path.dirname(p), exist_ok=True)
+            open(p, "wb").close()
+
+        orphans = vacuum(t, **kw)
+        assert orphans and all(p.startswith(old_dir) for p in orphans)
+        assert not os.path.exists(old_dir)
+        assert all(os.path.exists(p) for p in planted), name
+        assert [tuple(r) for r in read_snapshot(spark, t).collect()] \
+            == [(9, "z")]

@@ -99,8 +99,9 @@ def test_read_sorted_merges_overlapping_waves(spark):
 
 
 def test_read_sorted_plan_has_one_blob_exchange(spark):
-    # the at-scale contract: ONE exchange (compressed blobs hashed by
-    # range), decoded rows never shuffle, no sampling/range partitioner
+    # the at-scale contract: ONE exchange (compressed blobs placed
+    # directly on their range's reducer), decoded rows never shuffle,
+    # no sampling/range partitioner
     d = _docs(spark, 2000)
     # materialize the chunk table first so the asserted plan is the
     # READ path only (the encode side legitimately range-partitions)
@@ -111,7 +112,10 @@ def test_read_sorted_plan_has_one_blob_exchange(spark):
         chunks, "k", n_ranges=4)._jdf.queryExecution().executedPlan().toString()
     import re
 
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
+    shuffles = re.findall(r"(?<!Broadcast)Exchange (\w+)", plan)
+    assert shuffles == ["shufflepartitionidpassthrough"], plan
+    assert "REPARTITION_BY_NUM" in plan
+    assert "hashpartitioning" not in plan
     assert "rangepartitioning" not in plan
     # the sort is partition-local (global=false ⇒ printed without a
     # global Sort marker feeding an exchange)
@@ -301,6 +305,21 @@ def test_plan_collects_o_ranges_not_chunks(spark):
     drv = plan_key_ranges(zf, 64, plan_collect_threshold=2 * n)
     assert sortedread.LAST_PLAN_COLLECTED >= n  # proves path taken
     assert drv == dist  # both paths pick identical cut points
+
+    # tiebreak cuts over duplicate key_min values (4 chunks per key):
+    # the (key, chunk-tb) composite order must agree across both paths
+    m = 400
+    key = F.format_string("k%07d", (F.col("part_id") / 4).cast("int"))
+    dup = zf.limit(m).withColumn("key_min", key).withColumn("key_max", key)
+    dist_tb = plan_key_ranges(dup, 16, tiebreak=True,
+                              plan_collect_threshold=m // 4)
+    assert sortedread.LAST_PLAN_COLLECTED < m  # distributed path taken
+    drv_tb = plan_key_ranges(dup, 16, tiebreak=True,
+                             plan_collect_threshold=2 * m)
+    assert sortedread.LAST_PLAN_COLLECTED >= m
+    assert len(drv_tb) > 4
+    assert all(len(r[1]) == 2 for r in drv_tb[:-1])  # (key, tb) cuts
+    assert drv_tb == dist_tb
 
 
 def test_read_sorted_nan_keys_route_to_last_range(spark):

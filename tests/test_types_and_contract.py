@@ -138,3 +138,39 @@ def test_pipeline_validate_rejects_mixed_stream(spark, tmp_path):
     good = spark.createDataFrame(
         [("Add", 1, "x")], "type string, src_id int, text string")
     assert p.update({"phrases": good}, validate=True) == 1
+
+
+def test_run_produce_one_call_per_key_across_batches(spark):
+    """produce sees exactly ONE call per distinct SK, the null key
+    included (one group, as Spark's groupBy would form), and each call
+    gets the key's full group — even when a key spans several Arrow
+    batches (batches of 3 rows here)."""
+    from collections import Counter
+
+    import pandas as pd
+
+    from parquet_producers_spark.operators.produce import Stage, run_produce
+
+    def produce(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        # one row per call: the group this call saw
+        return pd.DataFrame({"seen": [",".join(sorted(map(str, pdf["v"])))]})
+
+    sizes = {"a": 13, "b": 2, None: 7, "c": 1}
+    keys = [k for k, n in sizes.items() for _ in range(n)]
+    rows = [("Add", k, v) for v, k in enumerate(keys)]
+    groups = {k: ",".join(sorted(str(r[2]) for r in rows if r[1] == k))
+              for k in sizes}
+    upserts = spark.createDataFrame(rows[::-1],
+                                    "type string, sk string, v int")
+    stage = Stage("calls", ["sk"], ["seen"], [], produce, "seen string")
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        got = run_produce(stage, upserts).collect()
+    finally:
+        spark.conf.set(conf, old)
+    # exactly one call per key, and that call saw the key's full group
+    assert sorted(Counter(r.sk for r in got).values()) == [1] * len(sizes)
+    assert {r.sk: r.seen for r in got} == groups
