@@ -24,22 +24,23 @@ from .produce import UPDATE_TYPE
 
 
 def feeder_view(
-    content: DataFrame,
+    content: DataFrame | None,
     updates: DataFrame,
     tk_cols: list[str],
     value_cols: list[str],
     sk_names: list[str] | None = None,
     value_names: list[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame | None]:
     """Adapt an upstream stage's (content, updates-out) into a feeder:
-    its TK becomes the downstream SK; SK lineage columns are dropped."""
+    its TK becomes the downstream SK; SK lineage columns are dropped.
+    ``content`` may be None where it is not needed (a single feeder)."""
     sk_names = sk_names or tk_cols
     value_names = value_names or value_cols
     key_sel = [F.col(t).alias(s) for t, s in zip(tk_cols, sk_names)]
     val_sel = [F.col(v).alias(n) for v, n in zip(value_cols, value_names)]
     return (
         updates.select(F.col(UPDATE_TYPE), *key_sel, *val_sel),
-        content.select(*key_sel, *val_sel),
+        content.select(*key_sel, *val_sel) if content is not None else None,
     )
 
 

@@ -13,17 +13,20 @@ Reference behavior being reproduced (see SURVEY.md §2.1 ops 6, 11-20):
 * Incremental update semantics (reference:
   ParquetProduction.cs:279-374 instruction generation, :376-453
   mapping reconcile, :463-704 content reconcile + CDC emission,
-  PendingDeleteState.cs:6-97 delete suppression), restated set-wise:
+  PendingDeleteState.cs:6-97 delete suppression), restated set-wise.
+  Content and mappings hold the same ``(tk, sk)`` pairs, so an updated
+  SK deletes exactly its previous rows:
 
-  - every updated SK deletes all its previous ``(sk, tk)`` pairs
-    (discovered via the update×mappings join);
-  - new content = prev content minus touched ``(tk, sk)`` pairs,
-    plus produced rows;
-  - CDC out: produced rows → ``Add`` iff the TK had no prior row
-    (first produced row only; the rest ``Update``); retained rows of a
+  - new content (mappings) = previous rows anti-joined with the updated
+    SKs on SK alone, plus the produced rows;
+  - CDC out comes from one TK window over the touched TKs' previous
+    rows (flagged gone when their SK is updated) plus the produced
+    rows: produced rows → ``Add`` iff the TK had no prior row (first
+    produced row only; the rest ``Update``); surviving rows of a
     touched TK are re-emitted as ``Update`` (consumers always see the
     full value set of a touched key — reference README.md:211-214);
-    ``Delete(tk)`` iff a deletion touched the TK and no row survives.
+    one ``Delete(tk)`` per touched TK with no row left;
+  - a NULL SK or TK is one key, as :func:`run_produce` groups it.
 
 This module is NOT a port: the reference's cursor machinery
 (Cursor.cs, SingleUseSequence.cs, MergeSorter.cs) has no counterpart
@@ -194,25 +197,26 @@ def run_produce(stage: Stage, upserts: DataFrame) -> DataFrame:
             yield big
 
     def scan(batches):
-        carry = None
+        # frames whose last key may continue in the next Arrow batch,
+        # concatenated once per emit, not per batch (quadratic for a
+        # hot key); null-safe compare: NaN keys are one group here too
+        carry = []
         for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
             if len(pdf) == 0:
                 continue
-            # the tail key may continue in the next Arrow batch — carry
-            # it (null-safe compare: NaN keys are one group here too)
             last = pdf[sk_cols].iloc[-1]
             tail = pd.concat(
                 [(pdf[c] == last[c]) | (pdf[c].isna() & pd.isna(last[c]))
                  for c in sk_cols], axis=1,
             ).all(axis=1).to_numpy()
-            carry = pdf[tail]
-            body = pdf[~tail]
-            if len(body):
-                yield from emit(body)
-        if carry is not None and len(carry):
-            yield from emit(carry)
+            if tail.all():
+                carry.append(pdf)
+                continue
+            # every key before this batch's tail key is complete
+            yield from emit(pd.concat([*carry, pdf[~tail]], ignore_index=True))
+            carry = [pdf[tail]]
+        if carry:
+            yield from emit(pd.concat(carry, ignore_index=True))
 
     n = int(upserts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
@@ -239,32 +243,17 @@ def update_stage(
     """
     if validate:
         validate_updates(updates, stage.sk_cols)
-    sk, tk = stage.sk_cols, stage.tk_cols
-    pair_cols = tk + sk
+    sk, tk, vals = stage.sk_cols, stage.tk_cols, stage.value_cols
 
     upd_keys = updates.select(*sk).distinct()
     upserts = updates.filter(F.col(UPDATE_TYPE) != "Delete")
 
     # Phase 1 — instructions (reference ParquetProduction.cs:279-374).
-    # The produce UDF is the dominant cost of a wave and its result
-    # feeds content AND mappings AND updates-out — three separate write
-    # actions downstream (Pipeline.update). Spark does not reuse
-    # exchanges across jobs, so without a checkpoint the UDF would
-    # re-execute once per write (3-4× the wave cost at scale). Lazy
-    # localCheckpoint: first materialization computes + stores, later
-    # jobs reuse the stored blocks; blocks are freed when the frame is
-    # GC'd after the wave.
+    # produce, the dominant cost of a wave, feeds all three write actions
+    # of Pipeline.update and Spark does not reuse exchanges across jobs:
+    # a lazy localCheckpoint runs it once, not once per write (3-4× the
+    # wave cost at scale); its blocks are freed when the frame is GC'd.
     produced = run_produce(stage, upserts).localCheckpoint(eager=False)
-    deletions = prev_mappings.join(upd_keys, sk, "inner").select(*sk, *tk)
-
-    # Phase 2 — reconcile (reference :376-453 mappings, :463-704 content)
-    touched_pairs = (
-        deletions.select(*pair_cols)
-        .unionByName(produced.select(*pair_cols))
-        .distinct()
-    )
-    retained = prev_content.join(touched_pairs, pair_cols, "left_anti")
-
     produced_final = (
         # preserve adds windows/joins over prev_content on top of the
         # checkpointed produce — itself reused by content + CDC, so pin it
@@ -272,54 +261,62 @@ def update_stage(
         .localCheckpoint(eager=False)
         if stage.has_preserve else produced
     )
-    # content feeds its own write AND the delete-suppression scan of the
-    # updates-out write (survivor_tks below) — same reuse argument
+    # Phase 2 — reconcile (reference :376-453 mappings, :463-704
+    # content): each table drops the updated SKs' rows by SK alone
     content = (
-        retained.unionByName(produced_final.select(*stage.content_cols))
-        .localCheckpoint(eager=False)
+        _join_null_safe(prev_content, upd_keys, sk, "left_anti")
+        .unionByName(produced_final.select(*stage.content_cols))
     )
-
     # one mapping row per produced row — duplicates intentional, matching
     # the reference (ParquetProductionTests.cs:224-229 asserts (1,1)×3)
     mappings = (
-        prev_mappings.join(upd_keys, sk, "left_anti")
+        _join_null_safe(prev_mappings, upd_keys, sk, "left_anti")
         .unionByName(produced.select(*sk, *tk))
     )
 
-    # CDC derivation (reference :553-697 + PendingDeleteState.cs)
-    tk_existed = prev_content.select(*tk).distinct()
-    touched_tks = touched_pairs.select(*tk).distinct()
-
-    first_w = Window.partitionBy(*tk).orderBy(*sk, *stage.value_cols)
-    prod_events = (
-        produced_final
-        .join(tk_existed.withColumn("__existed", F.lit(1)), tk, "left")
-        .withColumn("__rn", F.row_number().over(first_w))
-        .withColumn(
-            UPDATE_TYPE,
-            F.when(F.col("__existed").isNull() & (F.col("__rn") == 1), "Add")
-            .otherwise("Update"),
-        )
-        .select(UPDATE_TYPE, *tk, *stage.value_cols)
+    # CDC (reference :553-697 + PendingDeleteState.cs) from one frame:
+    # the previous rows of every touched TK, __gone when their SK is
+    # updated, plus the produced rows; one TK window decides each event
+    prev = _join_null_safe(
+        prev_content, upd_keys.withColumn("__gone", F.lit(True)), sk, "left"
+    ).fillna(False, ["__gone"])
+    touched = (prev.filter("__gone").select(*tk)
+               .unionByName(produced_final.select(*tk)).distinct())
+    frame = (
+        _join_null_safe(prev, touched, tk, "left_semi")
+        .withColumn("__new", F.lit(False))
+        .unionByName(produced_final.withColumns(
+            {"__gone": F.lit(False), "__new": F.lit(True)}))
     )
-    reemit_events = (
-        retained.join(touched_tks, tk, "left_semi")
-        .select(F.lit("Update").alias(UPDATE_TYPE), *tk, *stage.value_cols)
-    )
-    survivor_tks = content.select(*tk).distinct()
-    delete_events = (
-        deletions.select(*tk).distinct()
-        .join(survivor_tks, tk, "left_anti")
+    # new rows sort first: row 1 of a TK with any new row is its first
+    w = Window.partitionBy(*tk).orderBy(F.col("__new").desc(), *sk, *vals)
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    new, gone, first, alive = (
+        F.col(c) for c in ("__new", "__gone", "__first", "__alive"))
+    updates_out = (
+        frame.withColumns({
+            "__first": F.row_number().over(w) == 1,
+            "__existed": F.max(~new).over(whole),
+            "__alive": F.max(new | ~gone).over(whole),
+        })
+        # new rows, surviving old rows, and one row per TK left empty
+        .filter(new | ~gone | (~alive & first))
         .select(
-            F.lit("Delete").alias(UPDATE_TYPE), *tk,
-            *[F.lit(None).cast(dict(zip(
-                [f.name for f in content.schema.fields],
-                [f.dataType for f in content.schema.fields]))[c]).alias(c)
-              for c in stage.value_cols],
+            F.when(new & ~F.col("__existed") & first, "Add")
+            .when(alive, "Update").otherwise("Delete").alias(UPDATE_TYPE),
+            *tk, *[F.when(alive, F.col(c)).alias(c) for c in vals],
         )
     )
-    updates_out = prod_events.unionByName(reemit_events).unionByName(delete_events)
     return content, mappings, updates_out
+
+
+def _join_null_safe(left: DataFrame, right: DataFrame, on: list[str],
+                    how: str) -> DataFrame:
+    """``left.join(right, on, how)`` with NULL matching NULL."""
+    right = right.select(*[F.col(c).alias(f"__on_{c}") for c in on],
+                         *[c for c in right.columns if c not in on])
+    cond = [F.col(c).eqNullSafe(F.col(f"__on_{c}")) for c in on]
+    return left.join(right, cond, how).drop(*[f"__on_{c}" for c in on])
 
 
 def bootstrap_stage(
@@ -327,7 +324,7 @@ def bootstrap_stage(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """First wave from empty state (reference 'bootstrapping'
     README.md:45-59) — fast path: with no previous state there are no
-    deletions, nothing retained and no touched-pair anti-joins; content
+    deletions, nothing retained and no SK anti-join; content
     IS the produced set and every first-row-per-TK is an Add."""
     sk, tk = stage.sk_cols, stage.tk_cols
     upserts = updates.filter(F.col(UPDATE_TYPE) != "Delete")

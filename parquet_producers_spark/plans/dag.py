@@ -228,18 +228,19 @@ class Pipeline:
             if name in root_updates:
                 updates_in = root_updates[name]
             else:
+                sources = self.nodes[name].source_names
                 feeders = []
-                for s in self.nodes[name].source_names:
+                for s in sources:
                     src = self.nodes[s].stage
-                    if s in order:  # updated in this transaction
-                        upd = self.updates_out(s, new_version)
-                        cnt = self.content(s, new_version)
-                    else:
-                        # feeder untouched this wave: empty update stream,
-                        # current content (reference: a stage outside the
-                        # closure contributes no updates, Producer.cs:121-128)
-                        cnt = self.content(s, self.version(s))
-                        upd = self.updates_out(s, self.version(s)).limit(0)
+                    # a feeder untouched this wave: empty update stream,
+                    # current content (reference: a stage outside the
+                    # closure contributes no updates, Producer.cs:121-128)
+                    v = new_version if s in order else self.version(s)
+                    upd = self.updates_out(s, v)
+                    if s not in order:
+                        upd = upd.limit(0)
+                    # read_sources needs content only to merge ≥2 feeders
+                    cnt = self.content(s, v) if len(sources) > 1 else None
                     feeders.append(feeder_view(
                         cnt, upd, src.tk_cols, src.value_cols,
                     ))

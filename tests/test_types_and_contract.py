@@ -144,7 +144,8 @@ def test_run_produce_one_call_per_key_across_batches(spark):
     """produce sees exactly ONE call per distinct SK, the null key
     included (one group, as Spark's groupBy would form), and each call
     gets the key's full group — even when a key spans several Arrow
-    batches (batches of 3 rows here)."""
+    batches (batches of 3 rows here), and when one hot key spans 50
+    batches in a row."""
     from collections import Counter
 
     import pandas as pd
@@ -155,7 +156,7 @@ def test_run_produce_one_call_per_key_across_batches(spark):
         # one row per call: the group this call saw
         return pd.DataFrame({"seen": [",".join(sorted(map(str, pdf["v"])))]})
 
-    sizes = {"a": 13, "b": 2, None: 7, "c": 1}
+    sizes = {"a": 13, "b": 2, None: 7, "c": 1, "hot": 150}
     keys = [k for k, n in sizes.items() for _ in range(n)]
     rows = [("Add", k, v) for v, k in enumerate(keys)]
     groups = {k: ",".join(sorted(str(r[2]) for r in rows if r[1] == k))
