@@ -716,7 +716,7 @@ def q_codec_compaction(spark, sf):
         docs, sort_cols=["doc_id"], partitions=12, chunk_rows=64,
     ).localCheckpoint(eager=False)
     compacted = compact_chunks(
-        chunks, sort_cols=["doc_id"], chunk_rows=64, partitions=4,
+        chunks, sort_cols=["doc_id"], chunk_rows=64,
     ).localCheckpoint(eager=False)
     # bounded driver-side counts: chunk-manifest cardinalities
     runts_before = (chunks.filter(F.col("n_rows") < 64)

@@ -1,23 +1,35 @@
 """Chunk-table compaction — the encoded format's ``rewrite_data_files``.
 
 Incremental waves (plans/dag.py) and per-partition encodes leave *runt*
-chunks behind: every partition's trailing slice, and every small delta
-wave, emits chunks with ``n_rows < chunk_rows``. Over many versions the
-chunk table accumulates them, which degrades reads three ways — more
-manifest rows to plan over, coarser zone-map selectivity per stored
-byte, and per-chunk codec overhead (symbol tables, dictionaries) paid
-on tiny row counts.
+chunks behind: a partition's trailing chunk, and every small delta
+wave, has ``n_rows < chunk_rows``. Over many versions the chunk table
+accumulates them, which degrades reads three ways — more manifest rows
+to plan over, coarser zone-map selectivity per stored byte, and
+per-chunk codec overhead (symbol tables, dictionaries) paid on tiny row
+counts.
 
-``compact_chunks`` rewrites ONLY the runts:
+One runt kernel serves ``compact_chunks`` (a chunk frame),
+``compact_stage`` (a versioned stage) and the ``compact_if_needed``
+policy gate:
 
-1. split the table on ``n_rows >= runt_threshold`` — a manifest-level
-   predicate; full chunks pass through with their encoded blobs
-   byte-identical (never decoded, never re-encoded);
-2. decode the runts (a small fraction of the data by construction),
-   shuffle-sort them back into key order, and re-encode into exact
-   ``chunk_rows`` chunks via the normal encode path;
-3. give rewritten chunks fresh ``part_id``s above the existing range so
-   chunk identities never collide with survivors.
+1. ONE manifest aggregate per slice counts chunks, runts, runt rows and
+   the max ``part_id`` — column pruning keeps every blob unread;
+2. the chunk-drop gate: a slice is rewritten only when its runt rows
+   fit in fewer chunks than it has runts, ⌈runt_rows / chunk_rows⌉ <
+   runts. A slice whose runts cannot merge (one chunk per slice, the
+   normal shape of a small wave) is not decoded at all;
+3. the runts of merging slices are decoded, shuffle-sorted back into
+   key order and re-encoded through the normal encode path, with AQE
+   sizing the partitions (small runt sets coalesce, so a slice's runts
+   usually become ⌈runt_rows / chunk_rows⌉ chunks; a large runt set may
+   keep a few partitions and end with a few more);
+4. rewritten chunks get fresh ``part_id``s above the aggregate's max,
+   so chunk identities never collide with survivors. Full chunks, and
+   the runts of slices that cannot merge, pass through with their
+   encoded blobs byte-identical.
+
+Every decision is logged on the ``parquet_producers_spark`` logger with
+the chunk count before and the predicted count after.
 
 This is the same contract as Iceberg's binpack ``rewrite_data_files``
 (public docs; see PAPERS.md): row multiset is preserved bit-identically,
@@ -28,16 +40,13 @@ Parquet.Producers/ParquetProduction.cs regenerates whole tables), which
 is exactly why an incremental engine at 100 TB needs this op: rewriting
 0.1% runt bytes instead of 100% is the difference between a nightly
 maintenance job and a full recompute.
-
-Scale shape: the runt/full split is a pushed-down parquet predicate on
-two small manifest columns; only runt blobs cross into Python for
-decode; the re-sort shuffles only runt rows; survivors stream through
-as stored bytes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import logging
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .encoder import (
@@ -47,23 +56,87 @@ from .encoder import (
     encode_partitions,
 )
 
+_log = logging.getLogger("parquet_producers_spark")
+
+
+def _runt_stats(chunks: DataFrame, chunk_rows: int,
+                by_slice: bool) -> dict[int, dict]:
+    """ONE manifest-scale aggregate: per slice (or for the whole table
+    under key 0) its chunks, runts, runt rows, max ``part_id``, and
+    whether the runts can merge into fewer chunks."""
+    is_runt = F.col("n_rows") < chunk_rows
+    by = ["slice_id"] if by_slice else []
+    stats = {}
+    for r in (
+        chunks.filter(F.col("col_idx") == 0).groupBy(*by).agg(
+            F.count("*").alias("chunks"),
+            F.sum(is_runt.cast("int")).alias("runts"),
+            F.sum(F.when(is_runt, F.col("n_rows")).otherwise(0))
+            .alias("runt_rows"),
+            F.max("part_id").alias("max_pid"),
+        ).collect()
+    ):
+        if not r["chunks"]:
+            continue  # empty table: the global aggregate's one null row
+        s = {f: int(r[f]) for f in ("chunks", "runts", "runt_rows",
+                                    "max_pid")}
+        merged = -(-s["runt_rows"] // chunk_rows)
+        s["merges"] = merged < s["runts"]
+        s["after"] = s["chunks"] - (s["runts"] - merged if s["merges"] else 0)
+        stats[int(r["slice_id"]) if by_slice else 0] = s
+    return stats
+
+
+def _log_decision(what: str, stats: dict[int, dict], ran: bool,
+                  why: str = "") -> None:
+    """One line per gate decision: chunk count before and predicted
+    after, runt rows, and whether the rewrite ran."""
+    merging = [s for s in stats.values() if s["merges"]]
+    _log.info(
+        "compaction %s: %s; chunks %d -> %d predicted, runt rows %d, "
+        "%d/%d slices merge%s", what, "rewrite ran" if ran else "skipped",
+        sum(s["chunks"] for s in stats.values()),
+        sum(s["after"] for s in stats.values()),
+        sum(s["runt_rows"] for s in stats.values()),
+        len(merging), len(stats), f" ({why})" if why else "")
+
+
+def _compact(chunks: DataFrame, sort_cols: list[str], chunk_rows: int,
+             cascade: bool, profile: str, what: str,
+             slice_of: Column | None = None) -> DataFrame:
+    """The runt kernel. ``slice_of`` re-derives the slice of a decoded
+    row for a ``slice_id``-partitioned table; without it the whole
+    frame is one slice."""
+    stats = _runt_stats(chunks, chunk_rows, by_slice=slice_of is not None)
+    merging = [k for k, s in stats.items() if s["merges"]]
+    _log_decision(what, stats, ran=bool(merging))
+    if not merging:
+        return chunks
+    pid_base = max(s["max_pid"] for s in stats.values()) + 1
+    rewrite = F.col("n_rows") < chunk_rows
+    if slice_of is not None:
+        rewrite = rewrite & F.col("slice_id").isin(merging)
+    rows = decode_chunks(chunks.filter(rewrite), ordered=False)
+    if slice_of is not None:
+        rows = rows.withColumn("__slice", slice_of)
+    rewritten = encode_partitions(
+        rows, sort_cols=sort_cols, chunk_rows=chunk_rows, cascade=cascade,
+        profile=profile,
+        slice_col="__slice" if slice_of is not None else None,
+    ).withColumn("part_id", (F.col("part_id") + F.lit(pid_base)).cast("int"))
+    return chunks.filter(~rewrite).unionByName(rewritten)
+
 
 def compact_chunks(
     chunks: DataFrame,
     sort_cols: list[str],
     chunk_rows: int = CHUNK_ROWS,
-    runt_threshold: int | None = None,
-    partitions: int | None = None,
     cascade: bool = False,
     profile: str = "size",
 ) -> DataFrame:
     """Return a compacted chunk table: full chunks unchanged (same
-    blobs), runt chunks re-encoded into exact ``chunk_rows`` chunks
-    sorted by ``sort_cols``.
-
-    ``runt_threshold`` defaults to ``chunk_rows`` — with the encoder's
-    exact slicing, any chunk below the target size is a runt. Lower it
-    to leave near-full chunks alone (rewrite less).
+    blobs), runt chunks re-encoded sorted by ``sort_cols`` when they
+    can merge into fewer chunks — else the table is returned as is.
 
     The rewritten region is key-clustered by ``sort_cols``; physical
     ``(part_id, chunk_seq)`` order interleaves survivors and rewrites,
@@ -79,34 +152,8 @@ def compact_chunks(
         raise ValueError(
             f"compact_chunks operates on one stored table; layout columns "
             f"{layout_cols} present — filter to a single slice first")
-    threshold = chunk_rows if runt_threshold is None else runt_threshold
-
-    survivors = chunks.filter(F.col("n_rows") >= threshold)
-    runts = chunks.filter(F.col("n_rows") < threshold)
-
-    # bounded collect: ONE aggregate row over manifest-scale metadata
-    # answers both "is there anything to rewrite" and "what pid base"
-    stats = chunks.agg(
-        F.max("part_id").alias("max_pid"),
-        F.sum((F.col("n_rows") < threshold).cast("int")).alias("runt_rows"),
-    ).first()
-    if stats["max_pid"] is None or not stats["runt_rows"]:
-        return chunks  # empty or already-healthy table: no-op
-    pid_base = int(stats["max_pid"]) + 1
-
-    rewritten = (
-        encode_partitions(
-            decode_chunks(runts, ordered=False),
-            sort_cols=sort_cols,
-            partitions=partitions,
-            chunk_rows=chunk_rows,
-            cascade=cascade,
-            profile=profile,
-        )
-        .withColumn("part_id", (F.col("part_id") + F.lit(pid_base))
-                    .cast("int"))
-    )
-    return survivors.unionByName(rewritten)
+    return _compact(chunks, sort_cols, chunk_rows, cascade, profile,
+                    what="chunk frame")
 
 
 def compact_stage(
@@ -115,18 +162,17 @@ def compact_stage(
     stage: str,
     version: int,
     chunk_rows: int | None = None,
-    runt_threshold: int | None = None,
-    partitions_per_slice: int | None = None,
     cascade: bool = False,
     profile: str = "size",
     store=None,
 ):
     """Maintenance transaction over the versioned layout
-    (storage.py): read stage version ``N``, compact every slice, write
-    version ``N+1`` with fresh per-slice manifests carrying
-    ``compacted_from`` lineage. Readers keep using ``v=N`` until the
-    new version's manifests land — the same visibility rule as any
-    other version, so compaction is concurrency-safe by construction.
+    (storage.py): read stage version ``N``, run the runt kernel over
+    every slice, write version ``N+1`` with fresh per-slice manifests
+    carrying ``compacted_from`` lineage. Readers keep using ``v=N``
+    until the new version's manifests land — the same visibility rule
+    as any other version, so compaction is concurrency-safe by
+    construction.
 
     Slice discipline is preserved: decoded runt rows re-derive their
     slice from the SAME hash the original encode used (``slice_col`` +
@@ -134,118 +180,37 @@ def compact_stage(
     arguments), so rewritten chunks land in their original slice
     partitions and slice-level resume keeps working — a killed
     compaction re-runs only the slices whose v=N+1 manifest is
-    missing. Survivor chunks pass through byte-identical.
+    missing. Slices whose runts cannot merge are carried byte-identical.
 
     Returns the list of :class:`storage.SliceResult` for v=N+1.
     """
-    from pyspark.sql import functions as F
-
     from .storage import (
-        SliceResult,
-        atomic_write_json,
+        _DEFAULT_STORE,
+        commit_slices,
         manifest_path,
         read_chunks,
-        slice_status,
-        stage_dir,
-        _DEFAULT_STORE,
+        slice_id_of,
     )
 
     store = store or _DEFAULT_STORE
     base = store.read_json(manifest_path(root, stage, version, 0))
     slice_col, n_slices = base["slice_col"], int(base["slice_of"])
     sort_cols = list(base["sort_cols"])
-    # stage geometry comes from the v=N manifest unless explicitly
-    # overridden — a maintain run must never reclassify a stage encoded
-    # with custom chunk_rows as 100% runts just because the caller used
-    # the default (same manifest-is-authoritative rule as slice_col)
+    # a maintain run must never reclassify a stage encoded with custom
+    # chunk_rows as 100% runts just because the caller used the default
     chunk_rows = chunk_rows or int(base.get("chunk_rows") or CHUNK_ROWS)
-    threshold = chunk_rows if runt_threshold is None else runt_threshold
-    new_version = version + 1
-    out_dir = stage_dir(root, stage, new_version, "chunks")
 
-    done, todo = slice_status(root, stage, new_version, n_slices, store)
-
-    per_slice: dict[int, dict] = {}
-    if todo:
-        import time
-
-        t0 = time.monotonic()
+    def build(todo: list[int]) -> DataFrame:
         chunks = read_chunks(spark, root, stage, version).filter(
-            F.col("slice_id").isin([int(k) for k in todo]))
-        survivors = chunks.filter(F.col("n_rows") >= threshold)
-        runts = chunks.filter(F.col("n_rows") < threshold)
-        # ONE manifest-scale aggregate: pid base + anything-to-rewrite
-        st = chunks.agg(
-            F.max("part_id").alias("max_pid"),
-            F.sum((F.col("n_rows") < threshold).cast("int")).alias("runts"),
-        ).first()
-        max_pid = st["max_pid"] or 0
-        if st["runts"]:
-            rewritten = (
-                encode_partitions(
-                    decode_chunks(runts, ordered=False).withColumn(
-                        "__slice",
-                        F.pmod(F.hash(F.col(slice_col)),
-                               F.lit(n_slices)).cast("int"),
-                    ),
-                    sort_cols=sort_cols,
-                    partitions=(partitions_per_slice * len(todo)
-                                if partitions_per_slice else None),
-                    chunk_rows=chunk_rows,
-                    cascade=cascade,
-                    profile=profile,
-                    slice_col="__slice",
-                )
-                .withColumn(
-                    "part_id",
-                    (F.col("part_id") + F.lit(int(max_pid) + 1)).cast("int"))
-            )
-            out = survivors.unionByName(rewritten)
-        else:
-            out = survivors
-        (
-            out.write.mode("overwrite")
-            .option("compression", "none")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("slice_id")
-            .parquet(out_dir)
-        )
-        elapsed_s = time.monotonic() - t0
+            F.col("slice_id").isin(todo))
+        return _compact(chunks, sort_cols, chunk_rows, cascade, profile,
+                        what=f"{stage} v={version}",
+                        slice_of=slice_id_of(slice_col, n_slices))
 
-        written = spark.read.parquet(out_dir).filter(
-            F.col("slice_id").isin([int(k) for k in todo]))
-        tots = {
-            int(r["slice_id"]): r
-            for r in written.groupBy("slice_id").agg(
-                F.sum(F.when(F.col("col_idx") == 0, F.col("n_rows"))
-                      .otherwise(F.lit(0))).alias("rows"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("enc_bytes").alias("enc_bytes"),
-                F.countDistinct("part_id", "chunk_seq").alias("n_chunks"),
-            ).collect()
-        }
-        for k in todo:
-            tot = tots.get(k)
-            per_slice[k] = {
-                "rows": int(tot["rows"] or 0) if tot else 0,
-                "raw_bytes": int(tot["raw_bytes"] or 0) if tot else 0,
-                "enc_bytes": int(tot["enc_bytes"] or 0) if tot else 0,
-                "n_chunks": int(tot["n_chunks"] or 0) if tot else 0,
-                "elapsed_s": round(elapsed_s / len(todo), 3),
-            }
-            atomic_write_json(manifest_path(root, stage, new_version, k), {
-                "stage": stage, "version": new_version, "slice": k,
-                "slice_of": n_slices, "slice_col": slice_col,
-                "sort_cols": sort_cols, "chunk_rows": chunk_rows,
-                "compacted_from": version,
-                "metrics": per_slice[k],
-            }, store=store)
-
-    return [
-        SliceResult(k, True, done[k]) if k in done
-        else SliceResult(k, False, per_slice[k])
-        for k in range(n_slices)
-    ]
+    return commit_slices(spark, root, stage, version + 1, n_slices, build, {
+        "slice_col": slice_col, "sort_cols": sort_cols,
+        "chunk_rows": chunk_rows, "compacted_from": version,
+    }, store)
 
 
 def compact_if_needed(
@@ -259,55 +224,36 @@ def compact_if_needed(
     **kwargs,
 ) -> int:
     """Policy gate for periodic maintenance: decide from the chunk
-    MANIFEST (no blob read — parquet column pruning drops ``data``)
-    whether version ``N`` carries enough runt chunks to justify a
-    rewrite, and if so run :func:`compact_stage`.
+    MANIFEST (no blob read) whether version ``N`` is worth a rewrite,
+    and if so run :func:`compact_stage`. It is, when runts are at least
+    ``min_runt_fraction`` of its chunks AND some slice's runts can merge
+    into fewer chunks (the kernel's chunk-drop gate).
 
     Returns the version readers should use afterwards: ``N+1`` if a
     compaction ran, else ``N``. Idempotent and cheap when healthy —
-    the scan is a two-column aggregate over chunk metadata, so a
-    scheduler can call this after every wave.
+    one grouped aggregate over chunk metadata, so a scheduler can call
+    this after every wave.
     """
-    from pyspark.sql import functions as F
+    from .storage import _DEFAULT_STORE, manifest_path, read_chunks
 
-    from .storage import manifest_path, read_chunks, _DEFAULT_STORE
-
-    # stage geometry from the v=N manifest unless overridden (see
-    # compact_stage) — the gate and the rewrite must judge runts
-    # against the chunk_rows the stage was actually encoded with
-    st = store or _DEFAULT_STORE
+    # the gate and the rewrite judge runts against the chunk_rows the
+    # stage was actually encoded with (see compact_stage)
     if chunk_rows is None:
-        base = st.read_json(manifest_path(root, stage, version, 0))
+        base = (store or _DEFAULT_STORE).read_json(
+            manifest_path(root, stage, version, 0))
         chunk_rows = int(base.get("chunk_rows") or CHUNK_ROWS)
-    threshold = (chunk_rows if kwargs.get("runt_threshold") is None
-                 else kwargs["runt_threshold"])
-    stats = (
-        read_chunks(spark, root, stage, version)
-        .select("slice_id", "part_id", "chunk_seq", "n_rows").distinct()
-        .agg(F.count("*").alias("n"),
-             F.sum((F.col("n_rows") < threshold).cast("int")).alias("runts"))
-        .first()
-    )
-    if not stats["n"] or stats["runts"] / stats["n"] < min_runt_fraction:
+    stats = _runt_stats(read_chunks(spark, root, stage, version),
+                        chunk_rows, by_slice=True)
+    n = sum(s["chunks"] for s in stats.values())
+    runts = sum(s["runts"] for s in stats.values())
+    what = f"{stage} v={version}"
+    if not n or runts / n < min_runt_fraction:
+        _log_decision(what, stats, ran=False,
+                      why=f"runt fraction under {min_runt_fraction}")
+        return version
+    if not any(s["merges"] for s in stats.values()):
+        _log_decision(what, stats, ran=False, why="no runts can merge")
         return version
     compact_stage(spark, root, stage, version, chunk_rows=chunk_rows,
                   store=store, **kwargs)
     return version + 1
-
-
-def compaction_plan(chunks: DataFrame,
-                    runt_threshold: int = CHUNK_ROWS) -> DataFrame:
-    """Manifest-only dry run: per column, how many chunks/bytes a
-    compaction would rewrite vs carry. Pure aggregation over the chunk
-    manifest columns — no blob is read (parquet column pruning drops
-    ``data``)."""
-    is_runt = (F.col("n_rows") < runt_threshold).cast("int")
-    return (
-        chunks.groupBy("column")
-        .agg(
-            F.count("*").alias("n_chunks"),
-            F.sum(is_runt).alias("runt_chunks"),
-            F.sum(F.col("enc_bytes") * is_runt).alias("runt_bytes"),
-            F.sum(F.col("enc_bytes") * (1 - is_runt)).alias("carried_bytes"),
-        )
-    )

@@ -255,14 +255,17 @@ def encode_partitions(
     and every output row carries ``slice_id`` — so ONE scan of the
     input can feed a ``partitionBy(slice_id)`` checkpointed write
     instead of one filtered scan per slice.
+
+    Without ``partitions`` the range exchange carries no count, so AQE
+    sizes it from the shuffled bytes: a small input coalesces into few
+    partitions and writes one chunk per slice instead of one runt per
+    shuffle partition. An explicit ``partitions`` is kept exactly.
     """
-    if slice_col:
-        n = partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        order = [slice_col] + (sort_cols or [])
-        df = df.repartitionByRange(int(n), *order).sortWithinPartitions(*order)
-    elif sort_cols:
-        n = partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        df = df.repartitionByRange(int(n), *sort_cols).sortWithinPartitions(*sort_cols)
+    order = ([slice_col] if slice_col else []) + (sort_cols or [])
+    if order:
+        by_range = (df.repartitionByRange(partitions, *order) if partitions
+                    else df.repartitionByRange(*order))
+        df = by_range.sortWithinPartitions(*order)
     elif partitions:
         df = df.repartition(partitions)
 

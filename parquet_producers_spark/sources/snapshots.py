@@ -1132,9 +1132,11 @@ def encode_table_incremental(
     wave = {"version": version, "snapshot": latest}
     if maintain:
         # in-cadence maintenance: run the runt-compaction policy gate on
-        # the fresh wave (small deltas are runt-heavy by construction).
-        # If it rewrites, the wave entry points at the compacted version
-        # so readers — and the NEXT wave's version counter — follow it.
+        # the fresh wave. It rewrites only when the wave's runts can merge
+        # into fewer chunks (a small wave is one chunk per slice and is
+        # left alone). If it rewrites, the wave entry points at the
+        # compacted version so readers — and the NEXT wave's version
+        # counter — follow it.
         from ..compaction import compact_if_needed
 
         new_v = compact_if_needed(
@@ -1246,11 +1248,11 @@ def expire_encoded_versions(
 ) -> list[int]:
     """Chunk-store version GC — the physical-reclaim half of encoded-
     table maintenance, mirroring :func:`expire_snapshots` +
-    :func:`vacuum` for ``enc_root``. :func:`consolidate_encoded_table`
-    and in-cadence ``compact_if_needed`` strand superseded ``v=N``
-    directories on disk (readers flip at the snapshot-map commit; old
-    versions stay for in-flight readers); this deletes every version
-    dir that is
+    :func:`vacuum` for ``enc_root``. :func:`consolidate_encoded_table`,
+    and in-cadence ``compact_if_needed`` whenever a wave's runts merged
+    into fewer chunks, strand superseded ``v=N`` directories on disk
+    (readers flip at the snapshot-map commit; old versions stay for
+    in-flight readers); this deletes every version dir that is
 
     * NOT referenced by ``_snapshot_map.json`` (including
       ``compacted_from`` / ``consolidated_from`` sources — those are

@@ -73,18 +73,75 @@ class SliceResult:
     metrics: dict
 
 
-def slice_status(root: str, stage: str, version: int, n_slices: int,
-                 store: FileStore | None = None
-                 ) -> tuple[dict[int, dict], list[int]]:
-    """Resume bookkeeping shared by encode_run and compact_stage:
-    (done slice→metrics from existing manifests, todo slice ids)."""
+def slice_id_of(slice_col: str, n_slices: int):
+    """The hash slice a row belongs to: encode_run assigns it, and
+    compaction re-derives it for decoded rows from the same expression."""
+    return F.pmod(F.hash(F.col(slice_col)), F.lit(n_slices)).cast("int")
+
+
+def commit_slices(
+    spark: SparkSession,
+    root: str,
+    stage: str,
+    version: int,
+    n_slices: int,
+    build,
+    header: dict,
+    store: FileStore | None = None,
+) -> list[SliceResult]:
+    """The per-slice commit shared by :func:`encode_run` and
+    ``compaction.compact_stage``.
+
+    Slices whose manifest already exists are skipped (resume). For the
+    rest, ``build(todo)`` returns a chunk frame carrying ``slice_id``; it
+    is written ``partitionBy(slice_id)`` with dynamic partition
+    overwrite, read back in ONE grouped aggregate, and each slice commits
+    by an atomic manifest of ``header`` plus its slice id and metrics.
+    """
     store = store or _DEFAULT_STORE
     done: dict[int, dict] = {}
     for k in range(n_slices):
         mpath = manifest_path(root, stage, version, k)
         if store.exists(mpath):
             done[k] = store.read_json(mpath)["metrics"]
-    return done, [k for k in range(n_slices) if k not in done]
+    todo = [k for k in range(n_slices) if k not in done]
+
+    if todo:
+        t0 = time.monotonic()
+        out_dir = stage_dir(root, stage, version, "chunks")
+        (
+            build(todo).write.mode("overwrite")
+            .option("compression", "none")  # our codecs own compression
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("slice_id")
+            .parquet(out_dir)
+        )
+        elapsed_s = time.monotonic() - t0
+        head = F.col("col_idx") == 0  # one row per chunk
+        metrics = {k: {"rows": 0, "raw_bytes": 0, "enc_bytes": 0,
+                       "n_chunks": 0, "by_codec": {}} for k in todo}
+        for r in (
+            spark.read.parquet(out_dir).filter(F.col("slice_id").isin(todo))
+            .groupBy("slice_id", "codec").agg(
+                F.sum(F.when(head, F.col("n_rows")).otherwise(0))
+                .alias("rows"),
+                F.sum("raw_bytes").alias("raw_bytes"),
+                F.sum("enc_bytes").alias("enc_bytes"),
+                F.sum(head.cast("int")).alias("n_chunks"),
+            ).collect()
+        ):
+            m = metrics[int(r["slice_id"])]
+            for f in ("rows", "raw_bytes", "enc_bytes", "n_chunks"):
+                m[f] += int(r[f])
+            m["by_codec"][r["codec"]] = int(r["enc_bytes"])
+        for k in todo:
+            metrics[k]["elapsed_s"] = round(elapsed_s / len(todo), 3)
+            atomic_write_json(manifest_path(root, stage, version, k), {
+                **header, "stage": stage, "version": version, "slice": k,
+                "slice_of": n_slices, "metrics": metrics[k],
+            }, store=store)
+        done.update(metrics)
+    return [SliceResult(k, k not in todo, done[k]) for k in range(n_slices)]
 
 
 def encode_run(
@@ -108,91 +165,38 @@ def encode_run(
     The keyspace is split into ``n_slices`` hash slices on
     ``slice_col`` (default: first sort col). ALL outstanding slices are
     encoded in ONE scan of the input: a ``__slice`` column is derived,
-    completed slices are filtered out, and the chunk table is written
-    ``partitionBy(slice_id)`` with dynamic partition overwrite — then
-    one atomic manifest per finished slice commits it. Resume = skip
-    slices whose manifest exists; a 100 TB input is never re-read once
-    per slice. On a real cluster a slice is thousands of tasks; slice
-    granularity bounds re-work after a failure without driver-side
-    bookkeeping per task.
+    completed slices are filtered out, and the chunk table is committed
+    by :func:`commit_slices`. Resume = skip slices whose manifest
+    exists; a 100 TB input is never re-read once per slice. On a real
+    cluster a slice is thousands of tasks; slice granularity bounds
+    re-work after a failure without driver-side bookkeeping per task.
+
+    Without ``partitions_per_slice`` AQE sizes the encode partitions
+    (see :func:`~.encoder.encode_partitions`).
     """
-    from .encoder import encode_partitions
+    from .encoder import CHUNK_ROWS, encode_partitions
 
-    store = store or _DEFAULT_STORE
     slice_col = slice_col or sort_cols[0]
-    out_dir = stage_dir(root, stage, version, "chunks")
+    chunk_rows = chunk_rows or CHUNK_ROWS
 
-    done, todo = slice_status(root, stage, version, n_slices, store)
-
-    elapsed_s = 0.0
-    per_slice: dict[int, dict] = {}
-    if todo:
-        t0 = time.monotonic()
-        sliced = df.withColumn(
-            "__slice",
-            F.pmod(F.hash(F.col(slice_col)), F.lit(n_slices)).cast("int"),
-        ).filter(F.col("__slice").isin([int(k) for k in todo]))
-        n_parts = (
-            partitions_per_slice * len(todo) if partitions_per_slice else None
-        )
-        from .encoder import CHUNK_ROWS
-
-        chunks = encode_partitions(
-            sliced, sort_cols=sort_cols, partitions=n_parts,
+    def build(todo: list[int]) -> DataFrame:
+        sliced = df.withColumn("__slice", slice_id_of(slice_col, n_slices)) \
+            .filter(F.col("__slice").isin(todo))
+        return encode_partitions(
+            sliced, sort_cols=sort_cols,
+            partitions=(partitions_per_slice * len(todo)
+                        if partitions_per_slice else None),
             cascade=cascade, profile=profile, slice_col="__slice",
-            chunk_rows=chunk_rows or CHUNK_ROWS,
+            chunk_rows=chunk_rows,
         )
-        (
-            chunks.write.mode("overwrite")
-            .option("compression", "none")  # our codecs own compression
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("slice_id")
-            .parquet(out_dir)
-        )
-        elapsed_s = time.monotonic() - t0
 
-        written = spark.read.parquet(out_dir).filter(
-            F.col("slice_id").isin([int(k) for k in todo]))
-        tots = {
-            int(r["slice_id"]): r
-            for r in written.groupBy("slice_id").agg(
-                F.sum(F.when(F.col("col_idx") == 0, F.col("n_rows"))
-                      .otherwise(F.lit(0))).alias("rows"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("enc_bytes").alias("enc_bytes"),
-            ).collect()
-        }
-        codec_rows = written.groupBy("slice_id", "codec").agg(
-            F.sum("enc_bytes").alias("enc")).collect()
-        by_codec: dict[int, dict] = {}
-        for r in codec_rows:
-            by_codec.setdefault(int(r["slice_id"]), {})[r["codec"]] = int(r["enc"])
-        for k in todo:
-            tot = tots.get(k)
-            per_slice[k] = {
-                "rows": int(tot["rows"] or 0) if tot else 0,
-                "raw_bytes": int(tot["raw_bytes"] or 0) if tot else 0,
-                "enc_bytes": int(tot["enc_bytes"] or 0) if tot else 0,
-                "by_codec": by_codec.get(k, {}),
-                "elapsed_s": round(elapsed_s / len(todo), 3),
-            }
-            atomic_write_json(manifest_path(root, stage, version, k), {
-                "stage": stage, "version": version, "slice": k,
-                "slice_of": n_slices, "slice_col": slice_col,
-                "sort_cols": sort_cols, "input": input_fingerprint,
-                # recorded so maintenance (compaction) judges runts
-                # against the geometry the stage was encoded with
-                "chunk_rows": chunk_rows or CHUNK_ROWS,
-                "metrics": per_slice[k],
-            }, store=store)
-
-    results: list[SliceResult] = []
-    for k in range(n_slices):
-        if k in done:
-            results.append(SliceResult(k, True, done[k]))
-        else:
-            results.append(SliceResult(k, False, per_slice[k]))
-    return results
+    return commit_slices(spark, root, stage, version, n_slices, build, {
+        "slice_col": slice_col, "sort_cols": sort_cols,
+        "input": input_fingerprint,
+        # recorded so maintenance (compaction) judges runts against the
+        # geometry the stage was encoded with
+        "chunk_rows": chunk_rows,
+    }, store)
 
 
 def read_chunks(spark: SparkSession, root: str, stage: str, version: int) -> DataFrame:

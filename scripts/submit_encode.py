@@ -54,9 +54,13 @@ def main() -> None:
     ap.add_argument("--maintain", action="store_true",
                     help="instead of encoding, run the compaction policy "
                          "gate on --stage/--version: if the runt fraction "
-                         "clears --min-runt-fraction, rewrite runts into "
-                         "version+1 (survivors pass through byte-identical)")
-    ap.add_argument("--min-runt-fraction", type=float, default=0.25)
+                         "clears --min-runt-fraction AND some slice's runts "
+                         "fit in fewer chunks, merge those runts into "
+                         "version+1 (full chunks and runts that cannot "
+                         "merge pass through byte-identical)")
+    ap.add_argument("--min-runt-fraction", type=float, default=0.25,
+                    help="floor on runt chunks / all chunks under which "
+                         "--maintain skips the rewrite")
     ap.add_argument("--consolidate", action="store_true",
                     help="major compaction: fold the wave versions a "
                          "--snapshot-table ingestion accumulated under "

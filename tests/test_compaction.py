@@ -4,12 +4,16 @@ is preserved exactly."""
 
 from __future__ import annotations
 
+import math
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from parquet_producers_spark.compaction import compact_chunks, compaction_plan
+from parquet_producers_spark.compaction import compact_chunks
 from parquet_producers_spark.datagen import source_code_df
 from parquet_producers_spark.encoder import decode_chunks, encode_partitions
+from parquet_producers_spark.storage import read_chunks
 
 N_FILES = 3000
 CHUNK = 512
@@ -34,7 +38,6 @@ def test_compaction_preserves_rows_and_reduces_chunks(spark, runty_chunks):
     before = decode_chunks(runty_chunks, ordered=False)
     compacted = compact_chunks(
         runty_chunks, sort_cols=["repo", "path"], chunk_rows=CHUNK,
-        partitions=4,
     ).localCheckpoint(eager=True)
     after = decode_chunks(compacted, ordered=False)
 
@@ -55,7 +58,6 @@ def test_compaction_preserves_rows_and_reduces_chunks(spark, runty_chunks):
 def test_compaction_passes_full_chunks_through_untouched(spark, runty_chunks):
     compacted = compact_chunks(
         runty_chunks, sort_cols=["repo", "path"], chunk_rows=CHUNK,
-        partitions=4,
     )
     full_before = {
         (r["part_id"], r["chunk_seq"], r["column"]): bytes(r["data"])
@@ -74,7 +76,6 @@ def test_compaction_passes_full_chunks_through_untouched(spark, runty_chunks):
 def test_compaction_new_part_ids_do_not_collide(spark, runty_chunks):
     compacted = compact_chunks(
         runty_chunks, sort_cols=["repo", "path"], chunk_rows=CHUNK,
-        partitions=4,
     )
     max_old = runty_chunks.agg(F.max("part_id")).first()[0]
     rewritten = compacted.filter(F.col("part_id") > max_old)
@@ -87,19 +88,6 @@ def test_compaction_new_part_ids_do_not_collide(spark, runty_chunks):
     )
     for z in zones:
         assert z["key_min"] <= z["key_max"]
-
-
-def test_compaction_plan_counts_runts_without_reading_blobs(spark, runty_chunks):
-    plan = compaction_plan(runty_chunks, runt_threshold=CHUNK)
-    rows = {r["column"]: r for r in plan.collect()}
-    assert set(rows) == {"repo", "path", "commit", "lang", "content"}
-    manifest = runty_chunks.select("column", "n_rows", "enc_bytes").collect()
-    for col in rows:
-        expect_runts = sum(
-            1 for m in manifest if m["column"] == col and m["n_rows"] < CHUNK)
-        assert rows[col]["runt_chunks"] == expect_runts
-        assert rows[col]["runt_bytes"] + rows[col]["carried_bytes"] == sum(
-            m["enc_bytes"] for m in manifest if m["column"] == col)
 
 
 def test_compaction_rejects_layout_columns(spark, runty_chunks):
@@ -132,8 +120,7 @@ def test_compact_stage_writes_new_version_with_lineage(spark, tmp_path):
     )
     v1 = read_chunks(spark, root, "code", 1).localCheckpoint(eager=True)
 
-    res = compact_stage(spark, root, "code", version=1, chunk_rows=192,
-                        partitions_per_slice=1)
+    res = compact_stage(spark, root, "code", version=1, chunk_rows=192)
     assert [r.skipped for r in res] == [False, False, False]
     assert list_versions(root, "code") == [1, 2]
     v2 = read_chunks(spark, root, "code", 2).localCheckpoint(eager=True)
@@ -169,50 +156,99 @@ def test_compact_stage_writes_new_version_with_lineage(spark, tmp_path):
     src.unpersist()
 
 
-def test_compact_if_needed_policy_gate(spark, tmp_path):
-    """Healthy table → no-op returning the same version; runty table →
-    compaction runs and the new version is returned."""
+def test_compact_if_needed_policy_gate(spark, tmp_path, caplog):
+    """Runty stage → compaction runs, the new version is returned and
+    the logged prediction is a lower chunk count; a stage with one chunk
+    per slice is all runts yet cannot merge → no-op, logged as a skip."""
+    import logging
+
     from parquet_producers_spark.compaction import compact_if_needed
-    from parquet_producers_spark.datagen import source_code_df
     from parquet_producers_spark.storage import encode_run, list_versions
 
     root = str(tmp_path)
     src = source_code_df(spark, 1500, seed=11, partitions=3).cache()
 
+    def decisions(stage):
+        return [r.getMessage() for r in caplog.records
+                if r.getMessage().startswith(f"compaction {stage} v=1")]
+
     # runty: chunk_rows=192 leaves a ~58-row runt per partition
     encode_run(spark, src, root, "runty", version=1,
                sort_cols=["repo", "path"], n_slices=3, chunk_rows=192,
                partitions_per_slice=2)
-    assert compact_if_needed(spark, root, "runty", 1, chunk_rows=192,
-                             partitions_per_slice=1) == 2
+    with caplog.at_level(logging.INFO, logger="parquet_producers_spark"):
+        assert compact_if_needed(spark, root, "runty", 1,
+                                 chunk_rows=192) == 2
     assert list_versions(root, "runty") == [1, 2]
+    [ran] = decisions("runty")
+    assert "rewrite ran" in ran
+    before, after = (int(x) for x in re.search(
+        r"chunks (\d+) -> (\d+) predicted", ran).groups())
+    assert after < before
 
-    # healthy: huge chunk_rows → one sub-threshold chunk per partition is
-    # inevitable, but lower the runt bar so the fraction stays under it
-    encode_run(spark, src, root, "healthy", version=1,
-               sort_cols=["repo", "path"], n_slices=3, chunk_rows=192,
-               partitions_per_slice=2)
-    assert compact_if_needed(spark, root, "healthy", 1, chunk_rows=192,
-                             runt_threshold=8) == 1
-    assert list_versions(root, "healthy") == [1]
+    # one chunk per slice: every chunk is a runt, nothing can merge (a
+    # few hundred rows, so AQE coalesces the encode to one partition)
+    small = source_code_df(spark, 300, seed=11, partitions=3)
+    encode_run(spark, small, root, "single", version=1,
+               sort_cols=["repo", "path"], n_slices=3, chunk_rows=1024)
+    ids = read_chunks(spark, root, "single", 1).select(
+        "slice_id", "part_id", "chunk_seq").distinct()
+    assert ids.count() == 3
+    with caplog.at_level(logging.INFO, logger="parquet_producers_spark"):
+        assert compact_if_needed(spark, root, "single", 1) == 1
+    assert list_versions(root, "single") == [1]
+    [skipped] = decisions("single")
+    assert "skipped" in skipped and "chunks 3 -> 3 predicted" in skipped
     src.unpersist()
 
 
-def test_compact_chunks_noop_on_healthy_table(spark, runty_chunks):
-    """A table with zero runts (the steady state after a compaction):
-    compact_chunks returns it unchanged instead of crashing on the
-    empty runt set's decode."""
-    from parquet_producers_spark.compaction import compact_chunks
+def test_compact_chunks_noop_on_healthy_table(spark):
+    """A healthy table — its only runt is the trailing chunk, so no
+    rewrite can lower the chunk count: compact_chunks returns it
+    unchanged, without a decode."""
+    src = source_code_df(spark, 300, seed=7, partitions=2)
+    chunks = encode_partitions(
+        src, sort_cols=["repo", "path"], partitions=1, chunk_rows=64,
+    ).localCheckpoint(eager=True)
+    assert chunks.filter(F.col("n_rows") < 64).select(
+        "chunk_seq").distinct().count() == 1
 
-    # the fixture's chunks all hold ≥200 rows, so against a 200-row
-    # runt bar the table is healthy and the runt set is empty
-    assert runty_chunks.filter(F.col("n_rows") < 200).count() == 0
+    out = compact_chunks(chunks, sort_cols=["repo", "path"], chunk_rows=64)
+    assert out is chunks
 
-    out = compact_chunks(runty_chunks, sort_cols=["repo", "path"],
-                         chunk_rows=CHUNK, runt_threshold=200)
-    assert out.count() == runty_chunks.count()
-    max_pid = runty_chunks.agg(F.max("part_id")).first()[0]
-    assert out.filter(F.col("part_id") > max_pid).count() == 0  # no rewrites
+
+def test_compact_stage_leaves_ceil_runt_rows_chunks_per_slice(
+        spark, tmp_path):
+    """Runts of every slice merge into ⌈runt_rows / chunk_rows⌉ chunks:
+    the AQE-sized re-encode keeps a small slice's runts in one
+    partition, so a compaction that runs always lowers the chunk count."""
+    from parquet_producers_spark.compaction import compact_stage
+    from parquet_producers_spark.storage import encode_run
+
+    root = str(tmp_path)
+    src = source_code_df(spark, 300, seed=3, partitions=2)
+    encode_run(spark, src, root, "code", version=1,
+               sort_cols=["repo", "path"], n_slices=2, chunk_rows=128,
+               partitions_per_slice=4)
+
+    def per_slice(version):
+        out = {}
+        for r in read_chunks(spark, root, "code", version).select(
+                "slice_id", "part_id", "chunk_seq", "n_rows"
+        ).distinct().collect():
+            out.setdefault(r.slice_id, []).append(r.n_rows)
+        return out
+
+    before = per_slice(1)
+    compact_stage(spark, root, "code", 1)
+    after = per_slice(2)
+    assert sorted(after) == sorted(before) == [0, 1]
+    for s, sizes in before.items():
+        runt_rows = sum(n for n in sizes if n < 128)
+        full = sum(1 for n in sizes if n >= 128)
+        assert len(sizes) > full + math.ceil(runt_rows / 128)
+        assert len(after[s]) == full + math.ceil(runt_rows / 128)
+        assert sum(after[s]) == sum(sizes)
 
 
 def test_compact_if_needed_uses_manifest_chunk_rows(spark, tmp_path):
@@ -239,8 +275,7 @@ def test_compact_if_needed_uses_manifest_chunk_rows(spark, tmp_path):
 
     # no chunk_rows argument: geometry comes from the manifest (192),
     # the runty stage compacts, and the rewrite keeps 192-row chunks
-    assert compact_if_needed(spark, root, "code", 1,
-                             partitions_per_slice=1) == 2
+    assert compact_if_needed(spark, root, "code", 1) == 2
     v2 = read_chunks(spark, root, "code", 2)
     assert v2.agg(F.max("n_rows")).first()[0] <= 192
     with open(manifest_path(root, "code", 2, 0)) as f:
@@ -263,7 +298,7 @@ def test_compaction_multiset_parametrized(spark, n_docs, chunk, parts):
         src, sort_cols=["repo", "path"], partitions=parts, chunk_rows=chunk,
     ).localCheckpoint(eager=True)
     comp = compact_chunks(
-        chunks, sort_cols=["repo", "path"], chunk_rows=chunk, partitions=2,
+        chunks, sort_cols=["repo", "path"], chunk_rows=chunk,
     ).localCheckpoint(eager=True)
     assert _multiset(decode_chunks(comp, ordered=False)) == \
         _multiset(decode_chunks(chunks, ordered=False))

@@ -486,6 +486,31 @@ def test_incremental_wave_with_maintenance(spark, tmp_path):
     assert digest(decoded) == digest(read_snapshot(spark, t))
 
 
+def test_maintained_wave_with_one_chunk_per_slice_is_not_rewritten(
+        spark, tmp_path):
+    """A small wave encodes into one chunk per slice (AQE coalesces its
+    range exchange), so its runts cannot merge: maintain=True must not
+    write a v=N+1 that holds the same chunks."""
+    from parquet_producers_spark.datagen import source_code_df
+    from parquet_producers_spark.sources.snapshots import (
+        encode_table_incremental,
+    )
+    from parquet_producers_spark.storage import list_versions, read_chunks
+
+    t = str(tmp_path / "tbl")
+    enc = str(tmp_path / "enc")
+    commit_snapshot(
+        spark, source_code_df(spark, 200, seed=17, partitions=2), t)
+    w = encode_table_incremental(
+        spark, t, enc, "code", sort_cols=["repo", "path"], n_slices=2,
+        maintain=True)
+    assert w["version"] == 1 and "compacted_from" not in w
+    assert list_versions(enc, "code") == [1]
+    ids = read_chunks(spark, enc, "code", 1).select(
+        "slice_id", "part_id", "chunk_seq").distinct()
+    assert ids.count() == 2
+
+
 def test_zero_row_first_wave_reader_contract(spark, tmp_path):
     """A zero-row FIRST wave still writes the snapshot map (with the
     covered marker), so read_encoded_table returns a typed empty frame

@@ -74,3 +74,34 @@ def test_manifest_contents(spark, tmp_path):
     assert m["metrics"]["enc_bytes"] > 0
     assert m["metrics"]["by_codec"]
     assert res[0].metrics["elapsed_s"] > 0
+
+
+def test_encode_run_lets_aqe_size_the_range_exchange(spark, tmp_path,
+                                                     monkeypatch):
+    """Without partitions_per_slice the encode's range exchange carries
+    no partition count (REPARTITION_BY_COL, which AQE may coalesce); an
+    explicit count is kept exactly (REPARTITION_BY_NUM)."""
+    from parquet_producers_spark import encoder
+
+    encode_partitions = encoder.encode_partitions
+    built = []
+
+    def spy(*args, **kwargs):
+        built.append(encode_partitions(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(encoder, "encode_partitions", spy)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    src = source_code_df(spark, 200, seed=9, partitions=2)
+    encode_run(spark, src, str(tmp_path), "code", version=1,
+               sort_cols=["repo", "path"], n_slices=2)
+    auto = plan(built[-1])
+    assert "rangepartitioning" in auto and "REPARTITION_BY_COL" in auto
+    assert "REPARTITION_BY_NUM" not in auto
+
+    fixed = plan(encode_partitions(src, sort_cols=["repo", "path"],
+                                  partitions=6))
+    assert "REPARTITION_BY_NUM" in fixed and ", 6)" in fixed

@@ -70,7 +70,8 @@ def test_spark_submit_pyfiles_encode_and_resume(spark, tmp_path):
 
     # maintenance leg: no --chunk-rows — geometry comes from the v=1
     # manifests (default 65536), against which the 500-row stage is
-    # 100% runt chunks, so the policy gate fires and v=2 appears
+    # 100% runt chunks; but AQE encoded it as one chunk per slice, so no
+    # runts can merge and the gate writes no v=2
     mcmd = [
         _spark_submit(), "--master", "local[4]",
         "--py-files", zip_path,
@@ -84,8 +85,8 @@ def test_spark_submit_pyfiles_encode_and_resume(spark, tmp_path):
     assert r3.returncode == 0, r3.stderr[-3000:]
     m3 = json.loads([ln for ln in r3.stdout.splitlines()
                      if ln.startswith("{")][-1])
-    assert m3["compacted"] == 1 and m3["read_version"] == 2
-    assert os.path.isdir(os.path.join(out_root, "docs", "v=2", "chunks"))
+    assert m3["compacted"] == 0 and m3["read_version"] == 1
+    assert not os.path.exists(os.path.join(out_root, "docs", "v=2"))
 
 
 @pytest.mark.skipif(not shutil.which("java"), reason="needs a JVM")
