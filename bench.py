@@ -421,7 +421,11 @@ def sorted_read_probe(src_path: str, work: str, cores: int = None) -> dict:
     supporting evidence."""
     import glob
 
-    from parquet_producers_spark.encoder import decode_chunks, encode_files
+    from parquet_producers_spark.encoder import (
+        chunk_stats,
+        decode_chunks,
+        encode_files,
+    )
     from parquet_producers_spark.session import get_spark
     from parquet_producers_spark.sortedread import read_sorted
 
@@ -437,8 +441,7 @@ def sorted_read_probe(src_path: str, work: str, cores: int = None) -> dict:
         chunks = encode_files(
             spark, subset, key_col="repo", profile="fast", chunk_rows=4096
         ).localCheckpoint()  # materialize: both reads start from chunks
-        n_rows = int(chunks.where("col_idx = 0").selectExpr(
-            "sum(n_rows)").first()[0])
+        n_rows = chunk_stats(chunks, chunk_rows=4096)[0]["rows"]
 
         t0 = time.monotonic()
         read_sorted(chunks, "repo", n_ranges=cores * 2).write.mode(

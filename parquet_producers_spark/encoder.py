@@ -30,6 +30,7 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .codecs import column_stats, decode_array
 from .codecs.select import encode_auto
@@ -65,6 +66,72 @@ CHUNK_SPARK_SCHEMA = (
     " n_rows long, raw_bytes long, enc_bytes long,"
     " key_min string, key_max string, col_min string, col_max string, data binary"
 )
+# a stored stage's chunk table (storage.py): its hash slice is layout
+SLICED_CHUNK_SCHEMA = CHUNK_SPARK_SCHEMA + ", slice_id int"
+
+
+def chunk_ident(chunks: DataFrame) -> list[str]:
+    """A chunk's identity: the layout columns a store adds around the
+    chunk table (``slice_id``, ``enc_version``, …) + ``(part_id,
+    chunk_seq)``. Every column of :data:`CHUNK_ARROW_SCHEMA` is one
+    chunk×column row's own; any other column is layout."""
+    layout = [c for c in chunks.columns if c not in CHUNK_ARROW_SCHEMA.names]
+    return layout + ["part_id", "chunk_seq"]
+
+
+def chunk_fields(chunks: DataFrame) -> list[pa.Field]:
+    """The decoded rows' Arrow fields, in column order, from the type
+    name each column stores in its params. Blobs are projected away
+    first: a checkpointed chunk frame would otherwise re-scan them."""
+    heads = (
+        chunks.drop("data").groupBy("col_idx", "column")
+        .agg(F.first("params").alias("params"))
+        .orderBy("col_idx")
+        .collect()
+    )
+    if not heads:
+        raise ValueError("empty chunk table")
+    return [
+        pa.field(r["column"], _arrow_type(json.loads(r["params"])["atype"]))
+        for r in heads
+    ]
+
+
+def chunk_stats(chunks: DataFrame, chunk_rows: int,
+                slices: list[int] | None = None) -> dict[int, dict]:
+    """Per-slice chunk stats in ONE blob-free aggregate grouped on
+    ``(slice_id, codec)``: ``rows``, ``raw_bytes``, ``enc_bytes``,
+    ``n_chunks``, ``by_codec``, the runts (``n_rows < chunk_rows``) as
+    ``runts`` / ``runt_rows``, and ``max_pid`` (-1 when empty). With
+    ``slices`` each listed slice gets an entry; without, the whole
+    frame is slice 0."""
+    head = F.col("col_idx") == 0  # one row per chunk
+    runt = head & (F.col("n_rows") < chunk_rows)
+    by = ["slice_id"] if slices is not None else []
+    if by:
+        chunks = chunks.filter(F.col("slice_id").isin(slices))
+    summed = ("rows", "raw_bytes", "enc_bytes", "n_chunks", "runts",
+              "runt_rows")
+
+    def zero() -> dict:
+        return dict.fromkeys(summed, 0) | {"by_codec": {}, "max_pid": -1}
+
+    out = {k: zero() for k in slices or []}
+    for r in chunks.groupBy(*by, "codec").agg(
+        F.sum(F.when(head, F.col("n_rows")).otherwise(0)).alias("rows"),
+        F.sum("raw_bytes").alias("raw_bytes"),
+        F.sum("enc_bytes").alias("enc_bytes"),
+        F.sum(head.cast("int")).alias("n_chunks"),
+        F.sum(runt.cast("int")).alias("runts"),
+        F.sum(F.when(runt, F.col("n_rows")).otherwise(0)).alias("runt_rows"),
+        F.max("part_id").alias("max_pid"),
+    ).collect():
+        m = out.setdefault(int(r["slice_id"]) if by else 0, zero())
+        for f in summed:
+            m[f] += int(r[f])
+        m["max_pid"] = max(m["max_pid"], int(r["max_pid"]))
+        m["by_codec"][r["codec"]] = int(r["enc_bytes"])
+    return out
 
 
 def _col_zone(arr: pa.Array) -> tuple[str | None, str | None]:
@@ -270,7 +337,7 @@ def encode_partitions(
         df = df.repartition(partitions)
 
     key_col = key_col or (sort_cols[0] if sort_cols else None)
-    out_schema = CHUNK_SPARK_SCHEMA + (", slice_id int" if slice_col else "")
+    out_schema = SLICED_CHUNK_SCHEMA if slice_col else CHUNK_SPARK_SCHEMA
 
     def _with_slice(rb: pa.RecordBatch, slice_val) -> pa.RecordBatch:
         if slice_col is None:
@@ -476,6 +543,40 @@ def encode_files(
     return fdf.mapInArrow(enc, schema=CHUNK_SPARK_SCHEMA)
 
 
+def _py(v):
+    return v.as_py() if hasattr(v, "as_py") else v
+
+
+def assemble_chunk(tin: pa.Table, rows, schema: pa.Schema) -> pa.Table:
+    """Decode ONE chunk — its chunk×column rows ``rows`` of a grouped
+    decode's Arrow input ``tin`` — into a table of ``schema``. The loop
+    runs over ≤ n_cols metadata rows, never data rows."""
+    colc, datac, parc = (tin.column("column"), tin.column("data"),
+                         tin.column("params"))
+    arrays = {_py(colc[i]): decode_array(_py(datac[i]),
+                                         json.loads(_py(parc[i])))
+              for i in rows}
+    return pa.table([arrays[f.name] for f in schema], schema=schema)
+
+
+def tagged_output(tag: pa.Field, fields: list[pa.Field]):
+    """``(spark_ddl, emit)`` for a grouped decode (applyInArrow) whose
+    output is a constant ``tag`` column followed by the decoded
+    ``fields``: ``emit(value, data)`` prepends the tag and casts to the
+    types Spark expects back over the Arrow boundary."""
+    out_schema = pa.schema([tag] + fields)
+    out_emit = pa.schema([pa.field(f.name, _emit_type(f.type))
+                          for f in out_schema])
+    ddl = ", ".join(f"{f.name} {_spark_type(f.type)}" for f in out_schema)
+
+    def emit(value, data: pa.Table) -> pa.Table:
+        tbl = data.add_column(
+            0, tag, pa.repeat(pa.scalar(value, tag.type), data.num_rows))
+        return tbl if out_schema == out_emit else tbl.cast(out_emit)
+
+    return ddl, emit
+
+
 def decode_chunks(chunks: DataFrame, ordered: bool = False) -> DataFrame:
     """Inverse of :func:`encode_partitions`: chunk table → original rows.
 
@@ -484,68 +585,24 @@ def decode_chunks(chunks: DataFrame, ordered: bool = False) -> DataFrame:
     global row order of the sorted encode is reproduced — this is a TOTAL
     SORT of the decoded output and therefore the expensive path at scale;
     it defaults off. Consumers that need at-rest order re-sort by their
-    own key (as compaction already does, compaction.py:69-74).
+    own key (as compaction already does).
     """
-    from pyspark.sql import functions as F
-
-    # recover the original column schema from the stored arrow type
-    # names — blobs projected away first: over a checkpointed chunk
-    # frame this job would otherwise re-scan the full data bytes
-    # (checkpoint rows are materialized whole; pruning can't skip them)
-    heads = (
-        chunks.drop("data").groupBy("col_idx", "column")
-        .agg(F.first("params").alias("params"))
-        .orderBy("col_idx")
-        .collect()
-    )
-    if not heads:
-        raise ValueError("empty chunk table")
-    fields = [
-        pa.field(r["column"], _arrow_type(json.loads(r["params"])["atype"]))
-        for r in heads
-    ]
-    # a chunk is identified by (any layout partition cols, part_id, chunk_seq)
-    layout_cols = [
-        c for c in chunks.columns
-        if c not in {f.name for f in CHUNK_ARROW_SCHEMA}
-    ]
-    group_cols = layout_cols + ["part_id", "chunk_seq"]
-    out_schema = pa.schema(
-        [pa.field("__ord", pa.int64())] + fields
-    )
-    out_emit = emit_schema(list(out_schema))
-    spark_schema = ", ".join(
-        ["__ord long"] + [f"{f.name} {_spark_type(f.type)}" for f in fields]
-    )
-    col_names = [f.name for f in fields]
+    fields = chunk_fields(chunks)
+    data_schema = pa.schema(fields)
+    ddl, emit = tagged_output(pa.field("__ord", pa.int64()), fields)
 
     def dec(key, tin):
         # ARROW-NATIVE grouped decode (applyInArrow): blobs arrive and
         # decoded columns leave as Arrow — no pandas object conversion
-        # in either direction
-        import numpy as np
-
-        def _py(v):
-            return v.as_py() if hasattr(v, "as_py") else v
-
-        # dense per-chunk ordinal: layout cols are small ints (slice ids)
+        # in either direction. Dense per-chunk ordinal: layout cols are
+        # small ints (slice ids)
         ordv = 0
         for k in key:
             ordv = ordv * 1_000_000 + int(_py(k))
-        arrays = {}
-        colc, datac, parc = (tin.column("column"), tin.column("data"),
-                             tin.column("params"))
-        for i in range(tin.num_rows):  # ≤ n_cols rows, not data rows
-            arrays[_py(colc[i])] = decode_array(
-                _py(datac[i]), json.loads(_py(parc[i]))
-            )
-        n = len(next(iter(arrays.values())))
-        cols = [pa.array(np.full(n, ordv, np.int64))]
-        cols += [arrays[c] for c in col_names]
-        tbl = pa.table(cols, schema=out_schema)
-        return tbl if out_schema == out_emit else tbl.cast(out_emit)
+        return emit(ordv, assemble_chunk(tin, range(tin.num_rows),
+                                         data_schema))
 
-    out = chunks.groupBy(*group_cols).applyInArrow(dec, schema=spark_schema)
+    out = chunks.groupBy(*chunk_ident(chunks)).applyInArrow(dec, schema=ddl)
     if ordered:
         out = out.orderBy("__ord")
     return out.drop("__ord")
@@ -617,18 +674,11 @@ def _emit_type(t: pa.DataType) -> pa.DataType:
     return t
 
 
-def emit_schema(fields: "list[pa.Field]") -> pa.Schema:
-    """Schema for tables RETURNED over the applyInArrow boundary."""
-    return pa.schema([pa.field(f.name, _emit_type(f.type)) for f in fields])
-
-
 def project_chunks(chunks: DataFrame, columns: list[str]) -> DataFrame:
     """Column pruning on the encoded format: keep only the requested
     columns' chunk rows — blobs of other columns are never read past
     the parquet row-group filter (the chunk table's analogue of
     ``ReadSchema`` pruning)."""
-    from pyspark.sql import functions as F
-
     return chunks.filter(F.col("column").isin(columns))
 
 
@@ -639,8 +689,6 @@ def prune_chunks(chunks: DataFrame, key_lo: str | None = None,
     filter is a plain predicate on two small string columns, so Spark
     pushes it into the parquet scan of the chunk table — blobs of
     pruned chunks are never decoded."""
-    from pyspark.sql import functions as F
-
     out = chunks
     if key_lo is not None:
         out = out.filter(F.col("key_max") >= key_lo)
@@ -669,18 +717,12 @@ def prune_chunks_on(chunks: DataFrame, column: str, lo=None, hi=None,
     chunks) are dropped — correct for range predicates, which never
     match nulls.
     """
-    from pyspark.sql import functions as F
-
     stats = chunks.filter(F.col("column") == column)
     if lo is not None:
         stats = stats.filter(F.col("col_max").cast(cast) >= lo)
     if hi is not None:
         stats = stats.filter(F.col("col_min").cast(cast) <= hi)
-    layout_cols = [
-        c for c in chunks.columns
-        if c not in {f.name for f in CHUNK_ARROW_SCHEMA}
-    ]
-    ident = layout_cols + ["part_id", "chunk_seq"]
+    ident = chunk_ident(chunks)
     return chunks.join(stats.select(*ident).distinct(), ident, "left_semi")
 
 
@@ -705,13 +747,7 @@ def prune_chunks_eq(chunks: DataFrame, column: str, value) -> DataFrame:
     being dropped. ~1.2% false-positive rate at the build parameters;
     false positives cost one extra chunk decode, false negatives cannot
     happen (crc32 double-hashing is process-stable)."""
-    from pyspark.sql import functions as F
-
-    layout_cols = [
-        c for c in chunks.columns
-        if c not in {f.name for f in CHUNK_ARROW_SCHEMA}
-    ]
-    ident = layout_cols + ["part_id", "chunk_seq"]
+    ident = chunk_ident(chunks)
     # probe a NARROW manifest projection (identity + params only): the
     # blobs must never ship JVM→Python just to read their params JSON
     stats = chunks.filter(F.col("column") == column).select(*ident, "params")
@@ -737,8 +773,6 @@ def manifest_aggregate(chunks: DataFrame, column: str,
     Null zones (all-null chunks) don't contribute to min/max, matching
     SQL aggregate semantics; `n_rows` counts every row including nulls,
     matching COUNT(*)."""
-    from pyspark.sql import functions as F
-
     return (
         chunks.filter(F.col("column") == column)
         .agg(F.sum("n_rows").alias("count_rows"),
@@ -829,8 +863,6 @@ def _spill_range_pruned(spark, df, spill_dir: str,
     field smallest, matching ``asc_nulls_first`` — verified in tests,
     not assumed).
     """
-    from pyspark.sql import functions as F
-
     # cut points: per-partition max of a range-partitioned 1/64 SAMPLE
     # of the key frame — ONE extra job, column-pruned scan, tiny
     # shuffle (shuffling every key, or adding a count() pass to size an
@@ -984,8 +1016,6 @@ def read_where(
 
     Null semantics match SQL: range and equality predicates never match
     null values."""
-    from pyspark.sql import functions as F
-
     out = chunks
     if key_range is not None:
         out = prune_chunks(out, key_lo=key_range[0], key_hi=key_range[1])

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..datagen import _splitmix64
 
@@ -102,8 +102,16 @@ def cosine_topk(
     dot/norm (see :func:`_dot_sql`)."""
     from pyspark.sql import Window
 
-    nrm = ((lambda col: F.expr(_norm_sql(col, dim))) if dim
-           else (lambda col: _norm(F.col(col))))
+    def nrm(col: str) -> Column:
+        if not dim:
+            return _norm(F.col(col))
+        # fixed-width terms would score a shorter vector NULL and a
+        # longer one on its first ``dim`` elements: fail instead
+        ok = F.col(col).isNull() | (F.size(col) == dim)
+        return F.coalesce(F.assert_true(
+            ok, f"cosine_topk: a {col} vector's size is not dim={dim}"),
+            F.expr(_norm_sql(col, dim)))
+
     c = corpus.select(F.col(id_col).alias("nbr_id"),
                       F.col(vec_col).alias("nbr_vec"),
                       nrm(vec_col).alias("__nbr_norm"))

@@ -60,7 +60,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .encoder import CHUNK_ARROW_SCHEMA, _arrow_type, _spark_type
+from .encoder import _spark_type, chunk_fields, chunk_ident
 
 # Above this many chunks, cut selection runs distributed (see
 # plan_key_ranges). Mirrors the inline-vs-sharded manifest threshold
@@ -71,14 +71,6 @@ PLAN_COLLECT_THRESHOLD = 32768
 # rows most recently materialized onto the driver by plan_key_ranges —
 # pinned by tests to prove planning collects O(ranges), not O(chunks)
 LAST_PLAN_COLLECTED = 0
-
-
-def _ident_cols(chunks: DataFrame) -> list[str]:
-    """A chunk's identity: any layout columns (slice_id, enc_version,
-    …) + (part_id, chunk_seq) — same rule decode_chunks uses."""
-    layout = [c for c in chunks.columns
-              if c not in {f.name for f in CHUNK_ARROW_SCHEMA}]
-    return layout + ["part_id", "chunk_seq"]
 
 
 def _zone_sql_type(key_spark_type: str) -> str | None:
@@ -151,7 +143,7 @@ def plan_key_ranges(
     default (scalar cuts) is unchanged."""
     global LAST_PLAN_COLLECTED
     spark = chunks.sparkSession
-    ident = _ident_cols(chunks)
+    ident = chunk_ident(chunks)
     cast_t = key_type or "string"
     zones = (
         chunks.groupBy(*ident)
@@ -311,11 +303,9 @@ def read_sorted(
     rows never shuffle. Each range decodes + merges wholly inside its
     group task, then ``sortWithinPartitions`` orders without an
     exchange (ranges are already whole in their partition)."""
-    import json
-
     import pyarrow as pa
 
-    from .encoder import decode_array, emit_schema
+    from .encoder import _py, assemble_chunk, tagged_output
 
     spark = chunks.sparkSession
     # planning runs 3-4 metadata jobs; over a checkpointed chunk frame
@@ -325,20 +315,11 @@ def read_sorted(
     # it reads metadata-only rows. The MAIN plan below still builds on
     # ``chunks`` directly, so the one-blob-exchange shape is unchanged.
     meta = chunks.drop("data").localCheckpoint(eager=False)
-    heads = (
-        meta.groupBy("col_idx", "column")
-        .agg(F.first("params").alias("params"))
-        .orderBy("col_idx")
-        .collect()
-    )
-    fields = [
-        pa.field(r["column"], _arrow_type(json.loads(r["params"])["atype"]))
-        for r in heads
-    ]
-    col_names = [f.name for f in fields]
-    if key not in col_names:
-        raise ValueError(f"key column {key!r} not in store ({col_names})")
-    key_arrow = dict(zip(col_names, fields))[key].type
+    fields = chunk_fields(meta)
+    types = {f.name: f.type for f in fields}
+    if key not in types:
+        raise ValueError(f"key column {key!r} not in store ({list(types)})")
+    key_arrow = types[key]
     if pa.types.is_binary(key_arrow) or pa.types.is_large_binary(key_arrow):
         # the encoder stringifies zones via str(bytes) (Python repr:
         # "b'x'") while the task-side exact filter would cast the Arrow
@@ -370,7 +351,7 @@ def read_sorted(
     # known upgrade path if that regime ever becomes real.
     ranges = plan_key_ranges(meta, n_ranges, key_type=zone_t,
                              tiebreak=True)
-    ident = _ident_cols(chunks)
+    ident = chunk_ident(chunks)
 
     # assignment = broadcast theta-join of the chunk rows against the
     # tiny range list on zone overlap (chunk [key_min,key_max] ∩ range
@@ -424,11 +405,7 @@ def read_sorted(
     # onto one task, which reassembles every overlapping chunk,
     # bound-filters, and concatenates the runs
     data_schema = pa.schema(fields)
-    out_schema = pa.schema([pa.field("range_id", pa.int32())] + fields)
-    out_emit = emit_schema(list(out_schema))
-    spark_schema = ", ".join(
-        ["range_id int"]
-        + [f"{f.name} {_spark_type(f.type)}" for f in fields])
+    ddl, emit = tagged_output(pa.field("range_id", pa.int32()), fields)
     as_string = zone_t is None and not pa.types.is_string(key_arrow) \
         and not pa.types.is_large_string(key_arrow)
 
@@ -437,11 +414,7 @@ def read_sorted(
         # decoded columns leave as Arrow — no pandas object conversion
         # in either direction (to_pandas on decoded strings was the
         # single largest cost of the pandas variant)
-        import numpy as np
         import pyarrow.compute as pc
-
-        def _py(v):
-            return v.as_py() if hasattr(v, "as_py") else v
 
         # gkey = (range_id, lo, lo_tb, hi, hi_tb)
         rid = int(_py(gkey[0]))
@@ -457,19 +430,11 @@ def read_sorted(
             ck = tuple(_py(c[i]) for c in ident_cols)
             by_chunk.setdefault(ck, []).append(i)
             chunk_tb[ck] = _py(tbc[i])
-        colc, datac, parc = (tin.column("column"), tin.column("data"),
-                             tin.column("params"))
         cmp_t = pa.string() if as_string else key_arrow
         tables = []
         for ck, rows in by_chunk.items():
             ctb = chunk_tb[ck]
-            arrays = {
-                _py(colc[i]): decode_array(
-                    _py(datac[i]), json.loads(_py(parc[i])))
-                for i in rows
-            }
-            tbl = pa.table([arrays[c] for c in col_names],
-                           schema=data_schema)
+            tbl = assemble_chunk(tin, rows, data_schema)
             ks = tbl.column(key)
             if as_string:
                 ks = pc.cast(ks, pa.string())
@@ -509,15 +474,11 @@ def read_sorted(
                     pc.is_null(ks), below_hi()))
             if tbl.num_rows:
                 tables.append(tbl)
-        data = (pa.concat_tables(tables) if tables
-                else data_schema.empty_table())
-        cols = [pa.array(np.full(data.num_rows, rid, np.int32))]
-        cols += [data.column(c) for c in col_names]
-        tbl = pa.table(cols, schema=out_schema)
-        return tbl if out_schema == out_emit else tbl.cast(out_emit)
+        return emit(rid, pa.concat_tables(tables) if tables
+                    else data_schema.empty_table())
 
     out = fat.groupBy("range_id", "lo", "lo_tb",
-                      "hi", "hi_tb").applyInArrow(dec, schema=spark_schema)
+                      "hi", "hi_tb").applyInArrow(dec, schema=ddl)
     # partition-local sort, NO exchange: every range is whole inside
     # its group's partition, so (range_id, key) order within partitions
     # + range tiling = global key order across ranges in id order

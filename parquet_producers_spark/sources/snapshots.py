@@ -1141,8 +1141,7 @@ def encode_table_incremental(
 
         new_v = compact_if_needed(
             spark, enc_root, stage, version,
-            min_runt_fraction=min_runt_fraction,
-            chunk_rows=encode_kw.get("chunk_rows"))
+            min_runt_fraction=min_runt_fraction)
         if new_v != version:
             wave = {"version": new_v, "snapshot": latest,
                     "compacted_from": version}
@@ -1174,7 +1173,7 @@ def read_encoded_table(
     pruning / union code works unchanged from before the first byte."""
     from pyspark.sql import functions as F
 
-    from ..encoder import CHUNK_ARROW_SCHEMA, _spark_type
+    from ..encoder import SLICED_CHUNK_SCHEMA
     from ..storage import read_chunks
 
     store = store or LocalStore()
@@ -1182,10 +1181,8 @@ def read_encoded_table(
     smap = (store.read_json(map_path) if store.exists(map_path)
             else {"waves": []})
     if not smap["waves"]:
-        ddl = ", ".join(
-            f"`{f.name}` {_spark_type(f.type)}" for f in CHUNK_ARROW_SCHEMA
-        ) + ", `slice_id` int, `enc_version` int"
-        return spark.createDataFrame([], schema=ddl)
+        return spark.createDataFrame(
+            [], schema=SLICED_CHUNK_SCHEMA + ", enc_version int")
     frames = [
         read_chunks(spark, enc_root, stage, w["version"])
         .withColumn("enc_version", F.lit(int(w["version"])))

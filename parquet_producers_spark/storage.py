@@ -10,13 +10,19 @@ Spark shape: a stage version is a directory
 ``{root}/{stage}/v={N}/{table}/`` holding parquet, plus
 ``{root}/{stage}/v={N}/_manifest/slice={K}.json`` — one JSON manifest
 per completed *slice* (a hash-bucket of the keyspace). Each manifest
-records lineage (input fingerprint, slice spec) and metrics (rows,
-raw/encoded bytes, per-codec counts, elapsed) and is written atomically
-(tmp + rename), so a killed run resumes by skipping exactly the slices
-whose manifests exist. A resumed run recomputes the remaining slices
-from the same deterministic input, so the decoded CONTENT of every
-slice is identical to an uninterrupted run (chunk boundaries may
-differ — the format's identity is row values, not blob bytes).
+records lineage (input fingerprint, slice spec, ``chunk_rows``) and is
+written atomically (tmp + rename), so a killed run resumes by skipping
+exactly the slices whose manifests exist. Its ``metrics`` are the
+slice's chunk stats, counted once at commit (``encoder.chunk_stats``)
+and read by compaction instead of a recount: ``rows``, ``raw_bytes``,
+``enc_bytes``, ``n_chunks``, ``by_codec`` (encoded bytes per codec),
+``runts`` / ``runt_rows`` (chunks under ``chunk_rows``, their rows),
+``max_pid`` (largest ``part_id``, -1 if empty) and ``elapsed_s``.
+
+A resumed run recomputes the remaining slices from the same
+deterministic input, so the decoded CONTENT of every slice is identical
+to an uninterrupted run (chunk boundaries may differ — the format's
+identity is row values, not blob bytes).
 
 All metadata I/O goes through a :class:`~.filestore.FileStore`
 (reference seam ``IPersistentStreams``): pass
@@ -35,6 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .encoder import SLICED_CHUNK_SCHEMA, chunk_stats
 from .filestore import FileStore, LocalStore
 
 _DEFAULT_STORE = LocalStore()
@@ -95,8 +102,9 @@ def commit_slices(
     Slices whose manifest already exists are skipped (resume). For the
     rest, ``build(todo)`` returns a chunk frame carrying ``slice_id``; it
     is written ``partitionBy(slice_id)`` with dynamic partition
-    overwrite, read back in ONE grouped aggregate, and each slice commits
-    by an atomic manifest of ``header`` plus its slice id and metrics.
+    overwrite, read back in ONE grouped aggregate (runts are judged
+    against ``header["chunk_rows"]``), and each slice commits by an
+    atomic manifest of ``header`` plus its slice id and metrics.
     """
     store = store or _DEFAULT_STORE
     done: dict[int, dict] = {}
@@ -117,23 +125,8 @@ def commit_slices(
             .parquet(out_dir)
         )
         elapsed_s = time.monotonic() - t0
-        head = F.col("col_idx") == 0  # one row per chunk
-        metrics = {k: {"rows": 0, "raw_bytes": 0, "enc_bytes": 0,
-                       "n_chunks": 0, "by_codec": {}} for k in todo}
-        for r in (
-            spark.read.parquet(out_dir).filter(F.col("slice_id").isin(todo))
-            .groupBy("slice_id", "codec").agg(
-                F.sum(F.when(head, F.col("n_rows")).otherwise(0))
-                .alias("rows"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("enc_bytes").alias("enc_bytes"),
-                F.sum(head.cast("int")).alias("n_chunks"),
-            ).collect()
-        ):
-            m = metrics[int(r["slice_id"])]
-            for f in ("rows", "raw_bytes", "enc_bytes", "n_chunks"):
-                m[f] += int(r[f])
-            m["by_codec"][r["codec"]] = int(r["enc_bytes"])
+        metrics = chunk_stats(read_chunks(spark, root, stage, version),
+                              int(header["chunk_rows"]), todo)
         for k in todo:
             metrics[k]["elapsed_s"] = round(elapsed_s / len(todo), 3)
             atomic_write_json(manifest_path(root, stage, version, k), {
@@ -200,4 +193,7 @@ def encode_run(
 
 
 def read_chunks(spark: SparkSession, root: str, stage: str, version: int) -> DataFrame:
-    return spark.read.parquet(stage_dir(root, stage, version, "chunks"))
+    """A stage version's chunk table, read with its declared schema (no
+    footer inference)."""
+    return spark.read.schema(SLICED_CHUNK_SCHEMA).parquet(
+        stage_dir(root, stage, version, "chunks"))

@@ -57,7 +57,10 @@ def main() -> None:
                          "clears --min-runt-fraction AND some slice's runts "
                          "fit in fewer chunks, merge those runts into "
                          "version+1 (full chunks and runts that cannot "
-                         "merge pass through byte-identical)")
+                         "merge pass through byte-identical). The gate "
+                         "reads the stage's slice manifests, and the "
+                         "geometry (chunk_rows) comes from the stage, "
+                         "not from --chunk-rows")
     ap.add_argument("--min-runt-fraction", type=float, default=0.25,
                     help="floor on runt chunks / all chunks under which "
                          "--maintain skips the rewrite")
@@ -138,10 +141,9 @@ def main() -> None:
         from parquet_producers_spark.compaction import compact_if_needed
 
         spark = SparkSession.builder.appName("pps-maintain").getOrCreate()
-        # chunk_rows=None → the stage's own manifest geometry decides
+        # the stage's own manifest geometry (chunk_rows) decides
         new_version = compact_if_needed(
             spark, args.output, args.stage, args.version,
-            chunk_rows=args.chunk_rows,
             min_runt_fraction=args.min_runt_fraction,
             cascade=args.cascade, profile=args.profile,
         )

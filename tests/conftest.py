@@ -14,6 +14,12 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 from parquet_producers_spark.session import get_spark  # noqa: E402
 
 
+def executed_plan(df) -> str:
+    """The physical plan Spark runs for ``df``, as the text the
+    plan-shape tests search."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("pps-tests", cores=8, shuffle_partitions=8)

@@ -120,7 +120,7 @@ def test_compact_stage_writes_new_version_with_lineage(spark, tmp_path):
     )
     v1 = read_chunks(spark, root, "code", 1).localCheckpoint(eager=True)
 
-    res = compact_stage(spark, root, "code", version=1, chunk_rows=192)
+    res = compact_stage(spark, root, "code", version=1)
     assert [r.skipped for r in res] == [False, False, False]
     assert list_versions(root, "code") == [1, 2]
     v2 = read_chunks(spark, root, "code", 2).localCheckpoint(eager=True)
@@ -151,7 +151,7 @@ def test_compact_stage_writes_new_version_with_lineage(spark, tmp_path):
     assert m["metrics"]["rows"] > 0
 
     # resume: second call skips every slice
-    res2 = compact_stage(spark, root, "code", version=1, chunk_rows=192)
+    res2 = compact_stage(spark, root, "code", version=1)
     assert [r.skipped for r in res2] == [True, True, True]
     src.unpersist()
 
@@ -177,8 +177,7 @@ def test_compact_if_needed_policy_gate(spark, tmp_path, caplog):
                sort_cols=["repo", "path"], n_slices=3, chunk_rows=192,
                partitions_per_slice=2)
     with caplog.at_level(logging.INFO, logger="parquet_producers_spark"):
-        assert compact_if_needed(spark, root, "runty", 1,
-                                 chunk_rows=192) == 2
+        assert compact_if_needed(spark, root, "runty", 1) == 2
     assert list_versions(root, "runty") == [1, 2]
     [ran] = decisions("runty")
     assert "rewrite ran" in ran
@@ -305,3 +304,130 @@ def test_compaction_multiset_parametrized(spark, n_docs, chunk, parts):
     # (part_id, chunk_seq, column) identities stay unique after rewrite
     assert comp.select("part_id", "chunk_seq", "column").distinct().count() \
         == comp.count()
+
+
+def test_compact_if_needed_starts_no_spark_job_when_nothing_merges(
+        spark, tmp_path, caplog):
+    """The in-wave gate reads the slice manifests the commit wrote: on a
+    stage with one chunk per slice (nothing can merge) it decides
+    without starting a single Spark job. A manifest without the chunk
+    stats is a logged skip, never a recount."""
+    import json
+    import logging
+
+    from parquet_producers_spark.compaction import (
+        compact_if_needed,
+        compact_stage,
+    )
+    from parquet_producers_spark.storage import (
+        encode_run,
+        list_versions,
+        manifest_path,
+    )
+
+    root = str(tmp_path)
+    small = source_code_df(spark, 300, seed=11, partitions=3)
+    encode_run(spark, small, root, "single", version=1,
+               sort_cols=["repo", "path"], n_slices=3, chunk_rows=1024)
+    sc = spark.sparkContext
+    sc.setJobGroup("compact-gate-probe", "compact_if_needed")
+    try:
+        with caplog.at_level(logging.INFO, logger="parquet_producers_spark"):
+            assert compact_if_needed(spark, root, "single", 1) == 1
+            # a manifest written before the stats fields existed
+            path = manifest_path(root, "single", 1, 1)
+            with open(path) as f:
+                m = json.load(f)
+            del m["metrics"]["runts"]
+            with open(path, "w") as f:
+                json.dump(m, f)
+            assert compact_if_needed(spark, root, "single", 1) == 1
+            assert compact_stage(spark, root, "single", 1) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "compact-gate-probe")) == []
+    assert list_versions(root, "single") == [1]
+    lines = [r.getMessage() for r in caplog.records
+             if r.getMessage().startswith("compaction single v=1")]
+    assert len(lines) == 3
+    assert "skipped" in lines[0] and "chunks 3 -> 3 predicted" in lines[0]
+    assert all("carry no chunk stats" in ln for ln in lines[1:])
+
+
+def test_slice_manifests_carry_compaction_stats(spark, tmp_path):
+    """Every slice manifest carries the chunk stats the compaction gate
+    reads — chunks, runts, runt rows, max part_id — equal to a recount
+    from the committed chunk rows, for an encode and for the compacted
+    version."""
+    import json
+
+    from parquet_producers_spark.compaction import compact_stage
+    from parquet_producers_spark.storage import encode_run, manifest_path
+
+    root = str(tmp_path)
+    src = source_code_df(spark, 300, seed=3, partitions=2)
+    encode_run(spark, src, root, "code", version=1,
+               sort_cols=["repo", "path"], n_slices=2, chunk_rows=128,
+               partitions_per_slice=4)
+    compact_stage(spark, root, "code", 1)
+    runts = {}
+    for version in (1, 2):
+        want = {}
+        for r in read_chunks(spark, root, "code", version).select(
+                "slice_id", "part_id", "chunk_seq", "n_rows"
+        ).distinct().collect():
+            w = want.setdefault(r.slice_id, {"n_chunks": 0, "rows": 0,
+                                             "runts": 0, "runt_rows": 0,
+                                             "max_pid": -1})
+            w["n_chunks"] += 1
+            w["rows"] += r.n_rows
+            w["runts"] += r.n_rows < 128
+            w["runt_rows"] += r.n_rows if r.n_rows < 128 else 0
+            w["max_pid"] = max(w["max_pid"], r.part_id)
+        assert sorted(want) == [0, 1]
+        for k, w in want.items():
+            with open(manifest_path(root, "code", version, k)) as f:
+                m = json.load(f)["metrics"]
+            assert {f: m[f] for f in w} == w, (version, k)
+        runts[version] = sum(w["runts"] for w in want.values())
+    assert runts[2] < runts[1]  # the compaction merged runts
+
+
+def test_compact_stage_warns_when_rewrite_keeps_chunk_count(
+        spark, tmp_path, caplog):
+    """The decision line of a stage rewrite gives the actual chunk count
+    next to the predicted one, and is a WARNING when the rewrite did not
+    lower it: here AQE, told to make tiny partitions, spreads each
+    slice's runts over several re-encode tasks."""
+    import logging
+
+    from parquet_producers_spark.compaction import compact_stage
+    from parquet_producers_spark.storage import encode_run
+
+    root = str(tmp_path)
+    src = source_code_df(spark, 300, seed=3, partitions=2)
+    # ~150 rows per slice in 3 runts: one 256-row chunk would hold them
+    encode_run(spark, src, root, "code", version=1,
+               sort_cols=["repo", "path"], n_slices=2, chunk_rows=256,
+               partitions_per_slice=3)
+    conf = {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "1",
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1",
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst":
+                "false"}
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        with caplog.at_level(logging.INFO, logger="parquet_producers_spark"):
+            compact_stage(spark, root, "code", 1)
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    [line] = [r for r in caplog.records
+              if r.getMessage().startswith("compaction code v=1")]
+    before, predicted, actual = (int(x) for x in re.search(
+        r"chunks (\d+) -> (\d+) predicted, (\d+) actual",
+        line.getMessage()).groups())
+    assert predicted < before <= actual
+    assert line.levelno == logging.WARNING

@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import executed_plan
 from parquet_producers_spark.datagen import source_code_df
 from parquet_producers_spark.encoder import decode_chunks, encode_partitions
 
@@ -366,7 +367,7 @@ def test_staged_pruned_routing_no_cliff_at_32768(spark):
     # broadcast of the one-row cut frame, nothing else
     spill = (routed.repartitionById(n, "__range_id").drop("__range_id")
              .sortWithinPartitions("repo", "path"))
-    eplan = spill._jdf.queryExecution().executedPlan().toString()
+    eplan = executed_plan(spill)
     shuffles = re.findall(r"(?<!Broadcast)Exchange (\w+)", eplan)
     assert shuffles == ["shufflepartitionidpassthrough"], eplan
     assert "REPARTITION_BY_NUM" in eplan

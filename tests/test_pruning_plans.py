@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import executed_plan
 from parquet_producers_spark.datagen import source_code_df
 from parquet_producers_spark.encoder import (
     decode_chunks,
@@ -54,11 +55,9 @@ def test_column_projection(spark, chunk_table):
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    plan = (
+    plan = executed_plan(
         li.filter(F.col("l_shipdate") <= "1995-01-01")
-        .select("l_orderkey", "l_quantity")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+        .select("l_orderkey", "l_quantity"))
     assert "PushedFilters: [IsNotNull(l_shipdate)" in plan, plan
     assert "ReadSchema" in plan
     # projection pruning: only the three referenced columns are read
@@ -69,10 +68,8 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
 def test_small_dim_join_broadcasts(spark, sf_dir):
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    plan = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = executed_plan(
+        o.join(F.broadcast(c), o.o_custkey == c.c_custkey))
     assert "BroadcastHashJoin" in plan, plan
 
 
@@ -82,7 +79,7 @@ def test_zone_map_filter_is_scan_pushable(spark, chunk_table, tmp_path):
     path = str(tmp_path / "zz")
     chunk_table.write.mode("overwrite").parquet(path)
     reread = prune_chunks(spark.read.parquet(path), key_lo="org50")
-    plan = reread._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(reread)
     assert "PushedFilters" in plan and "key_max" in plan.split("PushedFilters")[1][:200], plan
 
 
@@ -99,7 +96,7 @@ def test_col_zone_prune_stats_scan_reads_no_blobs(spark, chunk_table,
     reread = spark.read.parquet(path)
     pruned = prune_chunks_on(reread, "repo", lo="org10", hi="org20",
                              cast="string")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(pruned)
     schemas = [seg.splitlines()[0] for seg in plan.split("ReadSchema:")[1:]]
     assert len(schemas) >= 2, plan
     # at least one scan (the stats side) must exclude the blob column
@@ -203,8 +200,7 @@ def test_bloom_probe_scan_prunes_blob_column(spark, sf_dir, tmp_path):
     encode_partitions(docs, sort_cols=["doc_id"], partitions=2,
                       chunk_rows=128).write.parquet(path)
     chunks = spark.read.parquet(path)
-    plan = prune_chunks_eq(chunks, "lang", "en") \
-        ._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(prune_chunks_eq(chunks, "lang", "en"))
     scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     probe_scans = [s for s in scans
                    if "params" in s and "data" not in s.split("ReadSchema")[1]]

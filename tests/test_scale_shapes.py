@@ -11,6 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import executed_plan
 from parquet_producers_spark.functions.dedup import (
     jaccard_pairs,
     simhash,
@@ -22,10 +23,6 @@ from parquet_producers_spark.functions.similarity import (
 )
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -34,7 +31,7 @@ def docs(spark, sf_dir):
 def test_simhash_pairs_no_cartesian(spark, docs):
     sig = simhash(docs.limit(100), bits=16)
     pairs = simhash_near_pairs(sig, max_hamming=3, bits=16)
-    plan = _plan(pairs)
+    plan = executed_plan(pairs)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -93,6 +90,24 @@ def test_ann_multiprobe_recall(spark, sf_dir):
     assert recall >= recall_single
 
 
+def test_cosine_topk_dim_rejects_a_vector_of_another_width(spark):
+    """With ``dim`` the fixed-width scoring fails the query on a vector
+    of another size — a shorter one would index past its end (or score
+    NULL without ANSI mode), a longer one would be scored on its first
+    ``dim`` elements; on well-formed vectors it ranks exactly like the
+    generic path."""
+    good = [(i, [float(i % 3), 1.0, 0.5 * i, 2.0]) for i in range(8)]
+    schema = "vec_id long, embedding array<double>"
+    ok = spark.createDataFrame(good, schema)
+    probes = ok.filter(F.col("vec_id") < 2)
+    for odd in ([1.0, 2.0], [1.0, 2.0, 3.0, 4.0, 5.0]):
+        corpus = ok.unionByName(spark.createDataFrame([(8, odd)], schema))
+        with pytest.raises(Exception, match="size is not dim=4"):
+            cosine_topk(corpus, probes, k=3, dim=4).collect()
+    assert sorted(cosine_topk(ok, probes, k=3, dim=4).collect()) == \
+        sorted(cosine_topk(ok, probes, k=3).collect())
+
+
 def test_preserve_bootstrap_no_single_partition_exchange(spark):
     """Bootstrapping a preserve_col stage routes every TK through the id
     assigner; the content plan must not contain a SinglePartition
@@ -116,7 +131,7 @@ def test_preserve_bootstrap_no_single_partition_exchange(spark):
     # single-partition exchanges are only allowed under a scalar
     # aggregate (max prev id — one row per partition, then one row);
     # the data path (window/sort over TKs) must never collapse to one
-    plan_lines = _plan(content).splitlines()
+    plan_lines = executed_plan(content).splitlines()
     for i, line in enumerate(plan_lines):
         if "Exchange SinglePartition" in line:
             assert "HashAggregate" in plan_lines[i - 1], \
@@ -261,7 +276,7 @@ def test_embedding_pairs_bucketed_no_cartesian(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     pairs = embedding_near_pairs_bucketed(emb, threshold=0.3, bits=4,
                                           n_tables=4)
-    plan = _plan(pairs)
+    plan = executed_plan(pairs)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -364,7 +379,7 @@ def test_decontaminate_no_cartesian(spark, docs):
 
     d = docs.select("doc_id", "text").limit(200)
     bench = d.filter(F.col("doc_id") % 97 == 0)
-    plan = _plan(contamination_scores(d, bench))
+    plan = executed_plan(contamination_scores(d, bench))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -376,7 +391,7 @@ def test_sequence_pack_window_is_sharded(spark, docs):
     from parquet_producers_spark.functions.splits import sequence_pack
 
     d = docs.select("doc_id", "lang", "text")
-    plan = _plan(sequence_pack(d, budget=2048, n_shards=8))
+    plan = executed_plan(sequence_pack(d, budget=2048, n_shards=8))
     for line in plan.splitlines():
         if "Exchange SinglePartition" in line:
             raise AssertionError(f"corpus-wide window exchange:\n{plan}")
@@ -389,5 +404,5 @@ def test_repetition_stats_no_shuffle(spark, docs):
     shuffles one row per word occurrence)."""
     from parquet_producers_spark.functions.text import repetition_stats
 
-    plan = _plan(repetition_stats(docs.select("doc_id", "text")))
+    plan = executed_plan(repetition_stats(docs.select("doc_id", "text")))
     assert "Exchange" not in plan, plan

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import executed_plan
 from parquet_producers_spark.sources.snapshots import (
     commit_snapshot,
     list_snapshots,
@@ -683,7 +684,7 @@ def test_manifest_tree_distributed_diff_100k(spark, tmp_path):
     assert elapsed < 60
     # both manifest sides enter the plan as parquet scans (shard
     # frames), not as a driver-collected literal list
-    plan = diff._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(diff)
     assert plan.count("Scan parquet") >= 2
 
 

@@ -6,6 +6,7 @@ SortedMerge) as a Spark plan."""
 import pyspark.sql.functions as F
 import pytest
 
+from conftest import executed_plan
 from parquet_producers_spark.encoder import encode_partitions
 from parquet_producers_spark.sortedread import (
     plan_key_ranges,
@@ -108,8 +109,7 @@ def test_read_sorted_plan_has_one_blob_exchange(spark):
     chunks = encode_partitions(
         d, sort_cols=["k"], partitions=4, chunk_rows=200,
         profile="fast").localCheckpoint()
-    plan = read_sorted(
-        chunks, "k", n_ranges=4)._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(read_sorted(chunks, "k", n_ranges=4))
     import re
 
     shuffles = re.findall(r"(?<!Broadcast)Exchange (\w+)", plan)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import hashlib
 import os
 
+from conftest import executed_plan
 from parquet_producers_spark.datagen import source_code_df
 from parquet_producers_spark.encoder import decode_chunks
 from parquet_producers_spark.storage import (
@@ -92,16 +93,13 @@ def test_encode_run_lets_aqe_size_the_range_exchange(spark, tmp_path,
 
     monkeypatch.setattr(encoder, "encode_partitions", spy)
 
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
     src = source_code_df(spark, 200, seed=9, partitions=2)
     encode_run(spark, src, str(tmp_path), "code", version=1,
                sort_cols=["repo", "path"], n_slices=2)
-    auto = plan(built[-1])
+    auto = executed_plan(built[-1])
     assert "rangepartitioning" in auto and "REPARTITION_BY_COL" in auto
     assert "REPARTITION_BY_NUM" not in auto
 
-    fixed = plan(encode_partitions(src, sort_cols=["repo", "path"],
-                                  partitions=6))
+    fixed = executed_plan(encode_partitions(
+        src, sort_cols=["repo", "path"], partitions=6))
     assert "REPARTITION_BY_NUM" in fixed and ", 6)" in fixed

@@ -6,7 +6,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from parquet_producers_spark.functions.dedup import contamination_scores
-from parquet_producers_spark.functions.text import pii_counts, redact_pii
+from parquet_producers_spark.functions.text import (
+    bpe_token_count,
+    bpe_token_count_sql,
+    pii_counts,
+    quality_score,
+    quality_score_sql,
+    redact_pii,
+)
 
 
 def test_redact_pii_scrubs_emails_then_ips(spark):
@@ -129,3 +136,26 @@ def test_ivf_topk_empty_centroids_returns_empty(spark):
     out = ivf_topk(corpus, corpus, k=2, n_centroids=8)
     assert out.count() == 0
     assert out.columns == ["probe_id", "nbr_id", "cosine", "rank"]
+
+
+def test_null_text_scores_alike_on_spark_and_duckdb(spark):
+    """A NULL-text doc gets the same ``bpe_token_count`` and
+    ``quality_score`` on Spark (``regexp_count``) as in the DuckDB SQL
+    the oracle runs: NULL in both engines."""
+    import duckdb
+
+    rows = [(1, None, 0), (2, "Hello, the world of 42 cats.", 28)]
+    df = spark.createDataFrame(rows, "doc_id int, text string, n_chars int")
+    got = [tuple(r) for r in df.select(
+        "doc_id", bpe_token_count(F.col("text")),
+        quality_score(F.col("text"), F.col("n_chars"))
+    ).orderBy("doc_id").collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (doc_id INT, text VARCHAR, n_chars INT)")
+    con.executemany("INSERT INTO d VALUES (?, ?, ?)", rows)
+    want = con.execute(
+        f"SELECT doc_id, {bpe_token_count_sql('text')},"
+        f" {quality_score_sql('text', 'n_chars')} FROM d ORDER BY doc_id"
+    ).fetchall()
+    assert got == want
+    assert got[0] == (1, None, None)

@@ -9,6 +9,7 @@ from collections import Counter, defaultdict
 
 import pandas as pd
 
+from conftest import executed_plan
 from parquet_producers_spark.operators.produce import (
     Stage,
     bootstrap_stage,
@@ -116,7 +117,7 @@ def test_update_stage_plans_read_each_input_once(spark, tmp_path):
         old = spark.conf.get(conf)
         spark.conf.set(conf, "10000")
         try:
-            return df._jdf.queryExecution().executedPlan().toString()
+            return executed_plan(df)
         finally:
             spark.conf.set(conf, old)
 
