@@ -937,7 +937,7 @@ def q_snapshot_file_skipping(spark, sf):
         d.repartitionByRange(8, "doc_id").sortWithinPartitions("doc_id"),
         t, stats_cols=["doc_id"])
     n_all = len(snapshot_files(t))
-    n_kept = len(snapshot_files_pruned(spark, t, "doc_id", lo=100, hi=299))
+    n_kept = len(snapshot_files_pruned(t, "doc_id", lo=100, hi=299))
     got = read_snapshot_where(spark, t, "doc_id", lo=100, hi=299)
     return (
         got.groupBy("lang")

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .codecs import column_stats, decode_array
 from .codecs.select import encode_auto
+from .filestore import is_data_file
 
 _log = logging.getLogger("parquet_producers_spark")
 
@@ -923,7 +924,6 @@ def _pruned_range_routed(spark, df, sort_cols: list[str], cut_rows):
     (broadcast array and search state are projected away so nothing
     but payload + range id can cross the exchange).
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.types import ArrayType, StructType
 
     bounds_data = [tuple(r["mx"]) for r in cut_rows[:-1]]  # last open-ended
@@ -972,7 +972,7 @@ def _list_parquet(spark, directory: str):
     out = []
     for st in fs.listStatus(p):
         name = st.getPath().getName()
-        if name.endswith(".parquet") and not name.startswith(("_", ".")):
+        if is_data_file(name):
             uri = st.getPath().toUri()
             # local files come back as `file:/x` URIs — hand pyarrow a
             # plain OS path; real schemes (hdfs/s3a) keep their URI form

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import posixpath
 
 
 class FileStore:
@@ -55,6 +56,18 @@ class FileStore:
     def write_json_atomic(self, path: str, payload: dict) -> None:
         self.write_bytes_atomic(
             path, json.dumps(payload, indent=1, sort_keys=True).encode())
+
+
+def is_data_file(name: str) -> bool:
+    """A parquet data file's name: ``*.parquet`` and not hidden behind a
+    ``_`` or ``.`` prefix (writer metadata, temporary and dot files)."""
+    return name.endswith(".parquet") and not name.startswith(("_", "."))
+
+
+def list_data_files(store: FileStore, directory: str) -> list[str]:
+    """Sorted full paths of ``directory``'s parquet data files."""
+    return sorted(posixpath.join(directory, e)
+                  for e in store.listdir(directory) if is_data_file(e))
 
 
 class LocalStore(FileStore):

@@ -21,7 +21,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..filestore import FileStore, LocalStore
+from ..filestore import FileStore, LocalStore, list_data_files
 from ..operators.multisource import feeder_view, read_sources
 from ..operators.produce import (
     Stage,
@@ -153,14 +153,10 @@ class Pipeline:
         # _table synthesize a correctly-typed empty frame.
         from ..encoder import open_parquet_any
 
-        parts = [
-            e for e in self.store.listdir(path)
-            if e.endswith(".parquet") and not e.startswith(("_", "."))
-        ]
         rows = 0
-        for p in parts:  # short-circuit: non-empty tables stop at part 1
-            rows += open_parquet_any(
-                posixpath.join(path, p)).metadata.num_rows
+        # short-circuit: non-empty tables stop at part 1
+        for p in list_data_files(self.store, path):
+            rows += open_parquet_any(p).metadata.num_rows
             if rows:
                 break
         marker = path + "._empty.json"

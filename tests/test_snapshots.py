@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from conftest import executed_plan
+from parquet_producers_spark.sources import snapshots
 from parquet_producers_spark.sources.snapshots import (
     commit_snapshot,
     list_snapshots,
@@ -182,7 +182,7 @@ def test_schema_evolution_additive_merge(spark, tmp_path):
     assert sorted(read_snapshot(spark, t, s1).columns) == ["id", "v"]
 
 
-def test_sharded_manifest_tree(spark, tmp_path):
+def test_sharded_manifest_tree(spark, tmp_path, monkeypatch):
     """Past the shard threshold the file list lives as parquet manifest
     shards (files_dir pointer), not inline JSON — and every reader
     (read_snapshot / snapshot_files / snapshot_diff / append-over-
@@ -194,10 +194,11 @@ def test_sharded_manifest_tree(spark, tmp_path):
         snapshot_diff,
     )
 
+    monkeypatch.setattr(snapshots, "SHARD_THRESHOLD", 4)
     t = str(tmp_path / "tbl")
     df1 = spark.createDataFrame(
         [(i, f"v{i}") for i in range(12)], "id int, v string").repartition(6)
-    s1 = commit_snapshot(spark, df1, t, shard_threshold=4)
+    s1 = commit_snapshot(spark, df1, t)
     m1 = json.loads(open(_manifest_path(t, s1)).read())
     assert "files" not in m1 and m1["n_files"] == 6 and "files_dir" in m1
     assert sorted(r.id for r in read_snapshot(spark, t, s1).collect()) == \
@@ -207,18 +208,18 @@ def test_sharded_manifest_tree(spark, tmp_path):
 
     # append over a sharded parent; small child stays sharded (10 files)
     df2 = spark.createDataFrame([(99, "z")], "id int, v string").coalesce(1)
-    s2 = commit_snapshot(spark, df2, t, mode="append", shard_threshold=4)
+    s2 = commit_snapshot(spark, df2, t, mode="append")
     assert sorted(r.id for r in read_snapshot(spark, t, s2).collect()) == \
         list(range(12)) + [99]
     got = [tuple(r) for r in snapshot_diff(spark, t, s1, s2).collect()]
     assert got == [(99, "z")]
     # tiny replace drops back to the inline form
-    s3 = commit_snapshot(spark, df2, t, mode="replace", shard_threshold=4)
+    s3 = commit_snapshot(spark, df2, t, mode="replace")
     m3 = json.loads(open(_manifest_path(t, s3)).read())
     assert "files" in m3 and m3["n_files"] == 1
 
 
-def test_commit_files_10k_in_seconds(spark, tmp_path):
+def test_commit_files_10k_in_seconds(spark, tmp_path, monkeypatch):
     """add_files-style import of 10k existing parquet files: per-file
     rows populated from FOOTERS (distributed, O(files)), sharded
     manifest, seconds not minutes — the round-3 review's driver-side
@@ -241,9 +242,9 @@ def test_commit_files_10k_in_seconds(spark, tmp_path):
         shutil.copyfile(proto, p)
         paths.append(str(p))
 
+    monkeypatch.setattr(snapshots, "SHARD_THRESHOLD", 2_000)
     t0 = _time.monotonic()
-    sid = commit_files(spark, str(tmp_path / "tbl"), paths,
-                       shard_threshold=2_000)
+    sid = commit_files(spark, str(tmp_path / "tbl"), paths)
     elapsed = _time.monotonic() - t0
     files = snapshot_files(str(tmp_path / "tbl"), sid)
     assert len(files) == 10_000
@@ -306,12 +307,13 @@ def test_encode_snapshot_deployment_route(spark, tmp_path):
     assert units > 2  # 2 files, but the giant one split into several units
 
 
-def test_expire_and_vacuum(spark, tmp_path):
+def test_expire_and_vacuum(spark, tmp_path, caplog):
     """expire_snapshots drops old manifests (metadata-only); vacuum
     then reclaims data files no live snapshot references — replace
     commits strand files, expiry makes them orphans, vacuum deletes
     them. Live snapshots' files survive; imported external files are
-    never touched."""
+    never touched. The vacuum's INFO line counts what it saw and did."""
+    import logging
     import os
 
     from parquet_producers_spark.sources.snapshots import (
@@ -335,7 +337,10 @@ def test_expire_and_vacuum(spark, tmp_path):
     orphans = vacuum(t, dry_run=True)
     assert len(orphans) == 2  # s1's and s2's data files
     assert all(os.path.exists(p) for p in orphans)  # dry run: untouched
-    assert sorted(vacuum(t)) == sorted(orphans)
+    with caplog.at_level(logging.INFO, logger="parquet_producers_spark"):
+        assert sorted(vacuum(t)) == sorted(orphans)
+    assert ("3 data files listed, 1 live, 2 orphaned, 2 deleted; 2 data "
+            "dirs and 0 delete dirs reclaimed") in caplog.text
     assert not any(os.path.exists(p) for p in orphans)
     # the live snapshot still reads
     assert [tuple(r) for r in read_snapshot(spark, t).collect()] == [(9, "z")]
@@ -630,77 +635,51 @@ def test_vacuum_normalization_and_refusal(spark, tmp_path):
     assert len(vacuum(t, force=True)) == 1    # explicit override wipes
 
 
-def test_vacuum_distributed_antijoin_matches(spark, tmp_path):
-    """vacuum(spark=...) — the anti-join path that never materializes
-    the live set on the driver — finds exactly the same orphans as the
-    driver-side set difference."""
-    from parquet_producers_spark.sources.snapshots import (
-        expire_snapshots,
-        vacuum,
-    )
-
-    t = str(tmp_path / "tbl")
-    commit_snapshot(spark, spark.createDataFrame(
-        [(1, "a")], "id int, v string").coalesce(1), t)
-    commit_snapshot(spark, spark.createDataFrame(
-        [(2, "b")], "id int, v string").coalesce(1), t, mode="append")
-    commit_snapshot(spark, spark.createDataFrame(
-        [(9, "z")], "id int, v string").coalesce(1), t, mode="replace")
-    assert vacuum(t, dry_run=True, spark=spark) == []
-    expire_snapshots(t, keep_last=1)
-    dr_local = sorted(vacuum(t, dry_run=True))
-    dr_spark = sorted(vacuum(t, dry_run=True, spark=spark))
-    assert dr_local == dr_spark and len(dr_local) == 2
-    assert sorted(vacuum(t, spark=spark)) == dr_local
-
-
-def test_manifest_tree_distributed_diff_100k(spark, tmp_path):
-    """snapshot_diff_paths plans a 100k→150k manifest-tree diff as a
-    distributed anti-join over the parquet shard frames — no
-    driver-side shard loop — and stays time-bounded."""
+def test_manifest_tree_diff_100k(spark, tmp_path, monkeypatch):
+    """snapshot_diff plans a 100k→150k manifest-tree diff as a driver
+    set difference over the two manifests' shard-read file lists, and
+    stays time-bounded."""
     import time
 
     from parquet_producers_spark.filestore import LocalStore
     from parquet_producers_spark.sources.snapshots import (
+        _added_paths,
+        _read_manifest,
         _write_manifest,
-        snapshot_diff_paths,
     )
 
+    monkeypatch.setattr(snapshots, "SHARD_THRESHOLD", 10_000)
     t = str(tmp_path / "tbl")
     store = LocalStore()
     files1 = [{"path": f"{t}/data/s=000001/part-{i:06d}.parquet",
                "rows": 10} for i in range(100_000)]
-    _write_manifest(spark, t, 1, None, "append", "id int", files1, store,
-                    shard_threshold=10_000)
+    _write_manifest(spark, t, 1, None, "append", "id int", files1, store)
     files2 = files1 + [{"path": f"{t}/data/s=000002/part-{i:06d}.parquet",
                         "rows": 10} for i in range(50_000)]
-    _write_manifest(spark, t, 2, 1, "append", "id int", files2, store,
-                    shard_threshold=10_000)
+    _write_manifest(spark, t, 2, 1, "append", "id int", files2, store)
     t0 = time.monotonic()
-    diff = snapshot_diff_paths(spark, t, 1, 2)
-    n = diff.count()
+    m1, m2 = _read_manifest(t, 1, store), _read_manifest(t, 2, store)
+    assert "files_dir" in m1 and "files_dir" in m2
+    new = _added_paths(m1, m2, store)
     elapsed = time.monotonic() - t0
-    assert n == 50_000
+    assert len(new) == 50_000
+    assert all("/s=000002/" in p for p in new)
     assert elapsed < 60
-    # both manifest sides enter the plan as parquet scans (shard
-    # frames), not as a driver-collected literal list
-    plan = executed_plan(diff)
-    assert plan.count("Scan parquet") >= 2
 
 
-def test_sharded_manifest_tolerates_null_rows(spark, tmp_path):
+def test_sharded_manifest_tolerates_null_rows(spark, tmp_path, monkeypatch):
     """Legacy manifests carry rows:null; the sharded read-back path
     must surface None (not raise), and stat consumers treat it as
     unknown."""
     from parquet_producers_spark.filestore import LocalStore
     from parquet_producers_spark.sources.snapshots import _write_manifest
 
+    monkeypatch.setattr(snapshots, "SHARD_THRESHOLD", 10)  # sharded form
     t = str(tmp_path / "tbl")
     store = LocalStore()
     files = [{"path": f"{t}/data/s=000001/p{i:03d}.parquet",
               "rows": None if i % 2 else i} for i in range(40)]
-    _write_manifest(spark, t, 1, None, "append", "id int", files, store,
-                    shard_threshold=10)  # force the sharded form
+    _write_manifest(spark, t, 1, None, "append", "id int", files, store)
     got = snapshot_files(t, 1)
     assert len(got) == 40
     by_path = {f["path"]: f["rows"] for f in got}
@@ -770,20 +749,20 @@ def test_row_level_deletes_merge_on_read(spark, tmp_path):
     assert sorted(r.id for r in read_snapshot(spark, t).collect()) == ids
 
 
-def test_deletes_survive_sharded_manifest(spark, tmp_path):
+def test_deletes_survive_sharded_manifest(spark, tmp_path, monkeypatch):
     """The `added` sequence column round-trips through the sharded
     manifest tree, so delete scoping works past the shard threshold."""
     from parquet_producers_spark.sources.snapshots import commit_deletes
 
+    monkeypatch.setattr(snapshots, "SHARD_THRESHOLD", 4)
     t = str(tmp_path / "tbl")
     base = spark.createDataFrame(
         [(i, f"v{i}") for i in range(20)], "id int, v string")
-    commit_snapshot(spark, base.repartition(6), t, shard_threshold=4)
+    commit_snapshot(spark, base.repartition(6), t)
     commit_deletes(spark, t, spark.createDataFrame(
-        [(i,) for i in range(10)], "id int"), ["id"], shard_threshold=4)
+        [(i,) for i in range(10)], "id int"), ["id"])
     commit_snapshot(spark, spark.createDataFrame(
-        [(3, "back")], "id int, v string").coalesce(1), t,
-        mode="append", shard_threshold=4)
+        [(3, "back")], "id int, v string").coalesce(1), t, mode="append")
     got = sorted((r.id, r.v) for r in read_snapshot(spark, t).collect())
     assert (3, "back") in got
     assert [g for g in got if g[0] < 10] == [(3, "back")]
@@ -866,13 +845,13 @@ def test_incremental_wave_rebases_on_non_append_history(spark, tmp_path):
         list(range(2, 8)) + [100]
 
 
-def test_file_skipping_from_manifest_stats(spark, tmp_path):
+def test_file_skipping_from_manifest_stats(spark, tmp_path, caplog):
     """Per-file column min/max captured from parquet FOOTERS at commit
     (stats_cols) lets reads prune whole files from the manifest alone —
     zero data reads for planning; pruning is never a correctness
     filter (exact predicate still applied; files without stats are
-    kept)."""
-    from pyspark.sql import functions as F
+    kept, and the plan's INFO line counts them)."""
+    import logging
 
     from parquet_producers_spark.sources.snapshots import (
         read_snapshot_where,
@@ -891,7 +870,7 @@ def test_file_skipping_from_manifest_stats(spark, tmp_path):
     files = snapshot_files(t)
     assert all("stats" in f and "id" in f["stats"] for f in files)
 
-    pruned = snapshot_files_pruned(spark, t, "id", lo=100, hi=299)
+    pruned = snapshot_files_pruned(t, "id", lo=100, hi=299)
     assert 0 < len(pruned) < len(files)
 
     got = read_snapshot_where(spark, t, "id", lo=100, hi=299)
@@ -899,27 +878,30 @@ def test_file_skipping_from_manifest_stats(spark, tmp_path):
 
     # open ranges and a no-stats column: never lose rows
     assert read_snapshot_where(spark, t, "id", lo=990).count() == 10
-    assert read_snapshot_where(spark, t, "g", lo=1, hi=1).count() == \
-        df.filter("g = 1").count()
+    with caplog.at_level(logging.INFO, logger="parquet_producers_spark"):
+        assert read_snapshot_where(spark, t, "g", lo=1, hi=1).count() == \
+            df.filter("g = 1").count()
+    assert "kept 8/8 files, 8 of them without stats on g" in caplog.text
 
 
-def test_file_skipping_sharded_manifest(spark, tmp_path):
-    """Stats survive the sharded manifest tree and the pruning filter
-    runs on the shard FRAMES (a Spark filter over parquet shards — no
-    driver loop), so file skipping holds at manifest-tree scale."""
+def test_file_skipping_sharded_manifest(spark, tmp_path, monkeypatch):
+    """Stats survive the sharded manifest tree, so file skipping holds
+    at manifest-tree scale: the shards read back to the same file list
+    the inline form holds, and the same filter prunes it."""
     from parquet_producers_spark.sources.snapshots import (
         read_snapshot_where,
         snapshot_files_pruned,
     )
 
+    monkeypatch.setattr(snapshots, "SHARD_THRESHOLD", 4)
     t = str(tmp_path / "tbl")
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(400)], "id int, v string")
     commit_snapshot(
         spark, df.repartitionByRange(8, "id").sortWithinPartitions("id"),
-        t, stats_cols=["id"], shard_threshold=4)
+        t, stats_cols=["id"])
 
-    pruned = snapshot_files_pruned(spark, t, "id", lo=0, hi=49)
+    pruned = snapshot_files_pruned(t, "id", lo=0, hi=49)
     assert 0 < len(pruned) < 8
     got = read_snapshot_where(spark, t, "id", lo=0, hi=49)
     assert got.count() == 50
@@ -931,9 +913,8 @@ def test_file_skipping_sharded_manifest(spark, tmp_path):
         spark.createDataFrame(
             [(f"k{i:04d}", i) for i in range(400)], "k string, n int")
         .repartitionByRange(8, "k").sortWithinPartitions("k"),
-        t2, stats_cols=["k"], shard_threshold=4)
-    got = read_snapshot_where(spark, t2, "k", lo="k0100", hi="k0199",
-                              cast="string")
+        t2, stats_cols=["k"])
+    got = read_snapshot_where(spark, t2, "k", lo="k0100", hi="k0199")
     assert got.count() == 100
 
 
@@ -1063,10 +1044,9 @@ def test_stats_overlap_mixed_types_keep_not_raise(spark, tmp_path):
             [(f"{i:04d}", i) for i in range(200)], "k string, n int")
         .repartitionByRange(4, "k").sortWithinPartitions("k"),
         t, stats_cols=["k"])
-    kept = snapshot_files_pruned(spark, t, "k", lo=100, hi=199)
+    kept = snapshot_files_pruned(t, "k", lo=100, hi=199)
     assert len(kept) >= 1  # never raises; lexicographic "0100" keeps some
-    got = read_snapshot_where(spark, t, "k", lo="0100", hi="0199",
-                              cast="string")
+    got = read_snapshot_where(spark, t, "k", lo="0100", hi="0199")
     assert got.count() == 100
 
 
@@ -1099,7 +1079,7 @@ def test_upsert_and_rewrite_preserve_stats_cols(spark, tmp_path):
         key_cols=["id"])
     files = snapshot_files(t)
     assert all(f.get("stats", {}).get("id") for f in files)
-    pruned = snapshot_files_pruned(spark, t, "id", lo=420, hi=449)
+    pruned = snapshot_files_pruned(t, "id", lo=420, hi=449)
     assert 0 < len(pruned) < len(files)
     assert read_snapshot_where(spark, t, "id", lo=420, hi=449) \
         .count() == 30
@@ -1108,7 +1088,7 @@ def test_upsert_and_rewrite_preserve_stats_cols(spark, tmp_path):
     rewrite_deletes(spark, t)
     files2 = snapshot_files(t)
     assert all(f.get("stats", {}).get("id") for f in files2)
-    pruned2 = snapshot_files_pruned(spark, t, "id", lo=0, hi=49)
+    pruned2 = snapshot_files_pruned(t, "id", lo=0, hi=49)
     assert 0 < len(pruned2) < len(files2)
     got = read_snapshot_where(spark, t, "id", lo=440, hi=449)
     assert sorted(r.v for r in got.collect()) == \
@@ -1151,9 +1131,8 @@ def test_vacuum_reclaims_empty_dirs_without_new_orphans(spark, tmp_path):
 def test_vacuum_spares_in_flight_commit_dir(spark, tmp_path):
     """A data dir past the newest committed snapshot is a commit still
     writing — only _temporary/ so far, or finished files whose manifest
-    is not written yet. vacuum must leave it alone on both the
-    driver-side and the distributed path, while an old orphan dir is
-    still reclaimed."""
+    is not written yet. vacuum must leave it alone, while an old orphan
+    dir is still reclaimed."""
     import os
 
     from parquet_producers_spark.sources.snapshots import (
@@ -1161,24 +1140,119 @@ def test_vacuum_spares_in_flight_commit_dir(spark, tmp_path):
         vacuum,
     )
 
-    for name, kw in (("local", {}), ("dist", {"spark": spark})):
-        t = str(tmp_path / name)
-        commit_snapshot(spark, spark.createDataFrame(
-            [(1, "a")], "id int, v string").coalesce(1), t)
-        s2 = commit_snapshot(spark, spark.createDataFrame(
-            [(9, "z")], "id int, v string").coalesce(1), t, mode="replace")
-        expire_snapshots(t, keep_last=1)
-        old_dir = os.path.join(t, "data", "s=000001")
-        inflight = os.path.join(t, "data", f"s={s2 + 1:06d}")
-        planted = [os.path.join(inflight, "_temporary", "0", "x.parquet"),
-                   os.path.join(inflight, "part-0.parquet")]
-        for p in planted:
-            os.makedirs(os.path.dirname(p), exist_ok=True)
-            open(p, "wb").close()
+    t = str(tmp_path / "tbl")
+    commit_snapshot(spark, spark.createDataFrame(
+        [(1, "a")], "id int, v string").coalesce(1), t)
+    s2 = commit_snapshot(spark, spark.createDataFrame(
+        [(9, "z")], "id int, v string").coalesce(1), t, mode="replace")
+    expire_snapshots(t, keep_last=1)
+    old_dir = os.path.join(t, "data", "s=000001")
+    inflight = os.path.join(t, "data", f"s={s2 + 1:06d}")
+    planted = [os.path.join(inflight, "_temporary", "0", "x.parquet"),
+               os.path.join(inflight, "part-0.parquet")]
+    for p in planted:
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        open(p, "wb").close()
 
-        orphans = vacuum(t, **kw)
-        assert orphans and all(p.startswith(old_dir) for p in orphans)
-        assert not os.path.exists(old_dir)
-        assert all(os.path.exists(p) for p in planted), name
-        assert [tuple(r) for r in read_snapshot(spark, t).collect()] \
-            == [(9, "z")]
+    orphans = vacuum(t)
+    assert orphans and all(p.startswith(old_dir) for p in orphans)
+    assert not os.path.exists(old_dir)
+    assert all(os.path.exists(p) for p in planted)
+    assert [tuple(r) for r in read_snapshot(spark, t).collect()] \
+        == [(9, "z")]
+
+
+def test_manifest_forms_answer_alike(spark, tmp_path, monkeypatch):
+    """One table history — append with stats on an int, a double and a
+    string column, upsert, delete, append, replace, expire — run with
+    inline manifests and again with sharded ones gives the same scans,
+    diffs, pruning plans, pruned reads and vacuum orphans: one reader
+    serves both forms. The double column is the leg a separate pruning
+    path over the shards got wrong (it compared the zone strings as
+    bigint). After the replace and expire, the orphans are exactly the
+    pre-replace data files plus the upsert's and the delete's key dirs,
+    and vacuum deletes just those."""
+    import json
+    import os
+
+    from parquet_producers_spark.sources.snapshots import (
+        _manifest_path,
+        commit_deletes,
+        commit_upsert,
+        expire_snapshots,
+        read_snapshot_where,
+        snapshot_diff,
+        snapshot_files_pruned,
+        vacuum,
+    )
+
+    ranges = {"id": (100, 149), "x": (2.5, 3.0), "k": ("k0200", "k0249")}
+    schema = "id int, x double, k string"
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def entries(files):
+        # a plan by content: part file names carry a per-write UUID
+        return sorted((f["rows"], f["added"],
+                       json.dumps(f.get("stats"), sort_keys=True))
+                      for f in files)
+
+    def dirs(paths):
+        return sorted(p.rstrip("/").split("/")[-2] for p in paths)
+
+    def table(ids):
+        return spark.createDataFrame(
+            [(i, i / 7 + 0.3, f"k{i:04d}") for i in ids], schema)
+
+    def history(t):
+        out = {}
+        s1 = commit_snapshot(
+            spark, table(range(300)).repartitionByRange(6, "id")
+            .sortWithinPartitions("id"), t, stats_cols=list(ranges))
+        with open(_manifest_path(t, s1)) as f:
+            out["sharded"] = "files_dir" in json.load(f)
+        commit_upsert(spark, t, spark.createDataFrame(
+            [(i, -1.0, f"u{i:04d}") for i in range(140, 160)], schema)
+            .coalesce(1), ["id"])
+        commit_deletes(spark, t, spark.createDataFrame(
+            [(i,) for i in range(0, 300, 5)], "id int"), ["id"])
+        commit_snapshot(spark, table(range(300, 340)).coalesce(1), t)
+        pre_replace = snapshot_files(t)
+        commit_snapshot(
+            spark, table(range(0, 400, 2)).repartitionByRange(6, "id")
+            .sortWithinPartitions("id"), t, mode="replace")
+        snaps = list_snapshots(t)
+        for s in snaps:
+            out["read", s] = rows(read_snapshot(spark, t, s))
+        for a, b in zip(snaps, snaps[1:]):
+            out["diff", b] = rows(snapshot_diff(spark, t, a, b))
+        for s in (snaps[-2], snaps[-1]):
+            for c, (lo, hi) in ranges.items():
+                kept = snapshot_files_pruned(t, c, lo, hi, s)
+                assert 0 < len(kept) < len(snapshot_files(t, s)), (s, c)
+                out["pruned", s, c] = entries(kept)
+                out["where", s, c] = rows(
+                    read_snapshot_where(spark, t, c, lo, hi, s))
+                assert out["where", s, c], (s, c)
+
+        expire_snapshots(t, keep_last=1)
+        orphans = vacuum(t, dry_run=True)
+        out["orphans"] = dirs(orphans)
+        data = sorted(p for p in orphans if "/data/" in p)
+        assert data == sorted(f["path"] for f in pre_replace)
+        assert sorted(p.split("/")[-1] for p in set(orphans) - set(data)) \
+            == ["s=000002", "s=000003"]
+        assert sorted(vacuum(t)) == sorted(orphans)
+        assert not any(os.path.exists(p) for p in orphans)
+        out["after vacuum"] = rows(read_snapshot(spark, t))
+        assert out["after vacuum"] == out["read", snaps[-1]]
+        return out
+
+    inline = history(str(tmp_path / "inline" / "tbl"))
+    monkeypatch.setattr(snapshots, "SHARD_THRESHOLD", 4)
+    sharded = history(str(tmp_path / "sharded" / "tbl"))
+    assert (inline.pop("sharded"), sharded.pop("sharded")) == (False, True)
+    assert inline.keys() == sharded.keys()
+    for key in inline:
+        assert sharded[key] == inline[key], key
