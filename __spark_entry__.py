@@ -428,7 +428,7 @@ def q_codec_roundtrip_sha(spark, sf):
     # at any partition count; the floor keeps tiny gate inputs sane.
     parts = max(4, spark.sparkContext.defaultParallelism)
     chunks = encode_partitions(docs, sort_cols=["doc_id"], partitions=parts)
-    decoded = decode_chunks(chunks, ordered=False)
+    decoded = decode_chunks(chunks)
     return decoded.select("doc_id", F.sha2(F.col("text"), 256).alias("text_sha"))
 
 
@@ -474,7 +474,7 @@ def q_codec_pruned_scan(spark, sf):
                                chunk_rows=64)
     pruned = prune_chunks(chunks, key_lo="00000100", key_hi="00000299")
     pruned = project_chunks(pruned, ["dockey", "doc_id", "lang", "n_chars"])
-    decoded = decode_chunks(pruned, ordered=False)
+    decoded = decode_chunks(pruned)
     return (
         decoded.filter((F.col("doc_id") >= 100) & (F.col("doc_id") <= 299))
         .groupBy("lang")
@@ -504,7 +504,7 @@ def q_codec_pruned_scan_col(spark, sf):
     chunks = encode_partitions(d, sort_cols=["lang", "n_chars"],
                                partitions=8, chunk_rows=32)
     pruned = prune_chunks_on(chunks, "n_chars", lo=100, hi=199, cast="long")
-    decoded = decode_chunks(pruned, ordered=False)
+    decoded = decode_chunks(pruned)
     return (
         decoded.filter((F.col("n_chars") >= 100) & (F.col("n_chars") <= 199))
         .groupBy("lang")
@@ -723,7 +723,7 @@ def q_codec_compaction(spark, sf):
                     .select("part_id", "chunk_seq").distinct().count())
     runts_after = (compacted.filter(F.col("n_rows") < 64)
                    .select("part_id", "chunk_seq").distinct().count())
-    decoded = decode_chunks(compacted, ordered=False)
+    decoded = decode_chunks(compacted)
     hash60 = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("bigint")
     return (
         decoded.groupBy("lang")
@@ -757,7 +757,7 @@ def q_codec_staged_encode(spark, sf):
     ).localCheckpoint(eager=False)
     n_spill_files = sum(
         1 for f in os.listdir(spill) if f.endswith(".parquet"))
-    decoded = decode_chunks(chunks, ordered=False)
+    decoded = decode_chunks(chunks)
     hash60 = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("bigint")
     return (
         decoded.groupBy("lang")
@@ -825,7 +825,7 @@ def q_codec_maintenance(spark, sf):
     runts_after = (chunks.filter(F.col("n_rows") < 512)
                    .select("enc_version", "slice_id", "part_id",
                            "chunk_seq").distinct().count())
-    decoded = decode_chunks(chunks, ordered=False)
+    decoded = decode_chunks(chunks)
     hash60 = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("bigint")
     return (
         decoded.groupBy("lang")

@@ -400,14 +400,14 @@ def rg_split_probe(src_path: str, work: str, cores: int = None,
 def sorted_read_probe(src_path: str, work: str, cores: int = None) -> dict:
     """Sorted-consumer path, measured: decode the encoded chunk store
     back out GLOBALLY KEY-ORDERED via the zone-planned sorted-merge
-    read (sortedread.py — ranges from chunk zone maps, one hash
-    shuffle, local sorts) vs the total-sort path
-    (``decode_chunks(ordered=True)``: Spark ``orderBy`` = sampling job
-    + range shuffle + sort). Both write their ordered output to
-    parquet — the consumer a sorted read exists to feed.
+    read (sortedread.py — ranges from chunk zone maps, one
+    direct-placement shuffle, local sorts) vs the total-sort path
+    (``decode_chunks(chunks).orderBy("repo")``: Spark ``orderBy`` =
+    sampling job + range shuffle + sort). Both write their ordered
+    output to parquet — the consumer a sorted read exists to feed.
 
-    Runs on the FULL scaled corpus: the merge read pays ~3 fixed
-    driver metadata jobs (~2 s on this box), so below ~1M rows those
+    Runs on the FULL scaled corpus: the merge read pays ~10 fixed
+    metadata planning jobs (~1 s at 4 cores), so below ~1M rows those
     dominate and orderBy wins; measured standalone: 0.57× @ 150k rows,
     0.88× @ 600k, 1.18× @ 1.8M — the crossover shape expected when
     the comparator decodes the store twice (orderBy's range sampler
@@ -449,7 +449,7 @@ def sorted_read_probe(src_path: str, work: str, cores: int = None) -> dict:
         merge_s = time.monotonic() - t0
 
         t0 = time.monotonic()
-        decode_chunks(chunks, ordered=True).write.mode(
+        decode_chunks(chunks).orderBy("repo").write.mode(
             "overwrite").parquet(os.path.join(work, "probe_total_sorted"))
         total_s = time.monotonic() - t0
         return {
@@ -1252,7 +1252,8 @@ def _write_bench_md(result: dict) -> None:
             "| sorted-merge read (sortedread.py: ranges from chunk"
             " zone maps, one direct-placement shuffle, local sorts) |"
             f" {sr['merge_read_s']} |",
-            "| total sort (decode_chunks(ordered=True): orderBy ="
+            "| total sort (decode_chunks(chunks).orderBy(\"repo\"):"
+            " orderBy ="
             " sampling pass + range shuffle + global sort) |"
             f" {sr['total_sort_s']} |",
             "",

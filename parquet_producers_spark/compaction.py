@@ -135,7 +135,7 @@ def _compact(chunks: DataFrame, sort_cols: list[str], chunk_rows: int,
     rewrite = F.col("n_rows") < chunk_rows
     if slice_of is not None:
         rewrite = rewrite & F.col("slice_id").isin(merging)
-    rows = decode_chunks(chunks.filter(rewrite), ordered=False)
+    rows = decode_chunks(chunks.filter(rewrite))
     if slice_of is not None:
         rows = rows.withColumn("__slice", slice_of)
     rewritten = encode_partitions(

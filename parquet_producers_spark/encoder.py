@@ -560,53 +560,44 @@ def assemble_chunk(tin: pa.Table, rows, schema: pa.Schema) -> pa.Table:
     return pa.table([arrays[f.name] for f in schema], schema=schema)
 
 
-def tagged_output(tag: pa.Field, fields: list[pa.Field]):
+def decoded_output(fields: list[pa.Field], tag: pa.Field | None = None):
     """``(spark_ddl, emit)`` for a grouped decode (applyInArrow) whose
-    output is a constant ``tag`` column followed by the decoded
-    ``fields``: ``emit(value, data)`` prepends the tag and casts to the
+    output is the decoded ``fields``, after an optional constant ``tag``
+    column: ``emit(data, value)`` prepends the tag and casts to the
     types Spark expects back over the Arrow boundary."""
-    out_schema = pa.schema([tag] + fields)
+    out_schema = pa.schema(([tag] if tag is not None else []) + fields)
     out_emit = pa.schema([pa.field(f.name, _emit_type(f.type))
                           for f in out_schema])
     ddl = ", ".join(f"{f.name} {_spark_type(f.type)}" for f in out_schema)
 
-    def emit(value, data: pa.Table) -> pa.Table:
-        tbl = data.add_column(
-            0, tag, pa.repeat(pa.scalar(value, tag.type), data.num_rows))
-        return tbl if out_schema == out_emit else tbl.cast(out_emit)
+    def emit(data: pa.Table, value=None) -> pa.Table:
+        if tag is not None:
+            data = data.add_column(
+                0, tag, pa.repeat(pa.scalar(value, tag.type), data.num_rows))
+        return data if out_schema == out_emit else data.cast(out_emit)
 
     return ddl, emit
 
 
-def decode_chunks(chunks: DataFrame, ordered: bool = False) -> DataFrame:
+def decode_chunks(chunks: DataFrame) -> DataFrame:
     """Inverse of :func:`encode_partitions`: chunk table → original rows.
 
     Chunks are decoded group-wise; all columns of one chunk travel
-    together. ``ordered=True`` re-sorts by (part_id, chunk_seq) so the
-    global row order of the sorted encode is reproduced — this is a TOTAL
-    SORT of the decoded output and therefore the expensive path at scale;
-    it defaults off. Consumers that need at-rest order re-sort by their
-    own key (as compaction already does).
+    together. Output order is unspecified: consumers that need key
+    order read through :func:`~.sortedread.read_sorted` (zone-planned,
+    no total sort) or re-sort by their own key (as compaction does).
     """
     fields = chunk_fields(chunks)
     data_schema = pa.schema(fields)
-    ddl, emit = tagged_output(pa.field("__ord", pa.int64()), fields)
+    ddl, emit = decoded_output(fields)
 
     def dec(key, tin):
         # ARROW-NATIVE grouped decode (applyInArrow): blobs arrive and
         # decoded columns leave as Arrow — no pandas object conversion
-        # in either direction. Dense per-chunk ordinal: layout cols are
-        # small ints (slice ids)
-        ordv = 0
-        for k in key:
-            ordv = ordv * 1_000_000 + int(_py(k))
-        return emit(ordv, assemble_chunk(tin, range(tin.num_rows),
-                                         data_schema))
+        # in either direction
+        return emit(assemble_chunk(tin, range(tin.num_rows), data_schema))
 
-    out = chunks.groupBy(*chunk_ident(chunks)).applyInArrow(dec, schema=ddl)
-    if ordered:
-        out = out.orderBy("__ord")
-    return out.drop("__ord")
+    return chunks.groupBy(*chunk_ident(chunks)).applyInArrow(dec, schema=ddl)
 
 
 def _arrow_type(name: str) -> pa.DataType:

@@ -1,9 +1,9 @@
 """Zone-planned sorted-merge read of the encoded chunk store.
 
-``decode_chunks(ordered=True)`` reproduces encode order with a TOTAL
-sort (Spark ``orderBy``: a sampling job + range shuffle of decoded
-rows) — the expensive path the reference never pays, because its
-consumers iterate sorted runs and k-way merge them
+Re-sorting decoded rows (``decode_chunks(...).orderBy(key)``) is a
+TOTAL sort: a sampling job plus a range shuffle of decoded rows — the
+expensive path the reference never pays, because its consumers iterate
+sorted runs and k-way merge them
 (Parquet.Producers/ParquetProduction.cs:199,217,403 and
 Parquet/MergeSorter.cs:83 k-way SortedMerge pre-sorted parquet streams
 instead of re-sorting).
@@ -16,12 +16,10 @@ output needs no sampling and no global sort —
 1. **Plan** (metadata only): distinct chunk zones → ``R`` DISJOINT key
    ranges cut at chunk boundaries, weighted by row counts (the same
    planning input Spark's range partitioner must sample a data pass to
-   estimate). Small stores cut on the driver; past
-   ``plan_collect_threshold`` chunks the cut selection runs as a Spark
-   job over the zone frame (partition-prefix-sum → row-weighted
-   quantile buckets) and only the ~R cut values are collected — the
-   driver never holds O(chunks) anything, the same discipline the
-   manifest tree applies to file lists.
+   estimate). The cuts are computed on an executor — one window over
+   the zones in key order picks the row-weighted quantile cuts — and
+   the driver holds O(R): one guard row plus at most ``R`` cuts, at
+   any chunk count.
 2. **Assign**: each chunk joins (broadcast) every range its zone
    overlaps — after consolidation runs are disjoint and the fan-out is
    ~1; overlapping incremental waves are where the merge actually
@@ -58,19 +56,13 @@ string order (documented in :func:`_zone_sql_type`).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import logging
+
+from pyspark.sql import DataFrame, Window, functions as F
 
 from .encoder import _spark_type, chunk_fields, chunk_ident
 
-# Above this many chunks, cut selection runs distributed (see
-# plan_key_ranges). Mirrors the inline-vs-sharded manifest threshold
-# pattern: small metadata plans on the driver, big metadata plans as
-# Spark jobs with O(R) collected.
-PLAN_COLLECT_THRESHOLD = 32768
-
-# rows most recently materialized onto the driver by plan_key_ranges —
-# pinned by tests to prove planning collects O(ranges), not O(chunks)
-LAST_PLAN_COLLECTED = 0
+_log = logging.getLogger("parquet_producers_spark")
 
 
 def _zone_sql_type(key_spark_type: str) -> str | None:
@@ -109,8 +101,6 @@ def plan_key_ranges(
     chunks: DataFrame,
     n_ranges: int | None = None,
     key_type: str | None = None,
-    plan_collect_threshold: int = PLAN_COLLECT_THRESHOLD,
-    tiebreak: bool = False,
 ) -> list[tuple]:
     """Cut the key space into ``n_ranges`` half-open ranges ``[lo, hi)``
     (``None`` = unbounded) from the chunk table's zone maps — cut
@@ -119,29 +109,24 @@ def plan_key_ranges(
     ``key_type`` is the SQL type zones compare under (from
     :func:`_zone_sql_type`; ``None`` = string order).
 
-    Planning is METADATA only (one row per chunk, no blobs) and its
-    driver footprint is O(ranges): up to ``plan_collect_threshold``
-    chunks the zone rows come to the driver directly (they're small by
-    construction — the inline-manifest regime); past it, cut selection
-    runs as a Spark job — per-partition row sums (collects one row per
-    partition) seed a partition-prefix cumulative sum, every zone maps
-    to its row-weighted quantile bucket ``k = cum_rows // step``, and
-    only the first zone boundary of each bucket (≤ R values) is
-    collected. The same wall the manifest tree and distributed
-    diff/vacuum removed: never hold one row per planned object on the
-    driver.
+    Every cut is a ``(key, tb)`` pair: the chunk's ``key_min`` and its
+    deterministic tiebreak (:func:`_chunk_tiebreak`, the expression
+    :func:`read_sorted` attaches to chunk rows), compared
+    lexicographically at chunk granularity. Chunks with equal
+    ``key_min`` can land in adjacent ranges, so a hot key spanning many
+    chunks splits across ranges instead of decoding as one straggler
+    task, while global KEY order is untouched (equal keys carry no
+    order contract).
 
-    ``tiebreak=True`` (hot-key skew defense, guide §2.5 — a single key
-    holding a large fraction of rows must not become one undivided
-    straggler/OOM task): every cut carries a deterministic per-chunk
-    tiebreak (``xxhash64`` over the chunk identity, the same expression
-    :func:`read_sorted` attaches to chunk rows), and bounds become
-    ``(key, tb)`` pairs compared lexicographically AT CHUNK GRANULARITY
-    — chunks with equal ``key_min`` can land in adjacent ranges, so a
-    hot key spanning many chunks splits across ranges while global
-    KEY order is untouched (equal keys carry no order contract). The
-    default (scalar cuts) is unchanged."""
-    global LAST_PLAN_COLLECTED
+    Planning is metadata only (one row per chunk, no blobs) and runs on
+    an executor: one window over the zones in global ``(mn, tb, mx)``
+    order gives each zone its exclusive cumulative row count, the zone
+    falls in the row-weighted bucket ``k = floor(cum / step)``, and the
+    first cuttable zone of each bucket ``k >= 1`` is a cut. The driver
+    receives one guard row and at most ``R`` cut rows — never one row
+    per chunk. Null-key zones order first (their rows live in the first
+    range); a NaN zone is never a cut (Spark orders NaN above every
+    double, so NaN chunks fall in the last range)."""
     spark = chunks.sparkSession
     ident = chunk_ident(chunks)
     cast_t = key_type or "string"
@@ -152,29 +137,8 @@ def plan_key_ranges(
              F.first("key_min").isNotNull().alias("zoned"),
              F.first("n_rows").alias("rows"),
              F.max(_key_nulls_col()).alias("knulls"))
-        # the chunk tiebreak MUST be the same expression read_sorted
-        # attaches to chunk rows (_chunk_tiebreak), or plan bounds and
-        # assignment would disagree
         .withColumn("tb", _chunk_tiebreak(ident))
-        # planning runs 1-2 jobs over this frame; pin it so an
-        # encode-in-plan upstream computes once, not per job
-        .localCheckpoint(eager=False)
     )
-
-    def _guards(n, keyless, uncastable):
-        if not n:
-            raise ValueError(
-                "sorted read needs key zones on every chunk — "
-                "encode with a key_col")
-        if keyless:
-            raise ValueError(
-                f"{keyless} chunk(s) carry no key zone — "
-                "encode with a key_col")
-        if uncastable:
-            raise ValueError(
-                f"{uncastable} chunk zone(s) do not parse as "
-                f"{cast_t} — the store's key type disagrees with the "
-                "requested comparison type")
 
     head = zones.agg(
         F.count("*").alias("n"),
@@ -185,99 +149,60 @@ def plan_key_ranges(
               .otherwise(0)).alias("keyless"),
         # zone present as a string but not castable under key_type —
         # refuse rather than silently mis-assign the chunk. A NULL
-        # key_max alone also counts (ADVICE r6 #3): a chunk whose mx
-        # fails the cast would otherwise satisfy only the first range's
-        # overlap predicate and silently drop its rows past the first
-        # cut.
+        # key_max alone also counts: a chunk whose mx fails the cast
+        # would otherwise satisfy only the first range's overlap
+        # predicate and silently drop its rows past the first cut.
         F.sum(F.when(F.col("zoned")
                      & (F.col("mn").isNull() | F.col("mx").isNull()), 1)
               .otherwise(0)).alias("uncastable"),
     ).first()
-    LAST_PLAN_COLLECTED = 1
-    _guards(head["n"], head["keyless"], head["uncastable"])
-    total = int(head["total"])
+    if not head["n"]:
+        raise ValueError(
+            "sorted read needs key zones on every chunk — "
+            "encode with a key_col")
+    if head["keyless"]:
+        raise ValueError(
+            f"{head['keyless']} chunk(s) carry no key zone — "
+            "encode with a key_col")
+    if head["uncastable"]:
+        raise ValueError(
+            f"{head['uncastable']} chunk zone(s) do not parse as "
+            f"{cast_t} — the store's key type disagrees with the "
+            "requested comparison type")
+    n, total = int(head["n"]), int(head["total"])
     r = n_ranges or max(1, min(
-        int(head["n"]),
-        int(spark.conf.get("spark.sql.shuffle.partitions"))))
+        n, int(spark.conf.get("spark.sql.shuffle.partitions"))))
     step = total / r
-    # NaN zone values (double keys): Spark orders NaN ABOVE every
-    # double, so NaN-keyed chunks belong to the last range — a NaN must
-    # never become a cut (Python sorted() also misorders NaN, ADVICE r6
-    # #1). _nan maps NaN to +inf for ordering and flags it for the cut
-    # guard; non-float types pass through untouched.
-    def _is_nan(v):
-        return isinstance(v, float) and v != v
 
-    def _ord(v):
-        return float("inf") if _is_nan(v) else v
-
-    if int(head["n"]) <= plan_collect_threshold:
-        rows = zones.select("mn", "mx", "rows", "tb").collect()
-        LAST_PLAN_COLLECTED += len(rows)
-        # nulls (all-null-key chunks) order first — they live in the
-        # first range, so their weight fronts the cumulative sum. With
-        # tiebreak the walk orders equal-key chunks by tb, matching the
-        # composite bound comparisons in read_sorted.
-        rows = sorted(rows, key=lambda z: ((z["mn"] is not None),
-                                           _ord(z["mn"]) if z["mn"] is not None
-                                           else 0,
-                                           z["tb"] if tiebreak else 0,
-                                           _ord(z["mx"]) if z["mx"] is not None
-                                           else 0))
-        cuts, cum, seen = [], 0, set()
-        for z in rows:
-            k = int(cum // step)
-            if (k >= 1 and k not in seen and z["mn"] is not None
-                    and not _is_nan(z["mn"])):
-                seen.add(k)
-                cuts.append((z["mn"], z["tb"]) if tiebreak else z["mn"])
-            cum += z["rows"]
-    else:
-        from pyspark.sql import Window
-
-        order = [F.col("mn").asc_nulls_first(), F.col("mx").asc_nulls_first()]
-        if tiebreak:
-            order = [F.col("mn").asc_nulls_first(), F.col("tb").asc(),
-                     F.col("mx").asc_nulls_first()]
-        part = (zones.repartitionByRange(
-                    int(spark.conf.get("spark.sql.shuffle.partitions")),
-                    *order)
-                .withColumn("pid", F.spark_partition_id())
-                .localCheckpoint(eager=False))
-        psums = part.groupBy("pid").agg(F.sum("rows").alias("prows")) \
-            .orderBy("pid").collect()
-        LAST_PLAN_COLLECTED += len(psums)
-        offs, acc = {}, 0
-        for p in psums:
-            offs[int(p["pid"])] = acc
-            acc += int(p["prows"])
-        odf = spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offs.items()],
-            schema="pid int, off long")
-        w = (Window.partitionBy("pid").orderBy(*order)
-             .rowsBetween(Window.unboundedPreceding, -1))
-        cum_excl = (F.coalesce(F.sum("rows").over(w), F.lit(0))
-                    + F.col("off"))
-        cuttable = F.col("mn").isNotNull()
-        if (cast_t or "").lower() in ("double", "float", "real"):
-            # NaN must never become a cut (see driver path above)
-            cuttable = cuttable & ~F.isnan(F.col("mn"))
-        cut_expr = (F.min(F.struct(F.col("mn"), F.col("tb"))).alias("cut")
-                    if tiebreak else F.min("mn").alias("cut"))
-        cut_rows = (
-            part.join(F.broadcast(odf), "pid")
-            .withColumn("k", F.floor(cum_excl / F.lit(step)))
-            .filter((F.col("k") >= 1) & cuttable)
-            .groupBy("k").agg(cut_expr)
-            .collect()
-        )
-        LAST_PLAN_COLLECTED += len(cut_rows)
-        cuts = [tuple(c["cut"]) if tiebreak else c["cut"]
-                for c in cut_rows]
-
-    cuts = sorted(set(cuts))
+    w = (Window.orderBy(F.col("mn").asc_nulls_first(), F.col("tb"),
+                        F.col("mx").asc_nulls_first())
+         .rowsBetween(Window.unboundedPreceding, -1))
+    cum = F.coalesce(F.sum("rows").over(w), F.lit(0))
+    cuttable = F.col("mn").isNotNull()
+    if cast_t.lower() in ("double", "float", "real"):
+        cuttable = cuttable & ~F.isnan(F.col("mn"))
+    cut_rows = (
+        zones.withColumn("cum", cum)
+        .withColumn("k", F.floor(F.col("cum") / F.lit(step)))
+        .filter((F.col("k") >= 1) & cuttable)
+        .groupBy("k").agg(F.min(F.struct("mn", "tb", "cum")).alias("cut"))
+        .collect()
+    )
+    # a cut zone's exclusive cumulative rows is where its range starts;
+    # two buckets can pick the same zone (one zone heavier than a step)
+    starts: dict[tuple, int] = {}
+    for c in cut_rows:
+        mn, tb, at = c["cut"]
+        starts[(mn, tb)] = min(at, starts.get((mn, tb), at))
+    cuts = sorted(starts)
     bounds = [None] + cuts + [None]
-    return [(bounds[i], bounds[i + 1]) for i in range(len(bounds) - 1)]
+    ranges = [(bounds[i], bounds[i + 1]) for i in range(len(bounds) - 1)]
+    edges = [0] + [starts[c] for c in cuts] + [total]
+    largest = max(b - a for a, b in zip(edges, edges[1:]))
+    _log.info("sorted-read plan: %d zones, %d rows, %d ranges requested,"
+              " %d planned; largest range %d rows vs mean %.0f",
+              n, total, r, len(ranges), largest, total / len(ranges))
+    return ranges
 
 
 def read_sorted(
@@ -305,15 +230,18 @@ def read_sorted(
     exchange (ranges are already whole in their partition)."""
     import pyarrow as pa
 
-    from .encoder import _py, assemble_chunk, tagged_output
+    from .encoder import _py, assemble_chunk, decoded_output
 
     spark = chunks.sparkSession
-    # planning runs 3-4 metadata jobs; over a checkpointed chunk frame
-    # each would re-scan the full BLOB bytes (checkpoint rows are
-    # materialized whole — column pruning can't skip the data column).
-    # One slim projection pays that scan once; every planning job after
-    # it reads metadata-only rows. The MAIN plan below still builds on
-    # ``chunks`` directly, so the one-blob-exchange shape is unchanged.
+    # planning runs ~10 metadata jobs (chunk_fields + plan_key_ranges);
+    # over an unmaterialized encode each would re-run the encode, and
+    # over a checkpointed chunk frame each would re-scan the full BLOB
+    # bytes (checkpoint rows are materialized whole — column pruning
+    # can't skip the data column). One slim projection pays that once.
+    # Only planning reads it, before the main plan runs: the MAIN plan
+    # below builds on ``chunks`` directly, so a lost checkpoint block
+    # fails the read before it emits a row, and the one-blob-exchange
+    # shape is unchanged.
     meta = chunks.drop("data").localCheckpoint(eager=False)
     fields = chunk_fields(meta)
     types = {f.name: f.type for f in fields}
@@ -333,10 +261,6 @@ def read_sorted(
     zone_t = _zone_sql_type(_spark_type(key_arrow))
     # zone_t None → string comparison (identical plan; the decode task
     # casts the key to string for the exact bound filter)
-    # tiebreak cuts (hot-key skew defense): bounds are (key, chunk-tb)
-    # pairs, so one key spanning many chunks can split across adjacent
-    # ranges — global KEY order is unaffected (equal keys carry no
-    # order contract), and every row still lands in exactly one range.
     #
     # ASSIGNMENT COST BUDGET (documented bound): the broadcast
     # theta-join below evaluates R range predicates per chunk-COLUMN
@@ -349,8 +273,7 @@ def read_sorted(
     # chunks first (compaction) rather than widen this join — zones and
     # ranges are both sorted, so a sort-merge interval join is the
     # known upgrade path if that regime ever becomes real.
-    ranges = plan_key_ranges(meta, n_ranges, key_type=zone_t,
-                             tiebreak=True)
+    ranges = plan_key_ranges(meta, n_ranges, key_type=zone_t)
     ident = chunk_ident(chunks)
 
     # assignment = broadcast theta-join of the chunk rows against the
@@ -405,7 +328,7 @@ def read_sorted(
     # onto one task, which reassembles every overlapping chunk,
     # bound-filters, and concatenates the runs
     data_schema = pa.schema(fields)
-    ddl, emit = tagged_output(pa.field("range_id", pa.int32()), fields)
+    ddl, emit = decoded_output(fields, pa.field("range_id", pa.int32()))
     as_string = zone_t is None and not pa.types.is_string(key_arrow) \
         and not pa.types.is_large_string(key_arrow)
 
@@ -474,8 +397,8 @@ def read_sorted(
                     pc.is_null(ks), below_hi()))
             if tbl.num_rows:
                 tables.append(tbl)
-        return emit(rid, pa.concat_tables(tables) if tables
-                    else data_schema.empty_table())
+        return emit(pa.concat_tables(tables) if tables
+                    else data_schema.empty_table(), rid)
 
     out = fat.groupBy("range_id", "lo", "lo_tb",
                       "hi", "hi_tb").applyInArrow(dec, schema=ddl)

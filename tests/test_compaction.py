@@ -35,11 +35,11 @@ def _multiset(df):
 
 
 def test_compaction_preserves_rows_and_reduces_chunks(spark, runty_chunks):
-    before = decode_chunks(runty_chunks, ordered=False)
+    before = decode_chunks(runty_chunks)
     compacted = compact_chunks(
         runty_chunks, sort_cols=["repo", "path"], chunk_rows=CHUNK,
     ).localCheckpoint(eager=True)
-    after = decode_chunks(compacted, ordered=False)
+    after = decode_chunks(compacted)
 
     assert _multiset(after) == _multiset(before)  # bit-identical multiset
 
@@ -126,8 +126,8 @@ def test_compact_stage_writes_new_version_with_lineage(spark, tmp_path):
     v2 = read_chunks(spark, root, "code", 2).localCheckpoint(eager=True)
 
     # decoded parity across versions
-    a = sorted(tuple(r) for r in decode_chunks(v1, ordered=False).collect())
-    b = sorted(tuple(r) for r in decode_chunks(v2, ordered=False).collect())
+    a = sorted(tuple(r) for r in decode_chunks(v1).collect())
+    b = sorted(tuple(r) for r in decode_chunks(v2).collect())
     assert a == b
 
     # fewer chunks, same slice partitioning
@@ -139,7 +139,7 @@ def test_compact_stage_writes_new_version_with_lineage(spark, tmp_path):
 
     # every rewritten row still lives in the slice its key hashes to
     from pyspark.sql import functions as F
-    dec = decode_chunks(v2.filter(F.col("slice_id") == 1), ordered=False)
+    dec = decode_chunks(v2.filter(F.col("slice_id") == 1))
     derived = dec.withColumn(
         "s", F.pmod(F.hash(F.col("repo")), F.lit(3))).select("s").distinct().collect()
     assert [r.s for r in derived] == [1]
@@ -299,8 +299,8 @@ def test_compaction_multiset_parametrized(spark, n_docs, chunk, parts):
     comp = compact_chunks(
         chunks, sort_cols=["repo", "path"], chunk_rows=chunk,
     ).localCheckpoint(eager=True)
-    assert _multiset(decode_chunks(comp, ordered=False)) == \
-        _multiset(decode_chunks(chunks, ordered=False))
+    assert _multiset(decode_chunks(comp)) == \
+        _multiset(decode_chunks(chunks))
     # (part_id, chunk_seq, column) identities stay unique after rewrite
     assert comp.select("part_id", "chunk_seq", "column").distinct().count() \
         == comp.count()

@@ -31,16 +31,25 @@ def test_roundtrip_bit_identical(spark, source):
     chunks = encode_partitions(
         source, sort_cols=["repo", "path"], partitions=4, chunk_rows=512
     ).cache()
-    decoded = decode_chunks(chunks, ordered=True)
+    decoded = decode_chunks(chunks)
 
-    orig = source.orderBy("repo", "path").collect()
-    got = decoded.collect()
+    def rows(df):
+        return sorted(
+            (r.repo, r.path, r.commit, r.lang,
+             hashlib.sha256(r.content.encode()).hexdigest())
+            for r in df.collect())
+
+    orig, got = rows(source), rows(decoded)
     assert len(got) == len(orig) == N_FILES
-    # decoded rows must match bit-identically, including global sort order
-    for o, g in zip(orig, got):
-        assert (o.repo, o.path, o.commit, o.lang) == (g.repo, g.path, g.commit, g.lang)
-        assert hashlib.sha256(o.content.encode()).hexdigest() == \
-            hashlib.sha256(g.content.encode()).hexdigest()
+    # the decoded multiset is bit-identical to the source
+    assert got == orig
+    # the encode is sorted at rest: walked in (part_id, chunk_seq)
+    # order, the key zones never decrease
+    zones = (chunks.filter("col_idx = 0").orderBy("part_id", "chunk_seq")
+             .select("key_min", "key_max").collect())
+    assert len(zones) > 4
+    flat = [k for z in zones for k in (z.key_min, z.key_max)]
+    assert flat == sorted(flat)
     chunks.unpersist()
 
 
@@ -108,10 +117,9 @@ def test_encode_files_direct_roundtrip(spark, tmp_path):
         return h.hexdigest()
 
     direct = decode_chunks(
-        encode_files(spark, files, key_col="repo"), ordered=False)
+        encode_files(spark, files, key_col="repo"))
     viaspark = decode_chunks(
-        encode_partitions(spark.read.parquet(src), key_col="repo"),
-        ordered=False)
+        encode_partitions(spark.read.parquet(src), key_col="repo"))
     want = digest(spark.read.parquet(src))
     assert digest(direct) == want
     assert digest(viaspark) == want
@@ -147,9 +155,9 @@ def test_col_zone_map_prunes_and_preserves_results(spark, sf_dir):
 
     flt = (F.col("n_chars") >= 100) & (F.col("n_chars") <= 199)
     got = sorted(tuple(r) for r in
-                 decode_chunks(pruned, ordered=False).filter(flt).collect())
+                 decode_chunks(pruned).filter(flt).collect())
     want = sorted(tuple(r) for r in
-                  decode_chunks(chunks, ordered=False).filter(flt).collect())
+                  decode_chunks(chunks).filter(flt).collect())
     assert got == want and len(want) > 0
 
 
@@ -177,7 +185,7 @@ def test_sliced_encode_remainder_carries_across_flushes(spark):
         .select("slice_id", "n_rows").collect()
     assert all(r.n_rows <= 16 for r in per)
     assert {r.slice_id for r in per} == {0, 1}
-    decoded = decode_chunks(chunks, ordered=False)
+    decoded = decode_chunks(chunks)
     assert decoded.count() == 200
     assert decoded.select(F.sum("id")).first()[0] == sum(range(200))
 
@@ -212,13 +220,12 @@ def test_encode_files_splits_giant_file_row_groups(spark, tmp_path):
     n_units = chunks.select("part_id").distinct().count()
     assert n_units == 5  # giant: 8000/2000 = 4 units, small: 1
 
-    decoded = decode_chunks(chunks, ordered=False)
+    decoded = decode_chunks(chunks)
     assert decoded.count() == 8001
     assert decoded.agg(F.sum("k")).first()[0] == sum(range(8000)) + 100000
     # parity with the unsplit read
     whole = decode_chunks(
-        encode_files(spark, files, chunk_rows=512, key_col="k"),
-        ordered=False)
+        encode_files(spark, files, chunk_rows=512, key_col="k"))
     assert sorted(tuple(r) for r in decoded.collect()) == \
         sorted(tuple(r) for r in whole.collect())
 
@@ -241,11 +248,9 @@ def test_encode_staged_parity(spark, tmp_path):
 
     staged = decode_chunks(
         encode_staged(spark, src, str(tmp_path / "spill"),
-                      sort_cols=["repo", "path"], partitions=3),
-        ordered=False)
+                      sort_cols=["repo", "path"], partitions=3))
     onephase = decode_chunks(
-        encode_partitions(src, sort_cols=["repo", "path"], partitions=3),
-        ordered=False)
+        encode_partitions(src, sort_cols=["repo", "path"], partitions=3))
     assert digest(staged) == digest(onephase) == digest(src)
 
 

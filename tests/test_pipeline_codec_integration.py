@@ -40,9 +40,7 @@ def test_producer_content_through_codec(spark, tmp_path):
     )
     assert all(not r.skipped for r in res)
     decoded = decode_chunks(
-        read_chunks(spark, str(tmp_path / "enc"), "words_content", v),
-        ordered=False,
-    )
+        read_chunks(spark, str(tmp_path / "enc"), "words_content", v))
 
     def digest(df):
         rows = sorted(tuple(r) for r in df.collect())

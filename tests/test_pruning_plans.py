@@ -33,8 +33,8 @@ def test_zone_map_pruning(spark, chunk_table):
     kept = pruned.count()
     assert 0 < kept < all_chunks, (kept, all_chunks)
     # decoded pruned set still contains every row in the key range
-    decoded = decode_chunks(pruned, ordered=False)
-    want = decode_chunks(chunk_table, ordered=False).filter(
+    decoded = decode_chunks(pruned)
+    want = decode_chunks(chunk_table).filter(
         (F.col("repo") >= "org50") & (F.col("repo") <= "org60"))
     assert decoded.filter(
         (F.col("repo") >= "org50") & (F.col("repo") <= "org60")
@@ -45,7 +45,7 @@ def test_column_projection(spark, chunk_table):
     just_two = project_chunks(chunk_table, ["repo", "path"])
     assert set(r.column for r in just_two.select("column").distinct().collect()) \
         == {"repo", "path"}
-    decoded = decode_chunks(just_two, ordered=False)
+    decoded = decode_chunks(just_two)
     assert decoded.columns == ["repo", "path"]
     # blob bytes read drop accordingly
     full = chunk_table.agg(F.sum("enc_bytes")).collect()[0][0]
@@ -111,8 +111,8 @@ def test_col_zone_prune_stats_scan_reads_no_blobs(spark, chunk_table,
     from parquet_producers_spark.encoder import decode_chunks
 
     flt = (F.col("repo") >= "org10") & (F.col("repo") <= "org20")
-    got = decode_chunks(pruned, ordered=False).filter(flt).count()
-    want = decode_chunks(reread, ordered=False).filter(flt).count()
+    got = decode_chunks(pruned).filter(flt).count()
+    want = decode_chunks(reread).filter(flt).count()
     assert got == want > 0
 
 
@@ -139,7 +139,7 @@ def test_bloom_prune_equality(spark, sf_dir):
 
     probe_lang = docs.select("lang").first()[0]
     pruned = prune_chunks_eq(chunks, "lang", probe_lang)
-    got = (decode_chunks(pruned, ordered=False)
+    got = (decode_chunks(pruned)
            .filter(F.col("lang") == probe_lang))
     want = docs.filter(F.col("lang") == probe_lang)
     assert sorted(map(tuple, got.collect())) == \
@@ -155,8 +155,7 @@ def test_bloom_prune_equality(spark, sf_dir):
     some_id = docs.agg(F.max("doc_id")).first()[0]
     n_id = prune_chunks_eq(chunks, "doc_id", some_id).count()
     assert n_id < n_all * 0.2
-    got_id = (decode_chunks(prune_chunks_eq(chunks, "doc_id", some_id),
-                            ordered=False)
+    got_id = (decode_chunks(prune_chunks_eq(chunks, "doc_id", some_id))
               .filter(F.col("doc_id") == some_id).count())
     assert got_id == 1
 

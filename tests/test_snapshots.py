@@ -61,8 +61,7 @@ def test_snapshot_feeds_direct_encoder(spark, tmp_path):
     )
     commit_snapshot(spark, src, t)
     paths = [f["path"] for f in snapshot_files(t)]
-    decoded = decode_chunks(encode_files(spark, paths, key_col="repo"),
-                            ordered=False)
+    decoded = decode_chunks(encode_files(spark, paths, key_col="repo"))
 
     def digest(df):
         h = hashlib.sha256()
@@ -393,9 +392,34 @@ def test_encode_table_incremental_waves(spark, tmp_path):
             h.update((r.repo + r.path + r.commit + r.content).encode())
         return h.hexdigest()
 
-    decoded = decode_chunks(read_encoded_table(spark, enc, "code"),
-                            ordered=False)
+    decoded = decode_chunks(read_encoded_table(spark, enc, "code"))
     assert digest(decoded) == digest(read_snapshot(spark, t))
+
+
+def test_decode_encoded_table_with_many_slices(spark, tmp_path):
+    """A wave with slice ids past 9 decodes every row: a chunk's
+    identity (enc_version, slice_id, part_id, chunk_seq) is a decode
+    group key only, never packed into one integer."""
+    from parquet_producers_spark.datagen import source_code_df
+    from parquet_producers_spark.encoder import decode_chunks
+    from parquet_producers_spark.sources.snapshots import (
+        encode_table_incremental,
+        read_encoded_table,
+    )
+
+    t = str(tmp_path / "tbl")
+    enc = str(tmp_path / "enc")
+    src = source_code_df(spark, 300, seed=5, partitions=2)
+    commit_snapshot(spark, src, t)
+    encode_table_incremental(spark, t, enc, "code",
+                             sort_cols=["repo", "path"], n_slices=12)
+    chunks = read_encoded_table(spark, enc, "code")
+    assert chunks.filter("slice_id >= 10").count() > 0
+    got = decode_chunks(chunks).select("repo", "path", "content")
+    want = read_snapshot(spark, t).select("repo", "path", "content")
+    assert got.count() == 300
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 def test_consolidate_encoded_waves(spark, tmp_path):
@@ -546,8 +570,7 @@ def test_zero_row_first_wave_reader_contract(spark, tmp_path):
     w2 = encode_table_incremental(spark, t, enc, "code",
                                   sort_cols=["id"], n_slices=2)
     assert w2["version"] == 1 and w2["rows"] == 2
-    decoded = decode_chunks(read_encoded_table(spark, enc, "code"),
-                            ordered=False)
+    decoded = decode_chunks(read_encoded_table(spark, enc, "code"))
     assert sorted((r.id, r.v) for r in decoded.collect()) == [
         (1, "a"), (2, "b")]
 
@@ -827,8 +850,7 @@ def test_incremental_wave_rebases_on_non_append_history(spark, tmp_path):
     w = encode_table_incremental(spark, t, enc, "code", sort_cols=["id"],
                                  n_slices=2)
     assert w["rebased_from"] == [1] and w["version"] == 2
-    decoded = decode_chunks(read_encoded_table(spark, enc, "code"),
-                            ordered=False)
+    decoded = decode_chunks(read_encoded_table(spark, enc, "code"))
     assert sorted(r.id for r in decoded.collect()) == list(range(2, 8))
     # the pre-rebase version is unreferenced and older than the fence
     assert expire_encoded_versions(enc, "code") == [1]
@@ -839,8 +861,7 @@ def test_incremental_wave_rebases_on_non_append_history(spark, tmp_path):
     w2 = encode_table_incremental(spark, t, enc, "code", sort_cols=["id"],
                                   n_slices=2)
     assert w2["version"] == 3 and "rebased_from" not in w2
-    decoded = decode_chunks(read_encoded_table(spark, enc, "code"),
-                            ordered=False)
+    decoded = decode_chunks(read_encoded_table(spark, enc, "code"))
     assert sorted(r.id for r in decoded.collect()) == \
         list(range(2, 8)) + [100]
 
@@ -959,8 +980,7 @@ def test_expired_manifest_link_triggers_rebase(spark, tmp_path):
             h.update(f"{r.id}:{r.v};".encode())
         return h.hexdigest()
 
-    decoded = decode_chunks(read_encoded_table(spark, enc, "code"),
-                            ordered=False)
+    decoded = decode_chunks(read_encoded_table(spark, enc, "code"))
     assert digest(decoded) == digest(read_snapshot(spark, t))
 
 

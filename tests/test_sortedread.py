@@ -269,16 +269,36 @@ def test_read_sorted_timestamp_keys(spark):
             and d.exceptAll(out.drop("range_id")).count() == 0)
 
 
-def test_plan_collects_o_ranges_not_chunks(spark):
+def _reference_cuts(zones, r):
+    """The row-weighted cut walk, on the driver over every zone: in
+    (key_min, tb, key_max) order a zone's bucket is
+    floor(exclusive cumulative rows / step), and the first zone of each
+    bucket k >= 1 is a (key_min, tb) cut."""
+    import math
+
+    step = sum(z["rows"] for z in zones) / r
+    cuts, cum, seen = [], 0, set()
+    for z in sorted(zones, key=lambda z: (z["mn"], z["tb"], z["mx"])):
+        k = math.floor(cum / step)
+        if k >= 1 and k not in seen:
+            seen.add(k)
+            cuts.append((z["mn"], z["tb"]))
+        cum += z["rows"]
+    return sorted(set(cuts))
+
+
+def test_plan_collects_o_ranges_not_chunks(spark, monkeypatch):
     """At north-rule scale the chunk count reaches 10^7-10^8, so the
-    planner must never hold one row per chunk on the driver: past
-    PLAN_COLLECT_THRESHOLD, cut selection runs as a Spark job and only
-    per-partition sums + the ~R cuts are collected. 100k synthetic
-    chunk zones plan in seconds, the driver sees O(R) rows, and the
-    distributed cuts equal the driver-path cuts exactly."""
+    planner must never hold one row per chunk on the driver: cut
+    selection runs as one Spark window job and the driver receives the
+    guard row plus at most R cuts. 100k synthetic chunk zones plan in
+    seconds, and the cuts equal a driver-side reference walk, for
+    distinct and for duplicate key_min values."""
     import time
 
-    from parquet_producers_spark import sortedread
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from parquet_producers_spark.sortedread import _chunk_tiebreak
 
     n = 100_000
     zf = spark.range(n).select(
@@ -291,35 +311,43 @@ def test_plan_collects_o_ranges_not_chunks(spark):
         .cast("long").alias("n_rows"),
         F.lit('{"key_nulls":0}').alias("params"))
 
-    t0 = time.time()
-    dist = plan_key_ranges(zf, 64)  # n >> threshold → distributed path
-    elapsed = time.time() - t0
-    assert elapsed < 60, f"planning took {elapsed:.1f}s on metadata only"
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert sortedread.LAST_PLAN_COLLECTED <= 64 + shuffle + 1, \
-        f"driver saw {sortedread.LAST_PLAN_COLLECTED} rows"
-    assert dist[0][0] is None and dist[-1][1] is None
-    cuts = [r[1] for r in dist[:-1]]
-    assert cuts == sorted(set(cuts)) and len(dist) > 32
+    def zones(df):
+        return [z.asDict() for z in df.select(
+            F.col("key_min").alias("mn"), F.col("key_max").alias("mx"),
+            F.col("n_rows").alias("rows"),
+            _chunk_tiebreak(["part_id", "chunk_seq"]).alias("tb"),
+        ).collect()]
 
-    drv = plan_key_ranges(zf, 64, plan_collect_threshold=2 * n)
-    assert sortedread.LAST_PLAN_COLLECTED >= n  # proves path taken
-    assert drv == dist  # both paths pick identical cut points
-
-    # tiebreak cuts over duplicate key_min values (4 chunks per key):
-    # the (key, chunk-tb) composite order must agree across both paths
     m = 400
     key = F.format_string("k%07d", (F.col("part_id") / 4).cast("int"))
     dup = zf.limit(m).withColumn("key_min", key).withColumn("key_max", key)
-    dist_tb = plan_key_ranges(dup, 16, tiebreak=True,
-                              plan_collect_threshold=m // 4)
-    assert sortedread.LAST_PLAN_COLLECTED < m  # distributed path taken
-    drv_tb = plan_key_ranges(dup, 16, tiebreak=True,
-                             plan_collect_threshold=2 * m)
-    assert sortedread.LAST_PLAN_COLLECTED >= m
-    assert len(drv_tb) > 4
-    assert all(len(r[1]) == 2 for r in drv_tb[:-1])  # (key, tb) cuts
-    assert drv_tb == dist_tb
+    want = _reference_cuts(zones(zf), 64)
+    want_dup = _reference_cuts(zones(dup), 16)
+
+    received = []
+    collect = DataFrame.collect
+
+    def counting_collect(self):
+        rows = collect(self)
+        received.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", counting_collect)
+    t0 = time.time()
+    ranges = plan_key_ranges(zf, 64)
+    elapsed = time.time() - t0
+    assert elapsed < 60, f"planning took {elapsed:.1f}s on metadata only"
+    assert sum(received) <= 64 + 1, f"driver saw {received} rows"
+    assert ranges[0][0] is None and ranges[-1][1] is None
+    assert len(ranges) > 32
+    assert [r[1] for r in ranges[:-1]] == want
+
+    # 4 chunks per key_min: equal keys split by the chunk tiebreak
+    received.clear()
+    ranges = plan_key_ranges(dup, 16)
+    assert sum(received) <= 16 + 1, f"driver saw {received} rows"
+    assert len(ranges) > 4
+    assert [r[1] for r in ranges[:-1]] == want_dup
 
 
 def test_read_sorted_nan_keys_route_to_last_range(spark):
@@ -361,12 +389,15 @@ def test_read_sorted_refuses_binary_keys(spark):
         read_sorted(chunks, "k", n_ranges=2)
 
 
-def test_read_sorted_hot_key_splits_across_ranges(spark):
+def test_read_sorted_hot_key_splits_across_ranges(spark, caplog):
     """VERDICT r6 #3 (guide §2.5): one key holding 50% of all rows must
     NOT decode as one undivided straggler task. Composite (key,
     chunk-tiebreak) cuts split the hot key across >1 adjacent range,
     ranges stay balanced within 2× of the mean, global key order and
-    full content parity hold."""
+    full content parity hold. The planner logs its balance at INFO."""
+    import logging
+    import re
+
     n = 4000
     d = spark.range(n).select(
         F.when(F.col("id") % 2 == 0, F.lit("hotkey"))
@@ -374,9 +405,19 @@ def test_read_sorted_hot_key_splits_across_ranges(spark):
         F.sha2(F.col("id").cast("string"), 256).alias("v"))
     chunks = encode_partitions(
         d, sort_cols=["k"], partitions=4, chunk_rows=128, profile="fast")
-    out = read_sorted(chunks, "k", n_ranges=8)
+    with caplog.at_level(logging.INFO, logger="parquet_producers_spark"):
+        out = read_sorted(chunks, "k", n_ranges=8)
+    plan = re.search(
+        r"sorted-read plan: (\d+) zones, (\d+) rows, 8 ranges requested,"
+        r" (\d+) planned; largest range (\d+) rows vs mean (\d+)",
+        caplog.text)
+    assert plan, caplog.text
+    n_zones, n_rows, planned, largest, mean = map(int, plan.groups())
+    assert n_zones > 8 and n_rows == n and 1 < planned <= 8
+    assert mean == round(n / planned) and mean <= largest <= 2 * mean
     rows = out.select("range_id", "k").collect()
     assert len(rows) == n
+    assert len({r["range_id"] for r in rows}) == planned
     # the hot key spans more than one range
     hot_rids = {r["range_id"] for r in rows if r["k"] == "hotkey"}
     assert len(hot_rids) > 1, "hot key decoded as a single range"

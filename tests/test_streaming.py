@@ -317,8 +317,7 @@ def test_stream_into_encoded_store(spark, tmp_path):
         read_chunks(spark, enc, "docs", v)
         .withColumn("enc_version", F.lit(int(v))) for v in vs2
     ]
-    decoded = decode_chunks(frames[0].unionByName(frames[1]),
-                            ordered=False)
+    decoded = decode_chunks(frames[0].unionByName(frames[1]))
     assert decoded.count() == 70
     assert decoded.agg(F.sum("doc_id")).first()[0] == sum(range(70))
 
@@ -330,7 +329,6 @@ def test_stream_into_encoded_store(spark, tmp_path):
         read_encoded_table,
     )
 
-    via_map = decode_chunks(read_encoded_table(spark, enc, "docs"),
-                            ordered=False)
+    via_map = decode_chunks(read_encoded_table(spark, enc, "docs"))
     assert via_map.count() == 70
     assert expire_encoded_versions(enc, "docs") == []  # all referenced
