@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from .codecs import column_stats, decode_array
 from .codecs.select import encode_auto
 from .filestore import is_data_file
+from .util import local_frame
 
 _log = logging.getLogger("parquet_producers_spark")
 
@@ -460,15 +461,13 @@ def encode_files(
     corpora; :func:`encode_partitions` remains the general path when a
     shuffle sort or arbitrary upstream DataFrame feeds the encode.
     """
-    import pandas as pd
-
     files = sorted(files)
     # one task per core by default, several files per task: local-mode
     # python task round-trips cost ~10 ms each SERIALIZED on the
     # driver, so 64 one-file tasks burn 0.8 s of pure scheduling. On a
     # real cluster raise n_tasks for elasticity/straggler coverage.
-    # createDataFrame from pandas splits into defaultParallelism
-    # contiguous slices — the task list needs no shuffle stage.
+    # a local frame splits into defaultParallelism contiguous slices —
+    # the task list needs no shuffle stage.
     #
     # split_row_groups: GIANT-FILE SKEW DEFENSE (north rule: "skew from
     # mega-repos and giant files"). Whole-file tasks make a 10 GB file
@@ -491,26 +490,13 @@ def encode_files(
                     lo, rows = rg + 1, 0
             if lo < md.num_row_groups or md.num_row_groups == 0:
                 units.append((path, lo, md.num_row_groups))
-        fdf = spark.createDataFrame(
-            pd.DataFrame({
-                "part_id": range(len(units)),
-                "path": [u[0] for u in units],
-                "rg_lo": [u[1] for u in units],
-                "rg_hi": [u[2] for u in units],
-            }),
-            schema="part_id int, path string, rg_lo int, rg_hi int",
-        )
-        n_units = len(units)
     else:
-        fdf = spark.createDataFrame(
-            pd.DataFrame({"part_id": range(len(files)), "path": files,
-                          "rg_lo": [-1] * len(files),
-                          "rg_hi": [-1] * len(files)}),
-            schema="part_id int, path string, rg_lo int, rg_hi int",
-        )
-        n_units = len(files)
+        units = [(path, -1, -1) for path in files]
+    fdf = local_frame(
+        spark, [(i, *u) for i, u in enumerate(units)],
+        "part_id int, path string, rg_lo int, rg_hi int")
     if n_tasks:
-        fdf = fdf.repartition(min(n_tasks, n_units), "part_id")
+        fdf = fdf.repartition(min(n_tasks, len(units)), "part_id")
 
     def enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -921,8 +907,8 @@ def _pruned_range_routed(spark, df, sort_cols: list[str], cut_rows):
     key_struct = F.struct(*sort_cols)
     key_struct_t = StructType([
         f for c in sort_cols for f in df.schema.fields if f.name == c])
-    one = spark.createDataFrame(
-        [(bounds_data,)],
+    one = local_frame(
+        spark, [(bounds_data,)],
         StructType().add("__bounds", ArrayType(key_struct_t)))
     m = len(bounds_data)
     routed = (

@@ -18,6 +18,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..datagen import _splitmix64
+from ..util import local_frame
 
 
 def _dot(a, b):
@@ -194,7 +195,7 @@ def ivf_assign(
         # n_centroids): degrade to empty index frames, like the old
         # crossJoin formulation did, instead of failing analysis on an
         # empty literal array
-        cents = spark.createDataFrame([], "cl bigint, cvec array<double>")
+        cents = local_frame(spark, [], "cl bigint, cvec array<double>")
         empty_assign = corpus.select(
             F.col(id_col).alias("__id"),
             F.lit(None).cast("bigint").alias("cl"),
@@ -211,9 +212,7 @@ def ivf_assign(
             .agg(F.array_sort(F.collect_list(F.struct("dim", "w"))).alias("s"))
             .select("cl", F.transform("s", lambda t: t["w"]).alias("cvec"))
         )
-    cents = spark.createDataFrame(
-        [(cl, cvec) for cl, cvec in cent_rows],
-        "cl bigint, cvec array<double>")
+    cents = local_frame(spark, cent_rows, "cl bigint, cvec array<double>")
     return cents, assign(cent_rows)
 
 

@@ -7,6 +7,11 @@ Reference behavior being reproduced (see SURVEY.md §2.1 ops 6, 11-20):
 * ``Produce`` — a grouped flat-map ``(SK, [SV]) → [(TK, TV)]``
   (reference: Parquet.Producers/ParquetProduction.cs:10-11). Here:
   :func:`run_produce`, one ``mapInPandas`` over SK-sorted partitions.
+  Every Python worker task costs a fixed ~0.2 CPU s before it does any
+  work, and a frame built from a Python list pays it
+  ``defaultParallelism`` times per scan, so driver-side rows enter
+  through :func:`~..util.local_frame` and every Python task of a wave
+  runs user code.
 * A stage owns three tables (reference: Producer.cs:58-60):
   **content** ``(tk…, sk…, value…)``, **mappings** ``(sk…, tk…)``,
   **updates-out** ``(type, tk…, value…)``.
@@ -42,6 +47,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ..util import local_frame
 
 UPDATE_TYPE = "type"  # 'Add' | 'Update' | 'Delete'
 
@@ -86,28 +94,22 @@ class Stage:
                     or self.preserve_merge)
 
 
-def _empty(spark: SparkSession, ddl: str) -> DataFrame:
-    return spark.createDataFrame([], schema=ddl)
-
-
 def empty_state(spark: SparkSession, stage: Stage, updates: DataFrame):
     """(content, mappings) empty frames typed from the updates schema +
     the stage's output DDL (parsed by Spark — safe for decimal(p,s) and
-    other comma-bearing types)."""
-    from pyspark.sql.types import StructType
-
-    out_fields = {
-        f.name: f for f in _empty(spark, stage.out_ddl).schema.fields
-    }
+    other comma-bearing types). Both are empty local relations, so the
+    first wave's joins against them fold away in the optimizer and no
+    job scans them (see :func:`~..util.local_frame`)."""
+    out_fields = {f.name: f for f in StructType.fromDDL(stage.out_ddl)}
     sk_fields = {
         f.name: f for f in updates.schema.fields if f.name in stage.sk_cols
     }
-    content = spark.createDataFrame([], StructType(
+    content = local_frame(spark, [], StructType(
         [out_fields[c] for c in stage.tk_cols]
         + [sk_fields[c] for c in stage.sk_cols]
         + [out_fields[c] for c in stage.value_cols]
     ))
-    mappings = spark.createDataFrame([], StructType(
+    mappings = local_frame(spark, [], StructType(
         [sk_fields[c] for c in stage.sk_cols]
         + [out_fields[c] for c in stage.tk_cols]
     ))
@@ -149,10 +151,13 @@ def validate_updates(updates: DataFrame, sk_cols: list[str]) -> None:
 def run_produce(stage: Stage, upserts: DataFrame) -> DataFrame:
     """Grouped flat-map. Returns upsert instructions ``(tk…, sk…, value…)``.
 
-    produce always sees a key's full group: hash-repartition on SK,
-    sort within partitions, then ONE ``mapInPandas`` per partition that
-    walks the sorted batches and groups in pandas, carrying the tail key
-    across Arrow batch boundaries. This is the Spark shape of the
+    produce always sees a key's full group: hash-repartition on SK with
+    no explicit partition count, so AQE coalesces the exchange to what
+    the delta needs (whole hash partitions merge, so a key's group stays
+    whole, and a small wave runs one Python task, not one per shuffle
+    partition), sort within partitions, then ONE ``mapInPandas`` per
+    partition that walks the sorted batches and groups in pandas,
+    carrying the tail key across Arrow batch boundaries. This is the Spark shape of the
     reference's bounded sorted-group cursor (op 7, SingleUseSequence.cs)
     and is ~10× faster than per-group UDF dispatch (``groupBy``
     + ``applyInPandas``) when keys are numerous and small (measured
@@ -188,7 +193,10 @@ def run_produce(stage: Stage, upserts: DataFrame) -> DataFrame:
             if out is None or len(out) == 0:
                 continue
             keys.append(key)
-            outs.append(out[out_cols])
+            # selecting copies the frame; a KeyError still names a
+            # missing column
+            outs.append(out if list(out.columns) == out_cols
+                        else out[out_cols])
             lens.append(len(out))
         if outs:
             big = pd.concat(outs, ignore_index=True)
@@ -218,9 +226,8 @@ def run_produce(stage: Stage, upserts: DataFrame) -> DataFrame:
         if carry:
             yield from emit(pd.concat(carry, ignore_index=True))
 
-    n = int(upserts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
-        upserts.repartition(n, *sk_cols)
+        upserts.repartition(*sk_cols)
         .sortWithinPartitions(*sk_cols)
         .mapInPandas(scan, schema=schema)
         .select(*stage.content_cols)
@@ -384,7 +391,7 @@ def _global_rank(df: DataFrame, key_cols: list[str],
         acc += counts[pid]
     if not offsets:
         return df.select(*key_cols, F.lit(None).cast("int").alias(out_col))
-    off_df = spark.createDataFrame(offsets, "__pid int, __off long")
+    off_df = local_frame(spark, offsets, "__pid int, __off long")
     w = Window.partitionBy("__pid").orderBy(*key_cols)
     return (
         parted.join(F.broadcast(off_df), "__pid")

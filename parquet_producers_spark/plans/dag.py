@@ -30,7 +30,7 @@ from ..operators.produce import (
     validate_updates,
 )
 from ..storage import atomic_write_json, list_versions, stage_dir
-from ..util import ThrottledLogger
+from ..util import ThrottledLogger, local_frame
 
 
 @dataclass
@@ -67,8 +67,8 @@ class Pipeline:
         marker = path + "._empty.json"
         if (not self.store.exists(posixpath.join(path, "_SUCCESS"))
                 and self.store.exists(marker)):
-            return self.spark.createDataFrame(
-                [], schema=self.store.read_json(marker)["schema_ddl"])
+            return local_frame(
+                self.spark, [], self.store.read_json(marker)["schema_ddl"])
         return self.spark.read.parquet(path)
 
     def content(self, name: str, version: int | None = None) -> DataFrame:

@@ -61,6 +61,7 @@ import logging
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .encoder import _spark_type, chunk_fields, chunk_ident
+from .util import local_frame
 
 _log = logging.getLogger("parquet_producers_spark")
 
@@ -282,15 +283,15 @@ def read_sorted(
     # plan holds at any chunk count. Chunks carrying null keys join the
     # first range too: that's where their null rows land.
     lohi_t = zone_t or "string"
-    rdf = spark.createDataFrame(
+    rdf = local_frame(
+        spark,
         [(i,
           r[0][0] if r[0] is not None else None,
           r[0][1] if r[0] is not None else None,
           r[1][0] if r[1] is not None else None,
           r[1][1] if r[1] is not None else None)
          for i, r in enumerate(ranges)],
-        schema=(f"range_id int, lo {lohi_t}, lo_tb long,"
-                f" hi {lohi_t}, hi_tb long"))
+        f"range_id int, lo {lohi_t}, lo_tb long, hi {lohi_t}, hi_tb long")
     kmin = F.col("key_min").cast(lohi_t)
     kmax = F.col("key_max").cast(lohi_t)
     tb = F.col("__tb")

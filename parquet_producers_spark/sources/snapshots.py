@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..encoder import open_parquet_any
 from ..filestore import FileStore, LocalStore, list_data_files
+from ..util import local_frame
 
 # inline the file list in the snapshot JSON up to this many files;
 # beyond it, shard the list into parquet manifests
@@ -139,8 +140,7 @@ def _footer_stats(
         return {p: _one_footer(p, cols) for p in paths}
     import pandas as pd
 
-    pdf = spark.createDataFrame(
-        pd.DataFrame({"path": paths}), schema="path string")
+    pdf = local_frame(spark, [(p,) for p in paths], "path string")
 
     def footer(batches):
         from parquet_producers_spark.sources.snapshots import _one_footer
@@ -236,26 +236,21 @@ def _write_manifest(
         # manifest tree: file list as parquet shards, written by Spark,
         # JSON snapshot is just the pointer. Write shards BEFORE the
         # pointer — the atomic commit point stays the JSON.
-        import pandas as pd
-
         fdir = _shard_dir(table_dir, new_id)
         n_shards = max(1, min(
             spark.sparkContext.defaultParallelism,
             len(files) // SHARD_THRESHOLD + 1))
         (
-            spark.createDataFrame(
-                pd.DataFrame({
-                    "path": [f["path"] for f in files],
-                    "rows": [f.get("rows") for f in files],
-                    "added": [f.get("added") for f in files],
-                    # per-file column min/max as a JSON map — keeps the
-                    # shard schema stable across tables with different
-                    # stats_cols; _manifest_files parses it back to the
-                    # same dict the inline form holds
-                    "stats": [json.dumps(f["stats"])
-                              if f.get("stats") else None for f in files],
-                }),
-                schema="path string, rows long, added long, stats string",
+            local_frame(
+                spark,
+                # per-file column min/max as a JSON map — keeps the
+                # shard schema stable across tables with different
+                # stats_cols; _manifest_files parses it back to the
+                # same dict the inline form holds
+                [(f["path"], f.get("rows"), f.get("added"),
+                  json.dumps(f["stats"]) if f.get("stats") else None)
+                 for f in files],
+                "path string, rows long, added long, stats string",
             )
             .repartition(n_shards)
             .write.mode("overwrite").parquet(fdir)
@@ -419,7 +414,7 @@ def _scan_files(
     delete semantics applied — the shared tail of :func:`read_snapshot`
     and the pruned :func:`read_snapshot_where` path."""
     if not files:
-        return spark.createDataFrame([], schema=manifest["schema_ddl"])
+        return local_frame(spark, [], manifest["schema_ddl"])
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
@@ -540,7 +535,7 @@ def snapshot_diff(
     new = _added_paths(_read_manifest(table_dir, from_id, store),
                        to_manifest, store)
     if not new:
-        return spark.createDataFrame([], schema=to_manifest["schema_ddl"])
+        return local_frame(spark, [], to_manifest["schema_ddl"])
     return spark.read.parquet(*new)
 
 
@@ -1020,8 +1015,8 @@ def read_encoded_table(
     smap = (store.read_json(map_path) if store.exists(map_path)
             else {"waves": []})
     if not smap["waves"]:
-        return spark.createDataFrame(
-            [], schema=SLICED_CHUNK_SCHEMA + ", enc_version int")
+        return local_frame(
+            spark, [], SLICED_CHUNK_SCHEMA + ", enc_version int")
     frames = [
         read_chunks(spark, enc_root, stage, w["version"])
         .withColumn("enc_version", F.lit(int(w["version"])))

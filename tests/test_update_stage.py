@@ -132,3 +132,29 @@ def test_update_stage_plans_read_each_input_once(spark, tmp_path):
     # inputs; the one-pass content reads prev_content itself
     assert _scans(plan(content), "prev_content") == 1, plan(content)
     assert _scans(plan(mappings), "prev_mappings") == 1, plan(mappings)
+
+
+def test_produce_exchange_coalesces_and_selects_output_columns(spark):
+    """run_produce's SK exchange has no fixed partition count, so AQE
+    coalesces a small delta's shuffle; produced columns in another order
+    are put in the declared order, and a missing one still fails."""
+    import pytest
+
+    from parquet_producers_spark.operators.produce import run_produce
+
+    upserts = spark.createDataFrame(
+        [("Add", d, t) for d, t in ((1, "a"), (2, "b"), (3, "-c"))], SCHEMA)
+    reordered = Stage("r", ["doc"], ["word"], ["text"],
+                      lambda key, pdf: _produce(key, pdf)[["text", "word"]],
+                      "word string, text string")
+    df = run_produce(reordered, upserts)
+    got = sorted((tuple(r) for r in df.collect()), key=str)
+    assert got == sorted([("a", 1, "a"), ("b", 2, "b"), (None, 3, "-c")],
+                         key=str)
+    assert "coalesced" in executed_plan(df), executed_plan(df)
+
+    missing = Stage("m", ["doc"], ["word"], ["text"],
+                    lambda key, pdf: _produce(key, pdf)[["word"]],
+                    "word string, text string")
+    with pytest.raises(Exception, match="not in index"):
+        run_produce(missing, upserts).collect()
