@@ -128,7 +128,11 @@ def entry(spark: SparkSession) -> DataFrame:
 def _producer_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from parquet_producers_spark.operators.produce import Stage, bootstrap_stage
+    from parquet_producers_spark.operators.produce import (
+        Stage,
+        empty_state,
+        update_stage,
+    )
 
     def split_words(key, pdf: pd.DataFrame) -> pd.DataFrame:
         words = []
@@ -146,7 +150,8 @@ def _producer_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = docs.select(
         F.lit("Add").alias("type"), F.col("doc_id"), F.col("text")
     )
-    content, _mappings, _updates_out = bootstrap_stage(spark, stage, updates)
+    content, _mappings, _updates_out = update_stage(
+        stage, *empty_state(spark, stage, updates), updates)
     return (
         content.groupBy("word")
         .agg(F.count("*").alias("cnt"))
@@ -1368,7 +1373,7 @@ def _cdc_wave_state(spark, sf):
     AFTER the wave."""
     from parquet_producers_spark.operators.produce import (
         Stage,
-        bootstrap_stage,
+        empty_state,
         update_stage,
     )
 
@@ -1380,7 +1385,8 @@ def _cdc_wave_state(spark, sf):
     _ensure_pkg(spark)
     docs = _t(spark, sf, "documents").filter(F.col("doc_id") < 50)
     boot = docs.select(F.lit("Add").alias("type"), "doc_id", "text")
-    content, mappings, _ = bootstrap_stage(spark, stage, boot)
+    content, mappings, _ = update_stage(
+        stage, *empty_state(spark, stage, boot), boot)
     wave = (
         docs.filter(F.col("doc_id") < 6)
         .select(
@@ -1458,7 +1464,7 @@ def q_producer_preserved_ids(spark, sf):
 
     from parquet_producers_spark.operators.produce import (
         Stage,
-        bootstrap_stage,
+        empty_state,
         update_stage,
     )
 
@@ -1476,7 +1482,8 @@ def q_producer_preserved_ids(spark, sf):
     _ensure_pkg(spark)
     docs = _t(spark, sf, "documents").filter(F.col("doc_id") < 30)
     boot = docs.select(F.lit("Add").alias("type"), "doc_id", "text")
-    content, mappings, _ = bootstrap_stage(spark, stage, boot)
+    content, mappings, _ = update_stage(
+        stage, *empty_state(spark, stage, boot), boot)
     wave = (
         docs.filter(F.col("doc_id") < 3)
         .select(

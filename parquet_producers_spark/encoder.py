@@ -441,7 +441,6 @@ def encode_files(
     cascade: bool = False,
     profile: str = "size",
     key_col: str | None = None,
-    n_tasks: int | None = None,
     split_row_groups: bool = False,
     max_rows_per_task: int = 8 * CHUNK_ROWS,
 ) -> DataFrame:
@@ -462,12 +461,11 @@ def encode_files(
     shuffle sort or arbitrary upstream DataFrame feeds the encode.
     """
     files = sorted(files)
-    # one task per core by default, several files per task: local-mode
-    # python task round-trips cost ~10 ms each SERIALIZED on the
-    # driver, so 64 one-file tasks burn 0.8 s of pure scheduling. On a
-    # real cluster raise n_tasks for elasticity/straggler coverage.
-    # a local frame splits into defaultParallelism contiguous slices —
-    # the task list needs no shuffle stage.
+    # one task per core, several files per task: local-mode python task
+    # round-trips cost ~10 ms each SERIALIZED on the driver, so 64
+    # one-file tasks burn 0.8 s of pure scheduling. A local frame splits
+    # into defaultParallelism contiguous slices — the task list needs no
+    # shuffle stage.
     #
     # split_row_groups: GIANT-FILE SKEW DEFENSE (north rule: "skew from
     # mega-repos and giant files"). Whole-file tasks make a 10 GB file
@@ -495,8 +493,6 @@ def encode_files(
     fdf = local_frame(
         spark, [(i, *u) for i, u in enumerate(units)],
         "part_id int, path string, rg_lo int, rg_hi int")
-    if n_tasks:
-        fdf = fdf.repartition(min(n_tasks, len(units)), "part_id")
 
     def enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq

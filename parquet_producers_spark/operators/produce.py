@@ -126,8 +126,6 @@ def validate_updates(updates: DataFrame, sk_cols: list[str]) -> None:
     upserts, never mixed, no duplicate deletes). The reference enforces
     sortedness too; Spark doesn't need sorted input, so the per-key
     discipline is the surviving contract. One aggregation, fails fast."""
-    from pyspark.sql import functions as F
-
     bad = (
         updates.groupBy(*sk_cols)
         .agg(
@@ -324,37 +322,6 @@ def _join_null_safe(left: DataFrame, right: DataFrame, on: list[str],
                          *[c for c in right.columns if c not in on])
     cond = [F.col(c).eqNullSafe(F.col(f"__on_{c}")) for c in on]
     return left.join(right, cond, how).drop(*[f"__on_{c}" for c in on])
-
-
-def bootstrap_stage(
-    spark: SparkSession, stage: Stage, updates: DataFrame
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """First wave from empty state (reference 'bootstrapping'
-    README.md:45-59) — fast path: with no previous state there are no
-    deletions, nothing retained and no SK anti-join; content
-    IS the produced set and every first-row-per-TK is an Add."""
-    sk, tk = stage.sk_cols, stage.tk_cols
-    upserts = updates.filter(F.col(UPDATE_TYPE) != "Delete")
-    # content/mappings/updates-out are three downstream write actions
-    # over this one frame — checkpoint so produce runs once (see
-    # update_stage for the full argument)
-    produced = run_produce(stage, upserts).localCheckpoint(eager=False)
-    if stage.has_preserve:
-        prev_content, _ = empty_state(spark, stage, updates)
-        produced = _apply_preserve(stage, produced, prev_content)
-    content = produced.select(*stage.content_cols)
-    mappings = produced.select(*sk, *tk)
-    first_w = Window.partitionBy(*tk).orderBy(*sk, *stage.value_cols)
-    updates_out = (
-        produced
-        .withColumn("__rn", F.row_number().over(first_w))
-        .withColumn(
-            UPDATE_TYPE,
-            F.when(F.col("__rn") == 1, "Add").otherwise("Update"),
-        )
-        .select(UPDATE_TYPE, *tk, *stage.value_cols)
-    )
-    return content, mappings, updates_out
 
 
 def _global_rank(df: DataFrame, key_cols: list[str],

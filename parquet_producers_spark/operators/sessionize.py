@@ -121,112 +121,6 @@ def sessionize_stream(
     )
 
 
-def sessionize_stream_tws(
-    stream_df: DataFrame,
-    gap_s: int = 1800,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    timeout_s: int = 3600,
-) -> DataFrame:
-    """The same sessionizer on Spark 4's ``transformWithStateInPandas``
-    — typed ValueState + REAL timers instead of the single implicit
-    timeout of ``applyInPandasWithState``. Semantics are identical to
-    :func:`sessionize_stream` (same gap split, same permanent-tombstone
-    ordinal invariant); parity pinned by tests/test_streaming.py.
-
-    Timer hygiene is the non-obvious part: TWS timers ACCUMULATE per
-    key, so each batch deletes the previously registered timer before
-    arming a new one — a stale timer firing against a still-live
-    session would flush it early and re-emit its (user, session_id)
-    later. The armed expiry is kept in state so an unexpected stale
-    expiry can be recognized and ignored.
-
-    Runtime requirements (plain public Spark 4, but note): the RocksDB
-    state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) and
-    ``google.protobuf`` on the workers (TWS's state protocol) — the
-    latter is absent in this build container, so the parity test
-    skips there and :func:`sessionize_stream` remains the default.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_cols = ["user_id", "session_id", "session_start", "session_end",
-                "n_events", "total_value"]
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState(
-                "sess",
-                "start timestamp, last timestamp, n long, total double,"
-                " sid int, timer_ms long",
-            )
-
-        def _get(self):
-            if self._state.exists():
-                return tuple(self._state.get())
-            return (None, None, 0, 0.0, 0, None)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user,) = key
-            pdf = pd.concat(list(rows), ignore_index=True)
-            pdf = pdf.sort_values([ts_col]).reset_index(drop=True)
-            start, last, n, total, sid, timer_ms = self._get()
-            closed = []
-            for ts, val in zip(pdf[ts_col], pdf[value_col]):
-                ts = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") \
-                    else ts
-                if last is not None and (ts - last).total_seconds() > gap_s:
-                    closed.append((user, sid, start, last, n, total))
-                    start, n, total = ts, 0, 0.0
-                    sid += 1
-                if start is None:
-                    start, sid = ts, sid + 1
-                last = ts
-                n += 1
-                total += float(val)
-            if timer_ms is not None:
-                self._handle.deleteTimer(timer_ms)
-            new_timer = (timerValues.getCurrentProcessingTimeInMs()
-                         + timeout_s * 1000)
-            self._handle.registerTimer(new_timer)
-            self._state.update((start, last, n, total, sid, new_timer))
-            if closed:
-                yield pd.DataFrame(closed, columns=out_cols)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (user,) = key
-            start, last, n, total, sid, timer_ms = self._get()
-            expired = expiredTimerInfo.getExpiryTimeInMs()
-            if timer_ms is not None and expired != timer_ms:
-                return  # stale timer from an earlier batch — ignore
-            if start is not None:
-                # flush the quiet session; PERMANENT tombstone keeps
-                # sid so ordinals never repeat (see sessionize_stream)
-                self._state.update((None, None, 0, 0.0, sid, None))
-                yield pd.DataFrame(
-                    [(user, sid, start, last, n, total)], columns=out_cols)
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream_df.groupBy(user_col)
-        .transformWithStateInPandas(
-            SessionProcessor(),
-            outputStructType=SESSION_SCHEMA,
-            outputMode="append",
-            timeMode="processingTime",
-        )
-    )
-
-
 def make_session_update(gap_s: int, ts_col: str, value_col: str,
                         timeout_s: int):
     """The per-key state-update function of :func:`sessionize_stream`,

@@ -837,8 +837,107 @@ def vacuum(
     return orphans
 
 
-def _snapshot_map_path(enc_root: str, stage: str) -> str:
+# what a writer is told when the stage's wave map belongs to the other
+# kind of writer: the two record different things under "snapshot"
+_FOREIGN_MAP = {
+    "stream": "stage {stage!r} is stream-sourced: its snapshot map records "
+              "batch ordinals, not table snapshot ids, so a table-diff wave "
+              "would plan a garbage diff. Encode the table into a separate "
+              "stage.",
+    "table": "stage {stage!r} is table-sourced: streaming batch ordinals "
+             "into its snapshot map would corrupt the diff baseline. Use a "
+             "separate stage.",
+}
+
+
+def _wave_map_path(enc_root: str, stage: str) -> str:
     return posixpath.join(enc_root, stage, "_snapshot_map.json")
+
+
+def _load_wave_map(enc_root: str, stage: str, store: FileStore,
+                   source: str | None = None) -> dict:
+    """The ONE reader of a chunk store's wave map
+    (``<enc_root>/<stage>/_snapshot_map.json``). Returns its live
+    ``waves``; ``covered``, what the store is up to date with (a table
+    snapshot id, or a stream's highest committed batch ordinal; None
+    before the first commit); ``max_version``, the highest version ever
+    committed (0 before the first) — every writer encodes one above it,
+    so no committed number is reused while a crashed attempt retries
+    under its own; and ``source``. A missing map reads as one with no
+    waves. A writer names its ``source``, and a map the other kind of
+    writer keeps is refused before a byte is encoded."""
+    path = _wave_map_path(enc_root, stage)
+    smap = store.read_json(path) if store.exists(path) else {}
+    waves = smap.get("waves", [])
+    owner = smap.get("source")
+    if source and owner and owner != source:
+        raise ValueError(_FOREIGN_MAP[owner].format(stage=stage))
+    if "max_version" in smap:
+        covered, top = smap["covered"], smap["max_version"]
+    else:
+        # a map written before coverage and the version high-water mark
+        # were kept at the top level: the last wave carries both
+        covered = waves[-1]["snapshot"] if waves else smap.get("covered")
+        top = max((int(w["version"]) for w in waves), default=0)
+    return {"waves": waves, "covered": covered, "max_version": int(top),
+            "source": owner or source}
+
+
+def _commit_wave_map(enc_root: str, stage: str, store: FileStore,
+                     smap: dict, waves: list[dict], covered,
+                     version: int = 0) -> None:
+    """The ONE writer of the wave map: atomically replaces the loaded
+    ``smap`` with the live ``waves`` and ``covered``, raising
+    ``max_version`` to ``version`` (the highest version this commit
+    wrote). Committed wave entries are carried or dropped, never
+    edited."""
+    store.write_json_atomic(_wave_map_path(enc_root, stage), {
+        "source": smap["source"], "waves": waves, "covered": covered,
+        "max_version": max(smap["max_version"], version)})
+
+
+def _head(waves: list[dict], covered) -> dict:
+    """What a call that encodes nothing answers: the newest live wave
+    (``version`` 0 when none is) at the store's coverage."""
+    return {**(waves[-1] if waves else {"version": 0}), "snapshot": covered}
+
+
+def _encode_wave(spark: SparkSession, rows: DataFrame, enc_root: str,
+                 stage: str, store: FileStore, smap: dict, covered,
+                 sort_cols: list[str], fingerprint: str,
+                 lineage: str | None = None, maintain: bool = False,
+                 min_runt_fraction: float = 0.25, **encode_kw) -> dict:
+    """Encode ``rows`` as the store's next version
+    (:func:`~..storage.encode_run`) and commit it as a wave covering
+    ``covered``: appended to the live list or, given a ``lineage`` key
+    (``rebased_from`` / ``consolidated_from``), replacing it, with the
+    replaced versions listed under that key. ``maintain`` first runs
+    the runt-compaction gate on the new version; when it rewrites, the
+    wave names the compacted version. Returns the committed wave."""
+    from ..storage import encode_run
+
+    version = smap["max_version"] + 1
+    encode_run(spark, rows, enc_root, stage, version=version,
+               sort_cols=sort_cols, input_fingerprint=fingerprint,
+               store=store, **encode_kw)
+    wave = {"version": version, "snapshot": covered}
+    if maintain:
+        # rewrites only when the wave's runts can merge into fewer chunks
+        # (a small wave is one chunk per slice and is left alone)
+        from ..compaction import compact_if_needed
+
+        new_v = compact_if_needed(spark, enc_root, stage, version,
+                                  min_runt_fraction=min_runt_fraction,
+                                  store=store)
+        if new_v != version:
+            wave.update(version=new_v, compacted_from=version)
+    waves = smap["waves"]
+    if lineage:
+        wave[lineage] = [w["version"] for w in waves]
+        waves = []
+    _commit_wave_map(enc_root, stage, store, smap, waves + [wave], covered,
+                     wave["version"])
+    return wave
 
 
 def encode_table_incremental(
@@ -858,136 +957,78 @@ def encode_table_incremental(
     encode, where each wave reads ONLY the files added since the last
     encoded snapshot (never a rescan of the table).
 
-    Chunk-store version N covers table snapshot s_N; the mapping lives
-    in ``<enc_root>/<stage>/_snapshot_map.json`` (atomic write, same
-    commit discipline as everything else). Wave mechanics: diff the
-    latest table snapshot against the last covered one
-    (:func:`snapshot_diff` — file-identity, manifest-only planning),
-    shuffle-sort just the delta and encode it via
-    :func:`~..storage.encode_run` (hash-sliced, per-slice atomic
-    manifests, exact resume *within* the wave). Readers union waves
-    through :func:`read_encoded_table`.
+    The store's wave map (``<enc_root>/<stage>/_snapshot_map.json``,
+    atomic write) records the table snapshot it covers. Wave mechanics:
+    load the covered and the latest manifest, take the latest files the
+    covered one does not list (file identity, manifest-only planning),
+    and encode just those rows as the store's next version. Readers
+    union waves through :func:`read_encoded_table`.
 
     Returns ``{"version", "snapshot", "rows"}``; a no-change wave
-    returns the previous mapping with ``rows=0`` and writes nothing.
+    returns the newest wave at the current snapshot with ``rows=0`` and
+    encodes nothing.
 
-    Non-append history (a replace commit — including
-    :func:`rewrite_deletes` — or live equality-delete entries) REBASES
-    instead of appending: the current table view is encoded whole as
-    one new version and the wave list atomically flips to it, exactly
-    like the table's own replace; superseded versions are then
+    The delta is only sound when every covered row is still live as it
+    was, so the wave REBASES — encodes the current view (deletes
+    applied merge-on-read) whole as one new version and atomically
+    replaces the wave list, exactly like the table's own replace — when
+    the covered snapshot's manifest is gone (expired), a covered file
+    is no longer listed (a replace, including :func:`rewrite_deletes`),
+    or the delete list changed (a delete or upsert commit, or a replace
+    that dropped delete entries). Superseded versions are then
     :func:`expire_encoded_versions` fodder.
     """
-    from ..storage import encode_run
-
     store = store or LocalStore()
+    smap = _load_wave_map(enc_root, stage, store, "table")
+    waves, covered = smap["waves"], smap["covered"]
     latest = list_snapshots(table_dir, store)[-1]
-    map_path = _snapshot_map_path(enc_root, stage)
-    smap = (store.read_json(map_path) if store.exists(map_path)
-            else {"waves": []})
-    waves = smap["waves"]
-    # covered marker: which table snapshot the store is up to date with.
-    # Normally waves[-1]["snapshot"]; a zero-row FIRST wave has no wave
-    # entry yet, so it records top-level "covered" instead — the map is
-    # still written, keeping the reader contract (read_encoded_table
-    # returns a typed empty frame) alive from wave 0.
-    last_snap = waves[-1]["snapshot"] if waves else smap.get("covered")
-    if last_snap == latest:
-        return {**waves[-1], "rows": 0} if waves else {
-            "version": 0, "snapshot": latest, "rows": 0}
-    # Delta-append is only sound over a PURE APPEND chain: the wave diff
-    # is file identity, so a replace commit (incl. rewrite_deletes) or a
-    # live equality-delete entry would leave superseded rows in older
-    # waves — the union would silently disagree with the table. Walk the
-    # manifest chain latest→last_snap (metadata reads only): any
-    # non-append commit, live deletes, or an expired link ⇒ REBASE —
-    # encode the full current view (read_snapshot applies deletes
-    # merge-on-read) as one wave and atomically REPLACE the wave list,
-    # mirroring the table's own replace; superseded versions become
-    # expire_encoded_versions fodder.
-    if smap.get("source") == "stream":
-        raise ValueError(
-            f"stage {stage!r} is stream-sourced: its snapshot map records "
-            "batch ordinals, not table snapshot ids, so a table-diff wave "
-            "would plan a garbage diff. Encode the table into a separate "
-            "stage (streamed stores have no table-snapshot baseline).")
-    rebase = False
-    if last_snap is not None:
-        sid = latest
-        while sid is not None and sid != last_snap:
-            mp = _manifest_path(table_dir, sid)
-            if not store.exists(mp):
-                # an expired link: the chain back to the covered snapshot
-                # is gone (expire_snapshots deleted the manifest), so the
-                # append-only proof can't be made ⇒ REBASE, per contract
-                rebase = True
-                break
-            m = store.read_json(mp)
-            # delete entries CARRIED FORWARD by appends (seq ≤
-            # last_snap) are already reflected in the covered store (the
-            # wave that advanced coverage past them rebased then); only
-            # deletes newer than the coverage force a rebase now
-            if m["mode"] != "append" or any(
-                    d["seq"] > last_snap for d in m.get("deletes", [])):
-                rebase = True
-                break
-            sid = m.get("parent")
-        if sid != last_snap:
-            rebase = True
-    if rebase or last_snap is None:
-        delta = read_snapshot(spark, table_dir, latest, store)
-    else:
-        delta = snapshot_diff(spark, table_dir, last_snap, latest, store)
-    delta = delta.localCheckpoint(eager=False)
+    if covered == latest:
+        return {**_head(waves, latest), "rows": 0}
+    new = store.read_json(_manifest_path(table_dir, latest))
+    files = _manifest_files(new, store)
+    rebase = covered is not None
+    if rebase and store.exists(_manifest_path(table_dir, covered)):
+        old = store.read_json(_manifest_path(table_dir, covered))
+        seen = {f["path"] for f in _manifest_files(old, store)}
+        # delete entries carried forward by appends cover only files
+        # added before them, so equal lists leave the new files untouched
+        rebase = not (seen <= {f["path"] for f in files}
+                      and old.get("deletes", []) == new.get("deletes", []))
+        if not rebase:
+            files = [f for f in files if f["path"] not in seen]
+    delta = _scan_files(spark, new, files).localCheckpoint(eager=False)
     n_rows = delta.count()
     if n_rows == 0:
-        if rebase:
-            # the table was replaced/merged down to zero rows: the store
-            # must forget its waves, not keep stale ones
-            store.write_json_atomic(
-                map_path,
-                {"waves": [], "covered": latest, "source": "table"})
-            return {"version": 0, "snapshot": latest, "rows": 0}
-        # a newer snapshot with no new rows (empty table, empty append,
-        # replace with identical files): advance the covered-snapshot
-        # marker so later diffs use the new baseline, but encode nothing
-        if waves:
-            waves[-1]["snapshot"] = latest
-        else:
-            smap["covered"] = latest
-        smap["source"] = "table"
-        store.write_json_atomic(map_path, smap)
-        return ({**waves[-1], "rows": 0} if waves
-                else {"version": 0, "snapshot": latest, "rows": 0})
-    version = (waves[-1]["version"] + 1) if waves else 1
-    encode_run(spark, delta, enc_root, stage, version=version,
-               sort_cols=sort_cols,
-               input_fingerprint=f"{table_dir}@s{latest}", **encode_kw)
-    wave = {"version": version, "snapshot": latest}
-    if maintain:
-        # in-cadence maintenance: run the runt-compaction policy gate on
-        # the fresh wave. It rewrites only when the wave's runts can merge
-        # into fewer chunks (a small wave is one chunk per slice and is
-        # left alone). If it rewrites, the wave entry points at the
-        # compacted version so readers — and the NEXT wave's version
-        # counter — follow it.
-        from ..compaction import compact_if_needed
+        # nothing to encode: coverage advances, and a table rebased to
+        # zero rows leaves the store no live wave
+        waves = [] if rebase else waves
+        _commit_wave_map(enc_root, stage, store, smap, waves, latest)
+        return {**_head(waves, latest), "rows": 0}
+    wave = _encode_wave(
+        spark, delta, enc_root, stage, store, smap, latest, sort_cols,
+        f"{table_dir}@s{latest}", lineage="rebased_from" if rebase else None,
+        maintain=maintain, min_runt_fraction=min_runt_fraction, **encode_kw)
+    return {**wave, "rows": int(n_rows)}
 
-        new_v = compact_if_needed(
-            spark, enc_root, stage, version,
-            min_runt_fraction=min_runt_fraction)
-        if new_v != version:
-            wave = {"version": new_v, "snapshot": latest,
-                    "compacted_from": version}
-    if rebase:
-        smap["waves"] = [
-            {**wave, "rebased_from": [w["version"] for w in waves]}]
-        smap.pop("covered", None)
-    else:
-        waves.append(wave)
-    smap["source"] = "table"
-    store.write_json_atomic(_snapshot_map_path(enc_root, stage), smap)
-    return {**smap["waves"][-1], "rows": int(n_rows)}
+
+def _stream_wave(batch_df: DataFrame, batch_id: int, enc_root: str,
+                 stage: str, sort_cols: list[str], store: FileStore,
+                 **encode_kw) -> None:
+    """One micro-batch of
+    :func:`~..streaming.incremental.stream_into_encoded_store` as an
+    encode wave. Coverage is the highest committed batch ordinal: a
+    replayed batch at or below it is a no-op, also after a
+    consolidation folded its wave away, while a batch whose earlier
+    attempt died before its commit gets the same version again and
+    resumes from its slice manifests."""
+    if batch_df.isEmpty():
+        return
+    smap = _load_wave_map(enc_root, stage, store, "stream")
+    if smap["covered"] is not None and batch_id <= smap["covered"]:
+        return
+    _encode_wave(batch_df.sparkSession, batch_df.localCheckpoint(eager=False),
+                 enc_root, stage, store, smap, int(batch_id), sort_cols,
+                 f"stream-batch-{batch_id}", **encode_kw)
 
 
 def read_encoded_table(
@@ -1000,27 +1041,25 @@ def read_encoded_table(
     ``enc_version`` layout column so :func:`~..encoder.decode_chunks`
     groups chunks per (wave, slice, partition, seq) — part_ids from
     different waves can never collide into one decode group. Decode of
-    this union equals the latest table snapshot for append-only
-    tables. A missing snapshot map or an empty wave list (a store whose
-    only waves so far were zero-row — the map is written from wave 0)
-    reads as a TYPED empty chunk frame, so downstream projection /
-    pruning / union code works unchanged from before the first byte."""
+    this union equals the latest table snapshot. A missing snapshot map
+    or an empty wave list (a store whose only waves so far were
+    zero-row — the map is written from wave 0) reads as a TYPED empty
+    chunk frame, so downstream projection / pruning / union code works
+    unchanged from before the first byte."""
     from pyspark.sql import functions as F
 
     from ..encoder import SLICED_CHUNK_SCHEMA
     from ..storage import read_chunks
 
     store = store or LocalStore()
-    map_path = _snapshot_map_path(enc_root, stage)
-    smap = (store.read_json(map_path) if store.exists(map_path)
-            else {"waves": []})
-    if not smap["waves"]:
+    waves = _load_wave_map(enc_root, stage, store)["waves"]
+    if not waves:
         return local_frame(
             spark, [], SLICED_CHUNK_SCHEMA + ", enc_version int")
     frames = [
         read_chunks(spark, enc_root, stage, w["version"])
         .withColumn("enc_version", F.lit(int(w["version"])))
-        for w in smap["waves"]
+        for w in waves
     ]
     out = frames[0]
     for f in frames[1:]:
@@ -1047,28 +1086,24 @@ def consolidate_encoded_table(
     with the single consolidated wave, so readers flip at one commit
     point; superseded version dirs stay on disk for in-flight readers
     (delete them in a later maintenance pass, mirroring
-    :func:`vacuum`'s discipline).
+    :func:`vacuum`'s discipline). Coverage is unchanged, so the next
+    wave or stream batch continues after it under a new version.
 
-    No-op (returns the current mapping) below ``min_waves`` waves."""
+    No-op (returns the current mapping, ``version`` 0 when no wave is
+    live) below ``min_waves`` waves."""
     from ..encoder import decode_chunks
-    from ..storage import encode_run
 
     store = store or LocalStore()
-    map_path = _snapshot_map_path(enc_root, stage)
-    smap = store.read_json(map_path)
+    smap = _load_wave_map(enc_root, stage, store)
     waves = smap["waves"]
-    if len(waves) < min_waves:
-        return {**waves[-1], "consolidated": 0}
+    if not waves or len(waves) < min_waves:
+        return {**_head(waves, smap["covered"]), "consolidated": 0}
     rows = decode_chunks(read_encoded_table(spark, enc_root, stage, store))
-    version = waves[-1]["version"] + 1
-    encode_run(spark, rows, enc_root, stage, version=version,
-               sort_cols=sort_cols,
-               input_fingerprint=f"consolidate:{[w['version'] for w in waves]}",
-               **encode_kw)
-    smap["waves"] = [{"version": version, "snapshot": waves[-1]["snapshot"],
-                      "consolidated_from": [w["version"] for w in waves]}]
-    store.write_json_atomic(map_path, smap)
-    return {**smap["waves"][0], "consolidated": 1}
+    wave = _encode_wave(
+        spark, rows, enc_root, stage, store, smap, smap["covered"],
+        sort_cols, f"consolidate:{[w['version'] for w in waves]}",
+        "consolidated_from", **encode_kw)
+    return {**wave, "consolidated": 1}
 
 
 def expire_encoded_versions(
@@ -1080,18 +1115,19 @@ def expire_encoded_versions(
     """Chunk-store version GC — the physical-reclaim half of encoded-
     table maintenance, mirroring :func:`expire_snapshots` +
     :func:`vacuum` for ``enc_root``. :func:`consolidate_encoded_table`,
-    and in-cadence ``compact_if_needed`` whenever a wave's runts merged
-    into fewer chunks, strand superseded ``v=N`` directories on disk
-    (readers flip at the snapshot-map commit; old versions stay for
-    in-flight readers); this deletes every version dir that is
+    a rebasing wave, and in-cadence ``compact_if_needed`` whenever a
+    wave's runts merged into fewer chunks, strand superseded ``v=N``
+    directories on disk (readers flip at the snapshot-map commit; old
+    versions stay for in-flight readers); this deletes every version
+    dir that is
 
-    * NOT referenced by ``_snapshot_map.json`` (including
-      ``compacted_from`` / ``consolidated_from`` sources — those are
-      exactly the stranded versions this GC exists to reclaim), and
-    * OLDER than the newest referenced version. Anything newer is an
-      in-flight wave that has encoded slices but not yet committed its
-      map entry — a GC must never race a writer, so the newest
-      referenced version is the deletion fence.
+    * NOT a live wave of ``_snapshot_map.json`` (``compacted_from`` /
+      ``consolidated_from`` / ``rebased_from`` sources are exactly the
+      stranded versions this GC exists to reclaim), and
+    * NOT NEWER than the highest version ever committed. Anything newer
+      is an in-flight wave that has encoded slices but not yet
+      committed its map entry — a GC must never race a writer, so the
+      map's version high-water mark is the deletion fence.
 
     Metadata-light: one map read + one version listing; deletion is
     per-directory. Returns the deleted (``dry_run``: would-delete)
@@ -1099,16 +1135,10 @@ def expire_encoded_versions(
     from ..storage import list_versions, stage_dir
 
     store = store or LocalStore()
-    map_path = _snapshot_map_path(enc_root, stage)
-    if not store.exists(map_path):
-        return []
-    referenced = {int(w["version"])
-                  for w in store.read_json(map_path)["waves"]}
-    if not referenced:
-        return []
-    fence = max(referenced)
+    smap = _load_wave_map(enc_root, stage, store)
+    live = {int(w["version"]) for w in smap["waves"]}
     doomed = [v for v in list_versions(enc_root, stage, store)
-              if v not in referenced and v < fence]
+              if v not in live and v <= smap["max_version"]]
     if not dry_run:
         for v in doomed:
             store.delete(stage_dir(enc_root, stage, v), recursive=True)

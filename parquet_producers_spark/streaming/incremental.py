@@ -84,56 +84,24 @@ def stream_into_encoded_store(
     micro-batch becomes one encode wave — a new chunk-store version
     holding the batch's rows, written through
     :func:`~..storage.encode_run` (hash-sliced, per-slice atomic
-    manifests). Exactly-once is two-level, same as
-    :func:`stream_into_pipeline`: Spark's streaming checkpoint
-    guarantees batch delivery once, and a replayed batch re-enters the
-    SAME version (version = batch ordinal) where finished slices
-    resume from their manifests instead of re-encoding.
+    manifests) and committed to the stage's ``_snapshot_map.json``.
+    Exactly-once is two-level, same as :func:`stream_into_pipeline`:
+    Spark's streaming checkpoint guarantees batch delivery once, and
+    the map records the highest committed batch ordinal, so a replayed
+    batch is a no-op once committed and otherwise re-enters the version
+    its first attempt took, where finished slices resume from their
+    manifests instead of re-encoding.
 
-    After each encoded batch the wave is committed to the stage's
-    ``_snapshot_map.json`` (idempotent — a replayed batch's version is
-    already listed), so ``sources.snapshots.read_encoded_table`` reads
-    the streamed store exactly like a batch-incremental one, and
+    ``sources.snapshots.read_encoded_table`` reads the streamed store
+    exactly like a batch-incremental one, and
     ``consolidate_encoded_table`` / ``expire_encoded_versions`` run
     against it unchanged."""
     from ..filestore import LocalStore
-    from ..sources.snapshots import _snapshot_map_path
-    from ..storage import encode_run
+    from ..sources.snapshots import _stream_wave
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        st = store or LocalStore()
-        map_path = _snapshot_map_path(enc_root, stage)
-        smap = (st.read_json(map_path) if st.exists(map_path)
-                else {"waves": []})
-        # refuse BEFORE encoding: batch-ordinal versions would collide
-        # with the table waves' version counter, so the check must beat
-        # the first byte written, not just the map commit
-        if smap.get("source") == "table":
-            raise ValueError(
-                f"stage {stage!r} is table-sourced (encode_table_"
-                "incremental maintains it): streaming batch ordinals "
-                "into its snapshot map would corrupt the diff baseline. "
-                "Use a separate stage.")
-        # version is the batch ordinal, so a replayed batch re-enters
-        # ITS OWN version and resumes from the slice manifests
-        version = int(batch_id) + 1
-        encode_run(
-            batch_df.sparkSession, batch_df.localCheckpoint(eager=False),
-            root=enc_root, stage=stage, version=version,
-            sort_cols=sort_cols, n_slices=n_slices,
-            input_fingerprint=f"stream-batch-{batch_id}", **encode_kw)
-        if all(int(w["version"]) != version for w in smap["waves"]):
-            smap["waves"] = sorted(
-                smap["waves"] + [{"version": version,
-                                  "snapshot": int(batch_id)}],
-                key=lambda w: int(w["version"]))
-            # the marker encode_table_incremental REFUSES on — this
-            # map's "snapshot" values are batch ordinals, not table
-            # snapshot ids (same shape, incompatible meaning)
-            smap["source"] = "stream"
-            st.write_json_atomic(map_path, smap)
+        _stream_wave(batch_df, batch_id, enc_root, stage, sort_cols,
+                     store or LocalStore(), n_slices=n_slices, **encode_kw)
 
     return (
         stream_df.writeStream

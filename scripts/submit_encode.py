@@ -76,10 +76,11 @@ def main() -> None:
                          "orphan data files")
     ap.add_argument("--gc-versions", action="store_true",
                     help="chunk-store version GC: delete every "
-                         "--output/--stage version dir not referenced "
-                         "by _snapshot_map.json and older than the "
-                         "newest referenced version (the dirs that "
-                         "consolidation / in-cadence compaction strand)")
+                         "--output/--stage version dir that is not a "
+                         "live wave of _snapshot_map.json and not newer "
+                         "than the highest committed version (the dirs "
+                         "that consolidation, rebases and in-cadence "
+                         "compaction strand)")
     ap.add_argument("--dry-run", action="store_true",
                     help="with --gc-versions: report, delete nothing")
     args = ap.parse_args()

@@ -12,7 +12,6 @@ import pytest
 
 from parquet_producers_spark.operators.produce import (
     Stage,
-    bootstrap_stage,
     empty_state,
     update_stage,
 )
@@ -36,9 +35,9 @@ class MemoryStore:
     def update(self, rows: list[tuple]):
         upd = self.spark.createDataFrame(rows, schema=self.updates_ddl)
         if self.content is None:
-            c, m, u = bootstrap_stage(self.spark, self.stage, upd)
-        else:
-            c, m, u = update_stage(self.stage, self.content, self.mappings, upd)
+            self.content, self.mappings = empty_state(
+                self.spark, self.stage, upd)
+        c, m, u = update_stage(self.stage, self.content, self.mappings, upd)
         # materialize: state tables are persisted between waves
         self.content = self.spark.createDataFrame(
             c.toPandas(), schema=c.schema)

@@ -15,7 +15,7 @@ import pytest
 
 from parquet_producers_spark.operators.produce import (
     Stage,
-    bootstrap_stage,
+    empty_state,
     update_stage,
 )
 
@@ -94,10 +94,9 @@ def test_random_waves_match_model(spark, seed):
                     wave.append(("Update", sk, rng.choice(vocab)))
         upd = spark.createDataFrame(wave, "type string, sk int, val string")
         if content is None:
-            content, mappings, updates_out = bootstrap_stage(spark, stage, upd)
-        else:
-            content, mappings, updates_out = update_stage(
-                stage, content, mappings, upd)
+            content, mappings = empty_state(spark, stage, upd)
+        content, mappings, updates_out = update_stage(
+            stage, content, mappings, upd)
         # materialize (state tables persist between waves)
         content = spark.createDataFrame(content.toPandas(), content.schema)
         mappings = spark.createDataFrame(mappings.toPandas(), mappings.schema)

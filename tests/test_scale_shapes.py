@@ -114,7 +114,8 @@ def test_preserve_bootstrap_no_single_partition_exchange(spark):
     exchange (the old dense_rank-over-global-window scale-killer)."""
     from parquet_producers_spark.operators.produce import (
         Stage,
-        bootstrap_stage,
+        empty_state,
+        update_stage,
     )
 
     def gen(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -127,7 +128,8 @@ def test_preserve_bootstrap_no_single_partition_exchange(spark):
     upd = spark.createDataFrame(
         [("Add", i, f"w{i % 37}") for i in range(300)],
         "type string, sk int, w string")
-    content, _m, _u = bootstrap_stage(spark, stage, upd)
+    content, _m, _u = update_stage(stage, *empty_state(spark, stage, upd),
+                                   upd)
     # single-partition exchanges are only allowed under a scalar
     # aggregate (max prev id — one row per partition, then one row);
     # the data path (window/sort over TKs) must never collapse to one
@@ -149,7 +151,7 @@ def test_preserve_cols_and_merge_hooks(spark):
     passes the whole previous value to user code)."""
     from parquet_producers_spark.operators.produce import (
         Stage,
-        bootstrap_stage,
+        empty_state,
         update_stage,
     )
 
@@ -168,7 +170,7 @@ def test_preserve_cols_and_merge_hooks(spark):
     )
     boot = spark.createDataFrame(
         [("Add", 1, "dog"), ("Add", 2, "cat")], "type string, sk int, w string")
-    c0, m0, _ = bootstrap_stage(spark, stage, boot)
+    c0, m0, _ = update_stage(stage, *empty_state(spark, stage, boot), boot)
     c0 = spark.createDataFrame(c0.toPandas(), schema=c0.schema)
     m0 = spark.createDataFrame(m0.toPandas(), schema=m0.schema)
     wave = spark.createDataFrame(
@@ -192,7 +194,8 @@ def test_preserve_cols_and_merge_hooks(spark):
         out_ddl="word string, label string, n_seen int",
         preserve_merge=bump,
     )
-    c0, m0, _ = bootstrap_stage(spark, stage2, boot)
+    c0, m0, _ = update_stage(stage2, *empty_state(spark, stage2, boot),
+                             boot)
     c0 = spark.createDataFrame(c0.toPandas(), schema=c0.schema)
     m0 = spark.createDataFrame(m0.toPandas(), schema=m0.schema)
     c1, _, _ = update_stage(stage2, c0, m0, wave)

@@ -4,6 +4,8 @@ and feeding the file list to the direct-scan encoder."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from parquet_producers_spark.sources import snapshots
@@ -940,11 +942,10 @@ def test_file_skipping_sharded_manifest(spark, tmp_path, monkeypatch):
 
 
 def test_expired_manifest_link_triggers_rebase(spark, tmp_path):
-    """expire_snapshots can delete manifests BETWEEN the encode store's
-    covered snapshot and the latest one; the incremental wave's
-    append-only chain walk must treat the broken link as 'cannot prove
-    append-only' and REBASE (per its documented contract) instead of
-    raising FileNotFoundError."""
+    """expire_snapshots can delete the manifest of the encode store's
+    covered snapshot; the incremental wave must treat the missing
+    manifest as 'cannot prove append-only' and REBASE (per its
+    documented contract) instead of raising FileNotFoundError."""
     import hashlib
 
     from parquet_producers_spark.encoder import decode_chunks
@@ -982,6 +983,108 @@ def test_expired_manifest_link_triggers_rebase(spark, tmp_path):
 
     decoded = decode_chunks(read_encoded_table(spark, enc, "code"))
     assert digest(decoded) == digest(read_snapshot(spark, t))
+
+
+def _ids(spark, enc):
+    from parquet_producers_spark.encoder import decode_chunks
+    from parquet_producers_spark.sources.snapshots import read_encoded_table
+
+    return sorted(r.id for r in decode_chunks(
+        read_encoded_table(spark, enc, "code")).collect())
+
+
+def _wave(spark, t, enc):
+    from parquet_producers_spark.sources.snapshots import (
+        encode_table_incremental,
+    )
+
+    return encode_table_incremental(spark, t, enc, "code",
+                                    sort_cols=["id"], n_slices=2)
+
+
+def _rows(spark, ids):
+    return spark.createDataFrame(
+        [(i, f"v{i}") for i in ids], "id int, v string").coalesce(1)
+
+
+def test_append_after_replace_to_zero_rows_takes_a_new_version(
+        spark, tmp_path):
+    """A replace down to zero rows leaves the store no live wave; the
+    next append must encode under a version never committed before,
+    not resume the pre-replace version's slices."""
+    from parquet_producers_spark.sources.snapshots import (
+        expire_encoded_versions,
+    )
+
+    t, enc = str(tmp_path / "tbl"), str(tmp_path / "enc")
+    commit_snapshot(spark, _rows(spark, range(8)), t)
+    assert _wave(spark, t, enc)["version"] == 1
+    commit_snapshot(spark, _rows(spark, []), t, mode="replace")
+    assert _wave(spark, t, enc) == {"version": 0, "snapshot": 2, "rows": 0}
+    commit_snapshot(spark, _rows(spark, [100, 101]), t, mode="append")
+    w = _wave(spark, t, enc)
+    assert w["version"] == 2 and w["rows"] == 2
+    assert _ids(spark, enc) == [100, 101]
+    # the pre-replace version is below the high-water mark: reclaimed
+    assert expire_encoded_versions(enc, "code") == [1]
+
+
+def test_replace_relisting_covered_files_encodes_only_new_rows(
+        spark, tmp_path):
+    """A replace that lists every covered file plus a new one is an
+    append in content: the wave encodes the new file's rows only."""
+    from parquet_producers_spark.sources.snapshots import commit_files
+
+    t, enc = str(tmp_path / "tbl"), str(tmp_path / "enc")
+    commit_snapshot(spark, _rows(spark, range(10)), t)
+    _wave(spark, t, enc)
+    extra = str(tmp_path / "extra")
+    _rows(spark, range(10, 15)).write.parquet(extra)
+    paths = [f["path"] for f in snapshot_files(t)] + [
+        os.path.join(extra, n) for n in os.listdir(extra)
+        if n.endswith(".parquet")]
+    commit_files(spark, t, paths, mode="replace")
+    w = _wave(spark, t, enc)
+    assert w["rows"] == 5 and w["version"] == 2 and "rebased_from" not in w
+    assert _ids(spark, enc) == list(range(15))
+
+
+def test_replace_dropping_delete_entries_rebases(spark, tmp_path):
+    """A replace that keeps every file but drops the covered snapshot's
+    delete entries brings deleted rows back: the wave must rebase, and
+    the store must decode to the table."""
+    from parquet_producers_spark.sources.snapshots import (
+        commit_deletes,
+        commit_files,
+    )
+
+    t, enc = str(tmp_path / "tbl"), str(tmp_path / "enc")
+    commit_snapshot(spark, _rows(spark, range(8)), t)
+    commit_deletes(spark, t, spark.createDataFrame([(0,), (1,)], "id int"),
+                   ["id"])
+    assert _wave(spark, t, enc)["rows"] == 6
+    commit_files(spark, t, [f["path"] for f in snapshot_files(t)],
+                 mode="replace")
+    w = _wave(spark, t, enc)
+    assert w["rebased_from"] == [1] and w["rows"] == 8
+    assert _ids(spark, enc) == sorted(
+        r.id for r in read_snapshot(spark, t).collect())
+
+
+def test_consolidate_without_live_waves_is_a_no_op(spark, tmp_path):
+    """A store with no map, or whose only wave was zero-row, has no
+    wave to fold: consolidation answers its no-op, like the reader."""
+    from parquet_producers_spark.sources.snapshots import (
+        consolidate_encoded_table,
+    )
+
+    t, enc = str(tmp_path / "tbl"), str(tmp_path / "enc")
+    assert consolidate_encoded_table(spark, enc, "code", sort_cols=["id"]) \
+        == {"version": 0, "snapshot": None, "consolidated": 0}
+    commit_snapshot(spark, _rows(spark, []), t)
+    _wave(spark, t, enc)
+    assert consolidate_encoded_table(spark, enc, "code", sort_cols=["id"]) \
+        == {"version": 0, "snapshot": 1, "consolidated": 0}
 
 
 def test_stream_table_snapshot_map_mix_refused(spark, tmp_path):

@@ -7,7 +7,6 @@ from __future__ import annotations
 import os
 
 import pandas as pd
-import pytest
 
 from parquet_producers_spark.operators.produce import Stage
 from parquet_producers_spark.plans.dag import Pipeline
@@ -205,74 +204,9 @@ def test_session_ordinals_never_repeat_across_timeouts():
     assert not state.removed
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's state protocol needs google.protobuf, "
-           "absent in this container — the operator itself is plain "
-           "public API and runs wherever protobuf is installed")
-def test_sessionize_tws_matches_batch(spark, tmp_path, sf_dir):
-    """transformWithStateInPandas sessionizer (typed state + timers):
-    closed sessions must equal the batch gaps-and-islands result for
-    every session the stream can close — same contract as the
-    applyInPandasWithState variant."""
-    from parquet_producers_spark.operators.sessionize import (
-        sessionize,
-        sessionize_stream_tws,
-    )
-
-    src = str(tmp_path / "sess_tws_in")
-    events = spark.read.parquet(f"{sf_dir}/events.parquet") \
-        .filter("user_id < 20").select("event_id", "ts", "user_id", "value")
-    events.coalesce(1).write.mode("overwrite").parquet(src)
-    gap = 28800
-
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, value double"
-    ).parquet(src)
-    sess = sessionize_stream_tws(stream, gap_s=gap)
-    q = (sess.writeStream.format("memory").queryName("sessions_tws")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    got = {
-        (r.user_id, r.session_id):
-            (r.session_start, r.session_end, r.n_events,
-             round(r.total_value, 4))
-        for r in spark.sql("select * from sessions_tws").collect()
-    }
-
-    batch = sessionize(events, gap_s=gap)
-    want_all = {
-        (r.user_id, r.session_id):
-            (r.session_start, r.session_end, r.n_events,
-             round(r.total_value, 4))
-        for r in batch.collect()
-    }
-    last_sid = {}
-    for (u, sid) in want_all:
-        last_sid[u] = max(last_sid.get(u, 0), sid)
-    want_closed = {k: v for k, v in want_all.items()
-                   if k[1] != last_sid[k[0]]}
-    assert got == want_closed
-    assert len(got) > 10
-
-
 def test_stream_into_encoded_store(spark, tmp_path):
     """Streaming ingestion into the chunk-store format: each
-    micro-batch becomes one encoded version (batch ordinal + 1); the
+    micro-batch becomes one encoded version; the
     streaming checkpoint gives exactly-once across restarts, and the
     union of versions decodes to everything ingested."""
     from pyspark.sql import functions as F
@@ -332,3 +266,41 @@ def test_stream_into_encoded_store(spark, tmp_path):
     via_map = decode_chunks(read_encoded_table(spark, enc, "docs"))
     assert via_map.count() == 70
     assert expire_encoded_versions(enc, "docs") == []  # all referenced
+
+
+def test_stream_batch_after_consolidation_takes_a_new_version(
+        spark, tmp_path):
+    """Consolidation takes the next version number; a later stream
+    batch must encode under a newer one, not resume the consolidated
+    version's slices and drop its own rows."""
+    from parquet_producers_spark.encoder import decode_chunks
+    from parquet_producers_spark.sources.snapshots import (
+        consolidate_encoded_table,
+        read_encoded_table,
+    )
+    from parquet_producers_spark.streaming.incremental import (
+        stream_into_encoded_store,
+    )
+
+    in_dir, enc = str(tmp_path / "in"), str(tmp_path / "enc")
+
+    def batch(n):
+        spark.createDataFrame(
+            [(i, f"w{i}") for i in range(10 * n, 10 * n + 10)],
+            "doc_id int, text string").coalesce(1) \
+            .write.parquet(f"{in_dir}/f{n}")
+        stream = spark.readStream.schema("doc_id int, text string") \
+            .parquet(in_dir + "/*")
+        stream_into_encoded_store(
+            stream, enc, "docs", sort_cols=["doc_id"],
+            checkpoint=str(tmp_path / "ckpt"), n_slices=1,
+            chunk_rows=16).awaitTermination(120)
+
+    batch(0)
+    batch(1)
+    out = consolidate_encoded_table(spark, enc, "docs",
+                                    sort_cols=["doc_id"], n_slices=1)
+    assert out["consolidated"] == 1 and out["version"] == 3
+    batch(2)
+    decoded = decode_chunks(read_encoded_table(spark, enc, "docs"))
+    assert sorted(r.doc_id for r in decoded.collect()) == list(range(30))

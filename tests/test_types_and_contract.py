@@ -62,7 +62,11 @@ def test_decimal_keys_through_producer(spark):
     import pandas as pd
     from decimal import Decimal
 
-    from parquet_producers_spark.operators.produce import Stage, bootstrap_stage
+    from parquet_producers_spark.operators.produce import (
+        Stage,
+        empty_state,
+        update_stage,
+    )
 
     def produce(key, pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame({
@@ -76,7 +80,8 @@ def test_decimal_keys_through_producer(spark):
         [("Add", "f", Decimal("10.50"), "a"),
          ("Add", "f", Decimal("-10.50"), "b")],
         "type string, file string, amount decimal(18,2), invoice string")
-    content, mappings, updates_out = bootstrap_stage(spark, stage, upd)
+    content, mappings, updates_out = update_stage(
+        stage, *empty_state(spark, stage, upd), upd)
     rows = sorted((str(r.amt), r.inv) for r in content.collect())
     assert rows == [("10.50", "a"), ("10.50", "b")]
     assert updates_out.filter("type = 'Add'").count() == 1

@@ -12,7 +12,7 @@ import pandas as pd
 from conftest import executed_plan
 from parquet_producers_spark.operators.produce import (
     Stage,
-    bootstrap_stage,
+    empty_state,
     update_stage,
 )
 
@@ -69,17 +69,18 @@ def test_null_keys_reconcile_like_a_recompute(spark, tmp_path):
     for n, wave in enumerate(waves):
         upd = spark.createDataFrame(wave, SCHEMA)
         if content is None:
-            content, mappings, out = bootstrap_stage(spark, STAGE, upd)
-        else:
-            content, mappings, out = update_stage(
-                STAGE, content, mappings, upd)
+            content, mappings = empty_state(spark, STAGE, upd)
+        content, mappings, out = update_stage(STAGE, content, mappings, upd)
         content = _persist(spark, content, str(tmp_path / f"c{n}"))
         mappings = _persist(spark, mappings, str(tmp_path / f"m{n}"))
         events = [(r.word, r.type, r.text) for r in out.collect()]
         apply(wave)
 
-        recompute, _, _ = bootstrap_stage(spark, STAGE, spark.createDataFrame(
-            [("Add", d, t) for d, ts in state.items() for t in ts], SCHEMA))
+        # the oracle: one from-scratch wave over the full source state
+        full = spark.createDataFrame(
+            [("Add", d, t) for d, ts in state.items() for t in ts], SCHEMA)
+        recompute, _, _ = update_stage(
+            STAGE, *empty_state(spark, STAGE, full), full)
         got = Counter(tuple(r) for r in content.collect())
         assert got == Counter(tuple(r) for r in recompute.collect()), n
         assert ({(r.doc, r.word) for r in mappings.collect()}
@@ -103,7 +104,7 @@ def test_update_stage_plans_read_each_input_once(spark, tmp_path):
     planned from its inputs, not read back from a checkpoint."""
     boot = spark.createDataFrame(
         [("Add", 1, "a"), ("Add", 2, "b"), ("Add", 3, "-c")], SCHEMA)
-    c0, m0, _ = bootstrap_stage(spark, STAGE, boot)
+    c0, m0, _ = update_stage(STAGE, *empty_state(spark, STAGE, boot), boot)
     prev_content = _persist(spark, c0, str(tmp_path / "prev_content"))
     prev_mappings = _persist(spark, m0, str(tmp_path / "prev_mappings"))
     wave = spark.createDataFrame(

@@ -366,11 +366,13 @@ def test_independent_txn_crash_not_visible_through_other_manifest(
     # b's transaction: simulate a crash AFTER the tables committed by
     # writing them manually (update_stage path) without the manifest
     from parquet_producers_spark.operators.produce import (
-        bootstrap_stage,
+        empty_state,
+        update_stage,
     )
 
-    content, mappings, updates_out = bootstrap_stage(
-        spark, p.nodes["b"].stage, feed("world"))
+    stage_b, upd = p.nodes["b"].stage, feed("world")
+    content, mappings, updates_out = update_stage(
+        stage_b, *empty_state(spark, stage_b, upd), upd)
     p._write("b", 1, "content", content)
     p._write("b", 1, "mappings", mappings)
     p._write("b", 1, "updates", updates_out)
