@@ -2,12 +2,21 @@
 (ops 21-22: Parquet.Producers/Producer.cs:68-185).
 
 A :class:`Pipeline` holds a registry of stages wired source→target.
-``update(root_updates, based_on)`` collects the transitive downstream
-closure, topologically orders it sources-before-target (reference
-:121-141), runs each stage as one Spark job chain, and persists version
-N+1 of every stage's (content, mappings, updates) under
-``{root}/{stage}/v={N+1}/`` — the whole-DAG transaction of reference
-README.md:182. Per-stage wall-clock is recorded (reference :154-175).
+``update(root_updates)`` collects the transitive downstream closure,
+topologically orders it sources-before-target (reference :121-141),
+runs each stage as one Spark job chain, and persists version N of every
+stage in the closure under ``{root}/{stage}/v={N}/{content,mappings,
+updates}/``. Per-stage wall-clock is recorded (reference :154-175).
+
+One version counter for the whole DAG (reference README.md:182,
+Producer.cs:115-118): ``_txn/v=N.json`` is the only record of version
+N, and every transaction takes N = newest manifest + 1. The manifest is
+written once, after every table of the closure, and carries the
+``head`` — ``{stage: version}`` of every committed stage — so a
+stage's tables at a version are visible only when a manifest names
+them. A crashed attempt never committed its number: its retry takes
+the same N and overwrites the partial dirs, and a committed dir is
+never a write target because N is always above the head.
 
 Content is written range-partitioned and sorted by (tk…, sk…), which is
 what makes the codec layer's run-based encodings effective downstream.
@@ -29,7 +38,7 @@ from ..operators.produce import (
     update_stage,
     validate_updates,
 )
-from ..storage import atomic_write_json, list_versions, stage_dir
+from ..storage import stage_dir
 from ..util import ThrottledLogger, local_frame
 
 
@@ -59,17 +68,20 @@ class Pipeline:
 
     # -- state I/O --------------------------------------------------------
 
-    def _table(self, name: str, version: int, table: str) -> DataFrame:
-        path = stage_dir(self.root, name, version, table)
+    def _table(self, name: str, version: int, table: str,
+               empty: dict | None = None) -> DataFrame:
+        """``empty`` is the version's ``{stage: {table: ddl}}`` map of
+        empty tables, read from its manifest when not given."""
+        if empty is None:
+            empty = self.store.read_json(self._txn_path(version))["empty"]
         # reference IPersistentStreams.cs:14-17: an absent blob and an
-        # empty stream are the same thing to readers — an empty table is
-        # a deleted dir plus a schema marker (see _write)
-        marker = path + "._empty.json"
-        if (not self.store.exists(posixpath.join(path, "_SUCCESS"))
-                and self.store.exists(marker)):
-            return local_frame(
-                self.spark, [], self.store.read_json(marker)["schema_ddl"])
-        return self.spark.read.parquet(path)
+        # empty stream are the same thing to readers — an empty table
+        # has no dir, and its manifest keeps the schema (see _write)
+        ddl = empty.get(name, {}).get(table)
+        if ddl is not None:
+            return local_frame(self.spark, [], ddl)
+        return self.spark.read.parquet(
+            stage_dir(self.root, name, version, table))
 
     def content(self, name: str, version: int | None = None) -> DataFrame:
         version = version if version is not None else self.version(name)
@@ -79,58 +91,37 @@ class Pipeline:
         return self._table(name, version, "updates")
 
     def version(self, name: str) -> int:
-        """Latest COMMITTED version. Two-level commit protocol:
+        """The stage's latest committed version, from the newest
+        manifest's head; 0 for a stage no transaction has committed."""
+        return self._head()[1].get(name, 0)
 
-        * per stage, all three tables must have ``_SUCCESS`` (a crash
-          mid-stage leaves a partial ``v=N+1`` — invisible, overwritten
-          by the re-run);
-        * the whole transaction becomes visible only when the single
-          atomically-renamed ``_txn/v=N.json`` manifest exists — so a
-          crash AFTER some stages committed their tables but before the
-          DAG finished leaves NO stage advanced (reference: the DAG
-          update is one transaction, README.md:182)."""
-        vs = list_versions(self.root, name, store=self.store)
-        for v in reversed(vs):
-            if name in self._txn_stages(v) and all(
-                self.store.exists(posixpath.join(
-                    stage_dir(self.root, name, v, t), "_SUCCESS"))
-                # empty table = absent dir + schema marker (_write)
-                or self.store.exists(
-                    stage_dir(self.root, name, v, t) + "._empty.json")
-                for t in ("content", "mappings", "updates")
-            ):
-                return v
-        return 0
+    def _txn_path(self, version: int) -> str:
+        return posixpath.join(self.root, "_txn", f"v={version}.json")
 
-    def _txn_path(self, version: int, txn_id: str | None = None) -> str:
-        name = (f"v={version}.{txn_id}.json" if txn_id
-                else f"v={version}.json")
-        return posixpath.join(self.root, "_txn", name)
-
-    def _txn_stages(self, version: int) -> list[str]:
-        """Stages committed at this version — the UNION over every
-        per-transaction manifest ``_txn/v=N.<txnid>.json`` (plus the
-        legacy single-file name). Manifests are WRITE-ONCE per
-        (version, txn): independent transactions sharing a version
-        number never rewrite each other's manifest, so there is no
-        read window where a committed transaction is invisible (the
-        old union-rewrite had one on stores whose atomic write is
-        delete+rename). Membership matters, not just existence: a
-        crash in one transaction must not become visible through
-        another's manifest."""
-        stages: set[str] = set()
+    def _head(self) -> tuple[int, dict[str, int]]:
+        """The newest committed DAG version and its head; (0, {}) before
+        the first commit."""
+        newest = 0
         for entry in self.store.listdir(posixpath.join(self.root, "_txn")):
-            if entry == f"v={version}.json" or (
-                    entry.startswith(f"v={version}.")
-                    and entry.endswith(".json")):
-                m = self.store.read_json(
-                    posixpath.join(self.root, "_txn", entry))
-                stages.update(m.get("stages", []))
-        return sorted(stages)
+            if not (entry.startswith("v=") and entry.endswith(".json")):
+                continue  # an atomic write's .tmp, checksum files
+            if not entry[2:-5].isdigit():
+                # v=N.<txnid>.json: numbered per transaction, not per DAG
+                raise ValueError(
+                    f"{self.root}: _txn/{entry} is a per-transaction "
+                    f"manifest of an older layout, which this root cannot "
+                    f"be read or updated with")
+            newest = max(newest, int(entry[2:-5]))
+        if not newest:
+            return 0, {}
+        return newest, self.store.read_json(self._txn_path(newest))["head"]
 
     def _write(self, name: str, version: int, table: str, df: DataFrame,
-               sort_cols: list | None = None) -> None:
-        """``sort_cols`` entries are column names or (name, "asc"|"desc")
+               sort_cols: list | None = None) -> str | None:
+        """Write one table; returns its schema DDL when it came out
+        empty (and its dir was deleted), else None.
+
+        ``sort_cols`` entries are column names or (name, "asc"|"desc")
         pairs — per-column direction is the reference's pluggable key
         comparer (Util/Comparers.cs:11-28) applied to at-rest order."""
         from pyspark.sql import functions as F
@@ -148,25 +139,18 @@ class Pipeline:
         # reference IPersistentStreams.cs:14-17: uploading EMPTY content
         # deletes the blob. Detect emptiness from the written part
         # footers (metadata-only, O(part files)); an all-empty table
-        # becomes an absent dir plus a schema marker — the marker plays
-        # the role of the reference reader's static C# row type, letting
-        # _table synthesize a correctly-typed empty frame.
+        # becomes an absent dir, and its DDL — the role of the reference
+        # reader's static C# row type — goes into the version's manifest
+        # so _table can synthesize a correctly-typed empty frame.
         from ..encoder import open_parquet_any
 
-        rows = 0
         # short-circuit: non-empty tables stop at part 1
         for p in list_data_files(self.store, path):
-            rows += open_parquet_any(p).metadata.num_rows
-            if rows:
-                break
-        marker = path + "._empty.json"
-        if rows == 0:
-            self.store.write_json_atomic(marker, {"schema_ddl": ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in df.schema.fields)})
-            self.store.delete(path, recursive=True)
-        else:
-            self.store.delete(marker)  # idempotent re-run of a once-empty version
+            if open_parquet_any(p).metadata.num_rows:
+                return None
+        self.store.delete(path, recursive=True)
+        return ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                         for f in df.schema.fields)
 
     # -- the DAG update transaction ---------------------------------------
 
@@ -196,10 +180,11 @@ class Pipeline:
     def update(
         self,
         root_updates: dict[str, DataFrame],
-        based_on: int | None = None,
         validate: bool = False,
     ) -> int:
-        """Run one DAG-wide update transaction; returns the new version.
+        """Run one DAG-wide update transaction; returns its version N,
+        the newest committed version + 1, which every stage in the
+        downstream closure of ``root_updates`` is written at.
 
         ``validate=True`` enforces the update-stream contract (op 23:
         per key one Delete or ≥1 upserts, never mixed) on every stage's
@@ -211,12 +196,11 @@ class Pipeline:
             # violating stage in topo order
             for r in roots:
                 validate_updates(root_updates[r], self.nodes[r].stage.sk_cols)
-        based_on = based_on if based_on is not None else max(
-            (self.version(r) for r in roots), default=0
-        )
-        new_version = based_on + 1
+        base, head = self._head()
+        new_version = base + 1
         order = self._downstream_closure(roots)
         timings: dict[str, float] = {}
+        empty: dict[str, dict[str, str]] = {}  # this version's empty tables
         for name in order:
             t0 = time.monotonic()
             node = self.nodes[name]
@@ -228,32 +212,39 @@ class Pipeline:
                 feeders = []
                 for s in sources:
                     src = self.nodes[s].stage
-                    # a feeder untouched this wave: empty update stream,
-                    # current content (reference: a stage outside the
-                    # closure contributes no updates, Producer.cs:121-128)
-                    v = new_version if s in order else self.version(s)
-                    upd = self.updates_out(s, v)
-                    if s not in order:
-                        upd = upd.limit(0)
                     # read_sources needs content only to merge ≥2 feeders
-                    cnt = self.content(s, v) if len(sources) > 1 else None
+                    cnt = None
+                    if s in order:
+                        upd = self._table(s, new_version, "updates", empty)
+                        if len(sources) > 1:
+                            cnt = self._table(s, new_version, "content", empty)
+                    else:
+                        # a feeder untouched this wave: empty update
+                        # stream, current content (reference: a stage
+                        # outside the closure contributes no updates,
+                        # Producer.cs:121-128)
+                        upd = local_frame(self.spark, [],
+                                          "type string, " + src.out_ddl)
+                        if len(sources) > 1:
+                            cnt = (self.content(s, head[s]) if s in head
+                                   else local_frame(self.spark, [],
+                                                    src.out_ddl))
                     feeders.append(feeder_view(
                         cnt, upd, src.tk_cols, src.value_cols,
                     ))
                 updates_in = read_sources(feeders, stage.sk_cols)
 
-            # previous state = this stage's own latest complete version —
-            # NOT based_on: a stage that skipped earlier transactions (or
-            # was added to the DAG later) still reconciles against the
-            # state it actually has, never silently against empty
-            prev_v = self.version(name)
-            if prev_v == 0:
+            # previous state = this stage's own committed version: a
+            # stage that skipped earlier transactions (or was added to
+            # the DAG later) reconciles against the state it actually
+            # has, never silently against empty
+            if name not in head:
                 prev_content, prev_mappings = empty_state(
                     self.spark, stage, updates_in
                 )
             else:
-                prev_content = self._table(name, prev_v, "content")
-                prev_mappings = self._table(name, prev_v, "mappings")
+                prev_content = self._table(name, head[name], "content")
+                prev_mappings = self._table(name, head[name], "mappings")
 
             content, mappings, updates_out = update_stage(
                 stage, prev_content, prev_mappings, updates_in,
@@ -262,35 +253,34 @@ class Pipeline:
                 # contract by construction)
                 validate=validate and name not in root_updates,
             )
-            self._write(name, new_version, "content", content,
-                        sort_cols=(stage.content_sort
-                                   or stage.tk_cols + stage.sk_cols))
-            self._write(name, new_version, "mappings", mappings,
-                        sort_cols=stage.sk_cols + stage.tk_cols)
-            self._write(name, new_version, "updates", updates_out,
-                        sort_cols=stage.tk_cols)
+            for table, df, sort_cols in (
+                ("content", content,
+                 stage.content_sort or stage.tk_cols + stage.sk_cols),
+                ("mappings", mappings, stage.sk_cols + stage.tk_cols),
+                ("updates", updates_out, stage.tk_cols),
+            ):
+                ddl = self._write(name, new_version, table, df,
+                                  sort_cols=sort_cols)
+                if ddl is not None:
+                    empty.setdefault(name, {})[table] = ddl
             timings[name] = round(time.monotonic() - t0, 3)
             self.log.info("stage %s v%d done in %.3fs", name, new_version,
                           timings[name])
 
-        # COMMIT POINT: the atomic rename of this manifest is what makes
-        # every stage's v=N+1 visible to version() — before it, a crash
-        # leaves the transaction entirely uncommitted. The manifest is
-        # WRITE-ONCE per (version, txn): its name carries a
-        # deterministic id of THIS transaction's stage set, so an
-        # independent transaction that already owns this version number
-        # keeps its own manifest untouched (readers union all of them —
-        # no rewrite, no absence window on delete+rename stores). A
-        # re-run of the same stage set overwrites its own manifest
-        # idempotently.
-        import hashlib
-
-        txn_id = hashlib.sha1(
-            ",".join(sorted(order)).encode()).hexdigest()[:12]
-        atomic_write_json(
-            self._txn_path(new_version, txn_id),
-            {"version": new_version, "based_on": based_on,
-             "stages": sorted(order), "timings_s": timings},
-            store=self.store,
-        )
+        # COMMIT POINT: the atomic rename of this write-once manifest is
+        # what makes every stage's v=N visible — before it, a crash
+        # leaves the transaction entirely uncommitted. If N exists now,
+        # another writer committed it after this one read the head, and
+        # overwriting its manifest would un-commit it.
+        path = self._txn_path(new_version)
+        if self.store.exists(path):
+            raise RuntimeError(
+                f"{path} was committed by another writer during this "
+                f"transaction (based on version {base})")
+        self.store.write_json_atomic(path, {
+            "version": new_version, "stages": sorted(order),
+            "timings_s": timings,
+            "head": {**head, **dict.fromkeys(order, new_version)},
+            "empty": empty,
+        })
         return new_version

@@ -12,7 +12,8 @@ Spark shape: a stage version is a directory
 per completed *slice* (a hash-bucket of the keyspace). Each manifest
 records lineage (input fingerprint, slice spec, ``chunk_rows``) and is
 written atomically (tmp + rename), so a killed run resumes by skipping
-exactly the slices whose manifests exist. Its ``metrics`` are the
+exactly the slices whose manifests record the same lineage; a slice
+with another input's manifest is rebuilt. Its ``metrics`` are the
 slice's chunk stats, counted once at commit (``encoder.chunk_stats``)
 and read by compaction instead of a recount: ``rows``, ``raw_bytes``,
 ``enc_bytes``, ``n_chunks``, ``by_codec`` (encoded bytes per codec),
@@ -34,6 +35,7 @@ handles those URIs natively.
 
 from __future__ import annotations
 
+import json
 import posixpath
 import time
 from dataclasses import dataclass
@@ -50,11 +52,6 @@ _DEFAULT_STORE = LocalStore()
 def stage_dir(root: str, stage: str, version: int, table: str = "") -> str:
     p = posixpath.join(root, stage, f"v={version}")
     return posixpath.join(p, table) if table else p
-
-
-def atomic_write_json(path: str, payload: dict,
-                      store: FileStore | None = None) -> None:
-    (store or _DEFAULT_STORE).write_json_atomic(path, payload)
 
 
 def manifest_path(root: str, stage: str, version: int, slice_id: int) -> str:
@@ -99,24 +96,33 @@ def commit_slices(
     """The per-slice commit shared by :func:`encode_run` and
     ``compaction.compact_stage``.
 
-    Slices whose manifest already exists are skipped (resume). For the
-    rest, ``build(todo)`` returns a chunk frame carrying ``slice_id``; it
-    is written ``partitionBy(slice_id)`` with dynamic partition
+    A slice whose manifest matches every key of ``header`` is skipped
+    (resume). Every other slice is rebuilt from nothing: a manifest left
+    by another input goes first, then the slice's chunk dir, which
+    dynamic partition overwrite would keep if the new input has no rows
+    there. ``build(todo)`` returns a chunk frame carrying ``slice_id``;
+    it is written ``partitionBy(slice_id)`` with dynamic partition
     overwrite, read back in ONE grouped aggregate (runts are judged
     against ``header["chunk_rows"]``), and each slice commits by an
     atomic manifest of ``header`` plus its slice id and metrics.
     """
     store = store or _DEFAULT_STORE
+    want = json.loads(json.dumps(header))  # as a manifest reads back
+    out_dir = stage_dir(root, stage, version, "chunks")
     done: dict[int, dict] = {}
     for k in range(n_slices):
         mpath = manifest_path(root, stage, version, k)
         if store.exists(mpath):
-            done[k] = store.read_json(mpath)["metrics"]
+            m = store.read_json(mpath)
+            if all(m.get(key) == val for key, val in want.items()):
+                done[k] = m["metrics"]
+                continue
+            store.delete(mpath)
+        store.delete(posixpath.join(out_dir, f"slice_id={k}"), recursive=True)
     todo = [k for k in range(n_slices) if k not in done]
 
     if todo:
         t0 = time.monotonic()
-        out_dir = stage_dir(root, stage, version, "chunks")
         (
             build(todo).write.mode("overwrite")
             .option("compression", "none")  # our codecs own compression
@@ -129,10 +135,10 @@ def commit_slices(
                               int(header["chunk_rows"]), todo)
         for k in todo:
             metrics[k]["elapsed_s"] = round(elapsed_s / len(todo), 3)
-            atomic_write_json(manifest_path(root, stage, version, k), {
+            store.write_json_atomic(manifest_path(root, stage, version, k), {
                 **header, "stage": stage, "version": version, "slice": k,
                 "slice_of": n_slices, "metrics": metrics[k],
-            }, store=store)
+            })
         done.update(metrics)
     return [SliceResult(k, k not in todo, done[k]) for k in range(n_slices)]
 
@@ -160,7 +166,7 @@ def encode_run(
     encoded in ONE scan of the input: a ``__slice`` column is derived,
     completed slices are filtered out, and the chunk table is committed
     by :func:`commit_slices`. Resume = skip slices whose manifest
-    exists; a 100 TB input is never re-read once per slice. On a real
+    records this input; a 100 TB input is never re-read once per slice. On a real
     cluster a slice is thousands of tasks; slice granularity bounds
     re-work after a failure without driver-side bookkeeping per task.
 

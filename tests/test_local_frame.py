@@ -10,7 +10,6 @@ import os
 import time
 
 from conftest import executed_plan
-from parquet_producers_spark.filestore import LocalStore
 from parquet_producers_spark.operators.produce import (
     Stage,
     empty_state,
@@ -96,8 +95,8 @@ STAGE = Stage("words", ["doc"], ["word"], ["n"], _split,
 
 
 def test_empty_state_and_empty_marker_tables_are_local(spark, tmp_path):
-    """The first wave reconciles against empty_state, and a stage whose
-    table is an empty marker reads back through Pipeline._table: both
+    """The first wave reconciles against empty_state, and a stage table
+    a delete wave left empty reads back through Pipeline._table: both
     are local relations, and the first wave's content plans no join."""
     updates = spark.createDataFrame([("Add", 1, "a")],
                                     "type string, doc int, text string")
@@ -110,14 +109,14 @@ def test_empty_state_and_empty_marker_tables_are_local(spark, tmp_path):
     assert "Join" not in executed_plan(new_content)
 
     root = str(tmp_path / "dag")
-    path = stage_dir(root, "words", 1, "content")
-    LocalStore().write_json_atomic(
-        path + "._empty.json",
-        {"schema_ddl": "word string, doc int, n decimal(9,2)"})
-    table = Pipeline(spark, root)._table("words", 1, "content")
+    p = Pipeline(spark, root).add(STAGE)
+    p.update({"words": updates})
+    v = p.update({"words": spark.createDataFrame(
+        [("Delete", 1, None)], "type string, doc int, text string")})
+    assert not os.path.exists(stage_dir(root, "words", v, "content"))
+    table = p._table("words", v, "content")
     _assert_local(table)
-    assert table.schema.simpleString() == (
-        "struct<word:string,doc:int,n:decimal(9,2)>")
+    assert table.schema.simpleString() == "struct<word:string,doc:int,n:int>"
 
 
 def test_no_module_builds_a_frame_from_a_python_list():

@@ -103,3 +103,26 @@ def test_encode_run_lets_aqe_size_the_range_exchange(spark, tmp_path,
     fixed = executed_plan(encode_partitions(
         src, sort_cols=["repo", "path"], partitions=6))
     assert "REPARTITION_BY_NUM" in fixed and ", 6)" in fixed
+
+
+def test_resume_rebuilds_slices_of_another_input(spark, tmp_path):
+    """A slice is resumed only when its manifest records this input: a
+    second run at the same version over another input rebuilds every
+    slice, including one the new input leaves empty, and decodes
+    exactly the new input."""
+    root = str(tmp_path)
+
+    def run(ids, fingerprint):
+        df = spark.createDataFrame(
+            [(i, f"v{i}") for i in ids], "id int, v string").coalesce(1)
+        return encode_run(spark, df, root, "code", version=1,
+                          sort_cols=["id"], n_slices=4,
+                          input_fingerprint=fingerprint)
+
+    run(range(8), "tbl@s1")
+    res = run([100, 101], "tbl@s2")
+    assert not any(r.skipped for r in res)
+    assert sum(r.metrics["rows"] for r in res) == 2
+    assert any(r.metrics["rows"] == 0 for r in res)  # a slice left empty
+    got = decode_chunks(read_chunks(spark, root, "code", 1)).collect()
+    assert sorted((r.id, r.v) for r in got) == [(100, "v100"), (101, "v101")]

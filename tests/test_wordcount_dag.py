@@ -29,9 +29,8 @@ def _count_words(key, pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame({"cnt": [len(pdf)], "w": [key[0]]})
 
 
-@pytest.fixture
-def pipeline(spark, tmp_path):
-    p = Pipeline(spark, str(tmp_path))
+def _wordcount(spark, root):
+    p = Pipeline(spark, root)
     p.add(Stage("phrases", ["src_id"], ["id"], ["text"], _identity,
                 "id int, text string"))
     p.add(Stage("books", ["src_id"], ["id"], ["text"], _identity,
@@ -41,6 +40,11 @@ def pipeline(spark, tmp_path):
     p.add(Stage("word_counts", ["word"], ["cnt"], ["w"], _count_words,
                 "cnt int, w string"), sources=["ids_by_word"])
     return p
+
+
+@pytest.fixture
+def pipeline(spark, tmp_path):
+    return _wordcount(spark, str(tmp_path))
 
 
 def _rows(df, order):
@@ -344,11 +348,11 @@ def test_validate_runs_before_any_write(spark, tmp_path):
 
 def test_independent_txn_crash_not_visible_through_other_manifest(
         spark, tmp_path):
-    """Two INDEPENDENT single-stage transactions can both produce v=1.
-    A crash in the second one after its tables hit disk (with _SUCCESS)
-    but before its commit point must stay invisible — the first
-    transaction's v=1 manifest must not vouch for it. And a successful
-    retry must not un-commit the first stage (stage lists merge)."""
+    """Two INDEPENDENT single-stage transactions take consecutive
+    versions. A crash in the second one after its tables hit disk but
+    before its commit point must stay invisible — the first
+    transaction's manifest must not vouch for it. And a successful
+    retry must not un-commit the first stage: its head carries a on."""
 
     def boom(key, pdf):
         raise RuntimeError("exploded")
@@ -373,37 +377,37 @@ def test_independent_txn_crash_not_visible_through_other_manifest(
     stage_b, upd = p.nodes["b"].stage, feed("world")
     content, mappings, updates_out = update_stage(
         stage_b, *empty_state(spark, stage_b, upd), upd)
-    p._write("b", 1, "content", content)
-    p._write("b", 1, "mappings", mappings)
-    p._write("b", 1, "updates", updates_out)
-    # all three tables exist with _SUCCESS, a's v=1 manifest exists —
-    # but b is not IN it, so b stays uncommitted
+    # at the version b's transaction takes: the newest manifest + 1
+    p._write("b", 2, "content", content)
+    p._write("b", 2, "mappings", mappings)
+    p._write("b", 2, "updates", updates_out)
+    # all three tables exist, a's v=1 manifest exists — but no manifest
+    # names b, so b stays uncommitted
     assert p.version("b") == 0
     assert p.version("a") == 1
 
-    # the re-run commits b at v=1 by MERGING into the manifest — and a
-    # stays committed
-    v = p.update({"b": feed("world")}, based_on=0)
-    assert v == 1
-    assert p.version("b") == 1 and p.version("a") == 1
+    # the re-run takes the same number and commits b at v=2 — and a
+    # stays committed at v=1
+    v = p.update({"b": feed("world")})
+    assert v == 2
+    assert p.version("b") == 2 and p.version("a") == 1
 
-    # write-once protocol: each transaction owns its own v=1.<txnid>
-    # manifest — committing b never rewrote (so never momentarily
-    # removed) a's manifest
+    # write-once protocol: one manifest per version — committing b
+    # never rewrote (so never momentarily removed) a's manifest
     import os
 
-    txn_files = sorted(os.listdir(str(tmp_path / "_txn")))
-    assert len(txn_files) == 2 and all(
-        f.startswith("v=1.") and f.endswith(".json") for f in txn_files)
+    assert sorted(os.listdir(str(tmp_path / "_txn"))) == [
+        "v=1.json", "v=2.json"]
 
 
 def test_empty_table_deletes_blob(spark, tmp_path):
     """Reference IPersistentStreams.cs:14-17: uploading EMPTY content
     deletes the blob — an absent blob and an empty stream are the same
     thing to readers. A wave that deletes every source row must leave
-    the stage's v=2 tables as ABSENT dirs (plus schema markers), with
-    version() advanced and content() a typed empty frame; a later
-    re-add wave resumes normally."""
+    the stage's v=2 tables as ABSENT dirs, recorded as empty (with their
+    schema) in the v=2 manifest, with version() advanced and content() a
+    typed empty frame; a later re-add wave resumes normally."""
+    import json
     import os
 
     from parquet_producers_spark.storage import stage_dir
@@ -422,7 +426,12 @@ def test_empty_table_deletes_blob(spark, tmp_path):
     for t in ("content", "mappings"):
         d = stage_dir(str(tmp_path / "dag"), "words", v2, t)
         assert not os.path.exists(d), f"{t} dir should be deleted"
-        assert os.path.exists(d + "._empty.json")
+
+    def manifest(v):
+        with open(str(tmp_path / "dag" / "_txn" / f"v={v}.json")) as f:
+            return json.load(f)
+
+    assert sorted(manifest(v2)["empty"]["words"]) == ["content", "mappings"]
     empty = p.content("words", v2)
     assert empty.count() == 0
     assert empty.columns == ["word", "src_id", "val_id"]
@@ -432,6 +441,105 @@ def test_empty_table_deletes_blob(spark, tmp_path):
     assert p.version("words") == v3 == 3
     got = [tuple(r) for r in p.content("words", v3).collect()]
     assert got == [("gamma", 2, 2)]
-    # the once-empty marker never shadows the non-empty v3
-    d3 = stage_dir(str(tmp_path / "dag"), "words", v3, "content")
-    assert os.path.exists(d3) and not os.path.exists(d3 + "._empty.json")
+    # v2's empty tables never shadow the non-empty v3
+    assert os.path.exists(stage_dir(str(tmp_path / "dag"), "words", v3,
+                                    "content"))
+    assert manifest(v3)["empty"] == {}
+
+
+def _feed(spark, rows):
+    return spark.createDataFrame(rows, "type string, src_id int, text string")
+
+
+def _tables(p, name, v):
+    return {t: sorted((tuple(r) for r in p._table(name, v, t).collect()),
+                      key=repr)
+            for t in ("content", "mappings", "updates")}
+
+
+def test_waves_on_either_feeder_take_one_dag_version(spark, tmp_path):
+    """Waves fed by both roots, then phrases only, then books only take
+    DAG versions 1, 2, 3. Wave 3 writes ids_by_word at 3 — never over its
+    committed v=2 — and the result equals a from-scratch run over the
+    same final inputs."""
+    p = _wordcount(spark, str(tmp_path / "dag"))
+    assert p.update({
+        "phrases": _feed(spark, [("Add", 1, "the fox"), ("Add", 2, "a dog")]),
+        "books": _feed(spark, [("Add", 1, "the end")]),
+    }) == 1
+    assert p.update({"phrases": _feed(spark, [("Delete", 2, None)])}) == 2
+    at_v2 = _tables(p, "ids_by_word", 2)
+
+    assert p.update({"books": _feed(spark, [("Add", 2, "fox hunt")])}) == 3
+    assert {s: p.version(s) for s in p.nodes} == {
+        "phrases": 2, "books": 3, "ids_by_word": 3, "word_counts": 3}
+    assert _tables(p, "ids_by_word", 2) == at_v2
+
+    fresh = _wordcount(spark, str(tmp_path / "fresh"))
+    fresh.update({
+        "phrases": _feed(spark, [("Add", 1, "the fox")]),
+        "books": _feed(spark, [("Add", 1, "the end"), ("Add", 2, "fox hunt")]),
+    })
+    for name, cols in (("ids_by_word", ["word", "id", "val_id"]),
+                       ("word_counts", ["cnt", "w"])):
+        assert _rows(p.content(name, 3).select(*cols), cols) == _rows(
+            fresh.content(name, 1).select(*cols), cols)
+
+
+def test_wave_on_one_feeder_of_a_never_written_pair(spark, pipeline):
+    """A wave rooted at phrases while books was never written commits;
+    books contributes nothing, so ids_by_word holds phrases' words."""
+    p = pipeline
+    assert p.update({"phrases": _feed(spark, [("Add", 1, "red fox")])}) == 1
+    assert p.version("books") == 0
+    assert _rows(p.content("ids_by_word").select("word", "id"),
+                 ["word"]) == [("fox", 1), ("red", 1)]
+
+
+def test_commit_refuses_a_version_committed_mid_wave(spark, tmp_path,
+                                                     monkeypatch):
+    """Another writer commits v=2 while this transaction runs: the
+    commit raises and leaves that manifest byte-identical."""
+    import os
+
+    p = Pipeline(spark, str(tmp_path))
+    p.add(Stage("phrases", ["src_id"], ["id"], ["text"], _identity,
+                "id int, text string"))
+    p.update({"phrases": _feed(spark, [("Add", 1, "one")])})
+
+    theirs = str(tmp_path / "_txn" / "v=2.json")
+    planted = b'{"version": 2, "head": {"phrases": 2}, "empty": {}}'
+    write = p._write
+
+    def racing_write(*args, **kwargs):
+        if not os.path.exists(theirs):
+            with open(theirs, "wb") as f:
+                f.write(planted)
+        return write(*args, **kwargs)
+
+    monkeypatch.setattr(p, "_write", racing_write)
+    with pytest.raises(RuntimeError, match="another writer"):
+        p.update({"phrases": _feed(spark, [("Add", 2, "two")])})
+    with open(theirs, "rb") as f:
+        assert f.read() == planted
+
+
+def test_root_with_per_transaction_manifests_is_refused(spark, tmp_path):
+    """A root whose _txn holds manifests numbered per transaction
+    (v=N.<txnid>.json) is refused, not read as empty and bootstrapped
+    over its committed dirs."""
+    import os
+    import re
+
+    root = str(tmp_path)
+    os.makedirs(os.path.join(root, "_txn"))
+    with open(os.path.join(root, "_txn", "v=1.0123456789ab.json"), "w") as f:
+        f.write('{"version": 1, "based_on": 0, "stages": ["phrases"]}')
+    p = Pipeline(spark, root)
+    p.add(Stage("phrases", ["src_id"], ["id"], ["text"], _identity,
+                "id int, text string"))
+    with pytest.raises(ValueError, match=re.escape(root)):
+        p.version("phrases")
+    with pytest.raises(ValueError, match=re.escape(root)):
+        p.update({"phrases": _feed(spark, [("Add", 1, "one")])})
+    assert not os.path.exists(os.path.join(root, "phrases"))
